@@ -483,6 +483,22 @@ object Dedup {
 
   // ----------------------------------------------------------- clustering
 
+  /** The convergence sum of one [[components]] round, read from its
+    * observed metric. Strict: defaulting anything but the empty-graph
+    * null sum to ZERO would fake instant convergence and ship wrong
+    * labels, so a missing key (a renamed metric) or a mis-typed value
+    * fails loudly instead. */
+  private[ext] def convergenceSum(metric: Option[Any]): java.math.BigDecimal =
+    metric match {
+      case Some(d: java.math.BigDecimal) => d
+      case Some(d: scala.math.BigDecimal) => d.bigDecimal
+      case Some(null) => java.math.BigDecimal.ZERO
+      case Some(other) => throw new IllegalStateException(
+        s"convergence metric has unexpected type ${other.getClass}")
+      case None => throw new IllegalStateException(
+        "convergence metric missing from the round's observation")
+    }
+
   /** Connected components over an undirected pair graph — the step that
     * turns verified near-dup PAIRS into duplicate CLUSTERS, so a pipeline
     * can keep exactly one representative per transitive group (A~B, B~C ⇒
@@ -548,18 +564,7 @@ object Dedup {
       val obs = org.apache.spark.sql.Observation()
       p.observe(obs, sum(col("label").cast("decimal(38,0)")).as("s"))
         .write.format("noop").mode("overwrite").save()
-      // strict on the metric's runtime type: silently defaulting a
-      // mis-typed value to ZERO would fake instant convergence and
-      // ship wrong labels — fail loudly instead. A genuinely absent
-      // sum (empty graph) is the old head().get(0) == null case.
-      val s = obs.get.get("s") match {
-        case Some(d: java.math.BigDecimal) => d
-        case Some(d: scala.math.BigDecimal) => d.bigDecimal
-        case None | Some(null) => java.math.BigDecimal.ZERO
-        case Some(other) => throw new IllegalStateException(
-          s"convergence metric has unexpected type ${other.getClass}")
-      }
-      (p, s)
+      (p, convergenceSum(obs.get.get("s")))
     }
     // round 0 folded into init: label = min(id, min neighbor). Same
     // groupBy shuffle the plain identity-init would pay for its distinct,

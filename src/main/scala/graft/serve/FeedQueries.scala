@@ -16,11 +16,17 @@ import org.apache.spark.sql.functions._
   *   LIMIT :limit OFFSET :offset
   * }}}
   *
-  * The reference executes this as two hops (Postgres IN-list then Cassandra
-  * multi-partition scan, main.py:149-168). Here it is a single broadcast
-  * left-semi equi-join: the followee list is tiny (one user's follow set) so
-  * Catalyst broadcasts it — the Spark analog of the reference's client-side
-  * IN-list, with the `user_id` predicate pushed into the parquet scan.
+  * The reference executes this as two hops (reference: main.py:149-168):
+  * a Postgres query fetches the reader's followee ids as a client-side
+  * IN-list, then one Cassandra read fetches only those users' partitions.
+  * [[followeesOf]] is the first hop — it resolves the follow set once, on
+  * the driver, into a local relation. The materialized read
+  * ([[feedPageMaterialized]]) is the second: `user_bucket IN (buckets)`
+  * prunes the bucket directories and `user_id IN (ids)` is pushed into the
+  * parquet scan, so a page is one pruned scan plus top-k — no join, no
+  * shuffle. Over the unmaterialized activity stream ([[feedPage]],
+  * [[feedPageAfter]]) the same local list is the build side of a
+  * broadcast left-semi join.
   *
   * Deviation from the reference, on purpose (SURVEY.md §2.10 item 2): CQL has
   * no OFFSET and no defined cross-partition order for IN queries — the
@@ -37,13 +43,18 @@ import org.apache.spark.sql.functions._
 object FeedQueries {
 
   /** Followee set of `uid` — live follow edges only (creates; the reference
-    * never materializes unfollows, SURVEY.md §2.10 item 1).
+    * never materializes unfollows, SURVEY.md §2.10 item 1) — as the
+    * reference's IN-list: collected once, null ids dropped (they match no
+    * activity), re-follows deduplicated on the driver, and returned as a
+    * local `user_id` relation, so downstream reads of it run no Spark job.
     * (reference: main.py:149-154, S2) */
-  def followeesOf(followers: DataFrame, uid: String): DataFrame =
-    followers
-      .where(col("follower_id") === uid)
+  def followeesOf(followers: DataFrame, uid: String): DataFrame = {
+    val ids = followers
+      .where(col("follower_id") === uid && col("following_id").isNotNull)
       .select(col("following_id").as("user_id"))
-      .distinct()
+    followers.sparkSession.createDataFrame(
+      java.util.Arrays.asList(ids.collect().distinct: _*), ids.schema)
+  }
 
   /** The flagship feed page: activities of the users `uid` follows, newest
     * first. (reference: main.py:136-189, J1+T1+T2) */
@@ -149,19 +160,24 @@ object FeedQueries {
         col("user_id"), col("activity_type"), col("event_time_iso"),
         col("target_id"), col("target_type"))).as("payload"))
 
-  /** Feed page over the materialized activity table (K1 read path): prune
-    * to the followees' hash-bucket directories first — at 100 TB this is
-    * the difference between scanning |followees|/N of the table and all of
-    * it — then the same broadcast semi-join + top-k. */
+  /** Feed page over the materialized activity table (K1 read path), the
+    * reference's second hop (main.py:155-168): prune to the followees'
+    * hash-bucket directories — at 100 TB the difference between scanning
+    * |followees|/N of the table and all of it — and push the followee
+    * IN-list into the same scan, where the clustered files let parquet
+    * skip row groups. The page is that one pruned scan plus top-k: one
+    * Spark job, no exchange, no join. `followees` is [[followeesOf]]'s
+    * local relation, so reading its ids back runs no job; an empty follow
+    * set is an empty IN-list and an empty page. */
   def feedPageMaterialized(
       activityTable: DataFrame,
       followeeBuckets: Seq[Int],
       followees: DataFrame,
       limit: Int,
       offset: Int = 0): DataFrame = {
+    val ids = followees.select("user_id").collect().map(_.get(0)).toSeq
     val page = activityTable
-      .where(col("user_bucket").isin(followeeBuckets: _*))
-      .join(broadcast(followees), Seq("user_id"), "left_semi")
+      .where(col("user_bucket").isin(followeeBuckets: _*) && col("user_id").isin(ids: _*))
       .orderBy(col("event_timestamp").desc, col("activity_pk").desc)
     (if (offset > 0) page.offset(offset) else page).limit(limit)
   }

@@ -81,16 +81,17 @@ object ActivitySink {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Bucket ids of a (small) keyed DataFrame of `user_id` — used to prune
-    * the feed scan to the followees' partitions. The collect is the API-edge
-    * equivalent of the reference's client-side IN-list (main.py:149-154):
-    * at most `buckets` small ints, never data-sized. */
+  /** Bucket ids of a small keyed DataFrame of `user_id` (a followee
+    * IN-list) — used to prune the feed scan to the followees' partitions.
+    * One small int per key is collected and deduplicated on the driver, so
+    * over [[graft.serve.FeedQueries.followeesOf]]'s local relation this
+    * runs no Spark job (reference: main.py:149-154). */
   def bucketsOf(keys: DataFrame, buckets: Int = defaultBuckets): Seq[Int] =
     keys
-      .select(pmod(hash(col("user_id")), lit(buckets)).as("b"))
-      .distinct()
+      .select(pmod(hash(col("user_id")), lit(buckets)))
       .collect()
       .map(_.getInt(0))
+      .distinct
       .toSeq
 
   // One materialization per fixture dir per JVM; the table itself is

@@ -13,7 +13,11 @@ import org.apache.spark.sql.functions._
 private[sinks] object BucketedSink {
 
   /** Write `df` partitioned into `bucketCol = pmod(hash(key), buckets)`
-    * directories, each file sorted by `sortCols`. */
+    * directories, each file sorted by `sortCols`. The sort leads with
+    * `bucketCol`: the partitioned writer requires its input ordered by the
+    * partition column, and if the given ordering does not start with it
+    * the writer plans its own `Sort(bucketCol)` and the optimizer drops
+    * the clustering sort beneath it — every file would lose its order. */
   def write(
       df: DataFrame,
       path: String,
@@ -24,7 +28,7 @@ private[sinks] object BucketedSink {
       mode: String): Unit =
     df.withColumn(bucketCol, pmod(hash(key), lit(buckets)))
       .repartition(col(bucketCol))
-      .sortWithinPartitions(sortCols: _*)
+      .sortWithinPartitions(col(bucketCol) +: sortCols: _*)
       .write
       .mode(mode)
       .partitionBy(bucketCol)

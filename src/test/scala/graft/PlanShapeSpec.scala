@@ -1,6 +1,8 @@
 package graft
 
 import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** Plan-shape regression tests: the scale properties PLANS.md claims are
   * asserted against the actual physical plans, so a refactor that
@@ -69,6 +71,76 @@ class PlanShapeSpec extends SparkSuite {
     val p = plan("feed_page")
     assert(p.contains("LeftSemi"))
     assert(p.contains("BroadcastExchange"))
+  }
+
+  /** A K1 table written from the fixture as the serving tier reads it,
+    * its follow edges, and its busiest follower. Written here rather than
+    * taken from `ActivitySink.materialized`, whose read-back is persisted
+    * (a page over it scans the cache, not the files) and whose first build
+    * in the JVM ActivitySinkSpec observes. */
+  private lazy val served = {
+    val path = tmpDir("graft_plan_shape") + "/activity"
+    val (l, c, s, f) = graft.sources.CdcSource.all(spark, d)
+    graft.sinks.ActivitySink.write(graft.ingest.Pipeline.activity(l, c, s, f), path)
+    val table = graft.sinks.ActivitySink.read(spark, path)
+    val edges = table.where(col("activity_type") === "FOLLOW_USER")
+      .select(col("user_id").as("follower_id"), col("target_id").as("following_id"))
+    val reader = edges.groupBy("follower_id").count()
+      .orderBy(col("count").desc, col("follower_id")).head().getString(0)
+    (table, edges, reader)
+  }
+
+  /** One feed page as a client is served it: followee IN-list, its
+    * buckets, the materialized page, rendered. */
+  private def servePage(table: DataFrame, edges: DataFrame, reader: String): DataFrame = {
+    val followees = graft.serve.FeedQueries.followeesOf(edges, reader)
+    graft.serve.FeedQueries.renderJson(graft.serve.FeedQueries.feedPageMaterialized(
+      table, graft.sinks.ActivitySink.bucketsOf(followees), followees, limit = 20))
+  }
+
+  test("feed_page_materialized: one pruned scan plus top-k, no exchange or join") {
+    val (table, edges, reader) = served
+    val p = servePage(table, edges, reader).queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    assert(!p.contains("Exchange"))
+    assert(!p.contains("Join"))
+    assert(p.contains("TakeOrderedAndProject"))
+    assert(nodeCount(p, "Scan parquet") === 1)
+    // the followee IN-list reaches the file scan (InSet is pushed as In)
+    assert("""PushedFilters: \[[^\n]*In\(user_id,""".r.findFirstIn(p).isDefined, p)
+    assert("""PartitionFilters: \[[^\n]*user_bucket""".r.findFirstIn(p).isDefined, p)
+  }
+
+  test("feed_page_materialized: one served page is exactly two Spark jobs") {
+    val (table, edges, reader) = served
+    val sc = spark.sparkContext
+    val (page, fence) = ("plan-shape-page", "plan-shape-fence")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    // listener events arrive in post order: once the fence job's start is
+    // seen, every job the page started has been counted
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`page`) => jobs.incrementAndGet()
+          case Some(`fence`) => fenced.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(page, page)
+      val rows = servePage(table, edges, reader).collect()
+      sc.setJobGroup(fence, fence)
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenced.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      assert(rows.nonEmpty)
+      // the follow-set collect, then the page scan
+      assert(jobs.get === 2)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("events_session_attribution: range join plans as equi-join, not BNL") {

@@ -114,6 +114,17 @@ class DedupSpec extends SparkSuite {
     assert(Dedup.components(empty).count() === 0L)
   }
 
+  test("components: the convergence metric reads strictly, branch by branch") {
+    val d = new java.math.BigDecimal("42")
+    assert(Dedup.convergenceSum(Some(d)) === d)
+    assert(Dedup.convergenceSum(Some(scala.math.BigDecimal(42))) === d)
+    // the empty graph's null sum is the only value that reads as ZERO
+    assert(Dedup.convergenceSum(Some(null)) === java.math.BigDecimal.ZERO)
+    // a missing key must not fake convergence on round 1
+    intercept[IllegalStateException](Dedup.convergenceSum(None))
+    intercept[IllegalStateException](Dedup.convergenceSum(Some(42L)))
+  }
+
   test("nearDupSurvivors keeps one representative per transitive cluster") {
     // docs 1, 2, 4 form one cluster at threshold 0.5 (1~2 near, 1~4 exact
     // modulo case); doc 3 is unrelated → survivors are 1 (min id) and 3

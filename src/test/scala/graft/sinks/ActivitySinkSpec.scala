@@ -4,6 +4,8 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import graft.SparkSuite
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** K1 layout + A2 observability: the materialized activity table and the
@@ -35,7 +37,6 @@ class ActivitySinkSpec extends SparkSuite {
     val table = ActivitySink.materialized(spark, "/root/testdata/sf0.001")
     assert(table.columns.contains("user_bucket"))
     // bucket column is consistent with the partitioning function
-    import org.apache.spark.sql.functions._
     val bad = table.where(
       col("user_bucket") =!= pmod(hash(col("user_id")), lit(ActivitySink.defaultBuckets)))
     assert(bad.count() === 0)
@@ -48,8 +49,43 @@ class ActivitySinkSpec extends SparkSuite {
     assert(covered.count() === 0)
   }
 
+  /** Data files under `path`, and those whose rows, read back in file
+    * order, break the clustering order (user_id, event_timestamp desc,
+    * activity_pk desc). Read order is `monotonically_increasing_id` taken
+    * straight off the scan; ties in the sort key are in order. */
+  private def clusteringBreaks(path: String): (Long, Set[String]) = {
+    val rows = spark.read.parquet(path).select(
+      input_file_name().as("file"), monotonically_increasing_id().as("pos"),
+      col("user_id"), col("event_timestamp").as("ts"), col("activity_pk").as("pk"))
+    val prev = Window.partitionBy("file").orderBy("pos")
+    val inOrder =
+      lag("user_id", 1).over(prev) < col("user_id") ||
+        (lag("user_id", 1).over(prev) === col("user_id") &&
+          (lag("ts", 1).over(prev) > col("ts") ||
+            (lag("ts", 1).over(prev) === col("ts") && lag("pk", 1).over(prev) >= col("pk"))))
+    val breaks = rows
+      .withColumn("in_order", coalesce(inOrder, lit(true)))
+      .where(!col("in_order"))
+      .select("file").distinct().collect().map(_.getString(0)).toSet
+    (rows.select("file").distinct().count(), breaks)
+  }
+
+  test("appended and compacted files keep the clustering order") {
+    val path = tmpDir("graft_clustering") + "/activity"
+    val activity = ActivitySink.materialized(spark, "/root/testdata/sf0.001")
+      .drop("user_bucket")
+    ActivitySink.appendBatch(activity, path)
+    val (appended, appendBreaks) = clusteringBreaks(path)
+    assert(appended > 1)
+    assert(appendBreaks.isEmpty,
+      s"${appendBreaks.size} of $appended appended files out of clustering order")
+    ActivitySink.compact(spark, path)
+    val (compacted, compactBreaks) = clusteringBreaks(path)
+    assert(compactBreaks.isEmpty,
+      s"${compactBreaks.size} of $compacted compacted files out of clustering order")
+  }
+
   test("compact restores one-file-per-bucket and GCs batch markers") {
-    import org.apache.spark.sql.functions._
     val path = tmpDir("graft_compact") + "/activity"
     val activity = ActivitySink.materialized(spark, "/root/testdata/sf0.001")
       .drop("user_bucket")
