@@ -16,40 +16,60 @@ import org.apache.spark.sql.SparkSession
   * the per-query timings.
   */
 object Bench {
-  /** Queries whose serve path READS a warm-up-built artifact (index or
-    * ArtifactMemo) — annotated in the bench JSON (ADVICE r10) so a
-    * reader knows which per-query rows measure probing/serving rather
-    * than the full build; the artifact_builds map carries the build
-    * seconds. GraftSpec pins every name here to an existing registry
-    * entry so a rename can't silently orphan the annotation. */
-  val memoServed: Seq[String] = Seq(
-    // persisted index sinks
-    "feed_page_materialized", "ann_index_cells", "sim_topk_ivf_indexed",
-    "sim_topk_ivf_filtered_indexed", "dedup_incremental_indexed",
-    "text_index_stats", "bm25_topk_indexed", "hybrid_topk_rrf_indexed",
-    "sim_topk_pq_indexed",
-    // knn components + cell-components memos
-    "knn_clusters", "knn_cluster_stats",
-    // lexical-run memo
-    "hybrid_topk_rrf",
-    // near-dup / semantic components memos
-    "dedup_clusters", "dedup_cluster_stats", "dedup_near_survivors",
-    "dedup_near_survivors_quality", "dedup_soft", "dedup_summary",
-    "semantic_dedup", "semantic_dedup_quality",
-    // BPE learner memo
-    "bpe_vocab", "bpe_tokenize", "bpe_compression", "pack_windows_bpe",
-    // DSIR weights memo
-    "dsir_weights", "dsir_resample", "dsir_selection_audit",
-    // PCA fit memo
-    "embed_pca_components", "embed_pca_project",
-    // z-clustered orders layout
-    "orders_zorder_pruned_read",
-    // streamed media-embedding table
-    "media_embedding_materialized", "media_embedding_topk_served",
-    // ANN over the served media table
-    "media_embedding_topk_ann",
-    // streamed cleaned-web-corpus table
-    "web_pipeline_materialized").sorted
+  /** The build-once artifacts ([[graft.util.ArtifactMemo]] entries) the
+    * bench harnesses build for the bench SF outside the timed region:
+    * they are one-time write-path costs, so the timed queries measure
+    * SERVING them, not which consumer happened to run first. Labels are
+    * the `artifact_builds` keys of the bench JSON. Where a query would
+    * fold serve-path work into the build, the entry forces only the
+    * memo (`knnCellComponentPaths`, `count()` over a memo read). */
+  val artifacts: Seq[(String, (SparkSession, String) => Any)] = {
+    import graft.ext.{Bpe, Dedup, Dsir, Layout, Pca, Similarity}
+    import graft.sinks._
+    Seq(
+      "activity-sink" -> (ActivitySink.materialized(_, _)),
+      "ann-index" -> (AnnIndex.materialized(_, _)),
+      "dedup-index" -> (DedupIndex.materialized(_, _)),
+      "text-index" -> (TextIndex.materialized(_, _)),
+      "pq-index" -> (PqIndex.materialized(_, _)),
+      "media-sink" -> (MediaSink.materialized(_, _)),
+      "ann-media" -> (MediaSink.annIndexed(_, _)),
+      "web-sink" -> (WebSink.materialized(_, _)),
+      "web-sink-main" -> (WebSink.materializedMain(_, _)),
+      "web-sink-fetch" -> (WebSink.materializedFetch(_, _)),
+      "web-sink-recrawl" -> (WebSink.materializedRecrawl(_, _)),
+      "knn-components" -> (Similarity.knnClustersAt(_, _).count()),
+      "knn-cell-components" -> (Similarity.knnCellComponentPaths(_, _)),
+      "lexical-run" -> (TextIndex.standardLexRun(_, _).count()),
+      "neardup-components" -> (Dedup.nearDupComponentsAt(_, _).count()),
+      "semantic-components" -> (Dedup.semanticComponentsAt(_, _).count()),
+      "bpe-learner" -> (Bpe.learnAt(_, _)),
+      "dsir-weights" -> (Dsir.importanceWeightsAt(_, _).count()),
+      "pca-fit" -> (Pca.componentsAt(_, _).count()),
+      "zorder-layout" -> (Layout.clusteredOrdersAt(_, _)),
+      "hilbert-layout" -> (Layout.clusteredOrdersHilbertAt(_, _)),
+      "drift-layout" -> (LayoutSink.driftedOrdersLayoutAt(_, _)))
+  }
+
+  /** Build every [[artifacts]] entry for `sfDir`, each timed and
+    * individually guarded (an unguarded build once killed the run before
+    * any timing printed; a failed one now only fails its dependent
+    * queries). Returns (label, build seconds), -1 for a failed build: the
+    * build IS the dominant cost of several memo-served queries, so its
+    * seconds stay diffable. */
+  def warmArtifacts(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
+    val builds = artifacts.map { case (label, build) =>
+      val t0 = System.nanoTime()
+      try { build(spark, sfDir); label -> (System.nanoTime() - t0) / 1e9 }
+      catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] warm-up $label failed: ${e.getMessage}")
+          label -> -1.0
+      }
+    }
+    graft.ext.Dedup.releaseAll()
+    builds
+  }
 
   /** Extract the per-query map from a committed bench_queries.json.
     * Regex-parsed — no JSON lib on the classpath, and the format is this
@@ -129,78 +149,7 @@ object Bench {
 
     val names = SparkEntry.queries.keys.toSeq.sorted
     names.foreach(force(_, "/root/testdata/sf0.001")) // warm-up, untimed
-    // build the K1 activity table and the ANN index for the bench SF
-    // outside the timed region: both are one-time write-path costs, not
-    // serve-path costs (the indexed probe query measures PROBING, which
-    // is the point of a persisted index).
-    // Each warm-up is individually guarded (VERDICT r8 item 2): in r8 an
-    // unguarded materialized() escaped, killed the run before any timing
-    // printed, and zeroed the round's entire perf signal. A failed warm-up
-    // now only means its dependent queries fail inside force() (-1.0,
-    // excluded from the total) while everything else still reports.
-    // Each warm-up build is individually TIMED (VERDICT r10 item 1): the
-    // per-query rows measure the serve path, but the artifact build IS the
-    // dominant cost for several memo-served queries (bpe_vocab,
-    // dsir_weights, *_clusters), so its seconds must stay diffable in the
-    // bench JSON rather than vanish into stderr. Failed builds record -1.
-    val artifactBuilds = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    def warmUp(label: String)(body: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      try { body; artifactBuilds(label) = (System.nanoTime() - t0) / 1e9 }
-      catch {
-        case e: Throwable =>
-          artifactBuilds(label) = -1.0
-          System.err.println(s"[bench] warm-up $label failed: ${e.getMessage}")
-      }
-    }
-    warmUp("activity-sink")(graft.sinks.ActivitySink.materialized(spark, sfDir))
-    warmUp("ann-index")(graft.sinks.AnnIndex.materialized(spark, sfDir))
-    warmUp("dedup-index")(graft.sinks.DedupIndex.materialized(spark, sfDir))
-    warmUp("text-index")(graft.sinks.TextIndex.materialized(spark, sfDir))
-    warmUp("pq-index")(graft.sinks.PqIndex.materialized(spark, sfDir))
-    warmUp("media-sink")(graft.sinks.MediaSink.materialized(spark, sfDir))
-    warmUp("ann-media")(graft.sinks.MediaSink.annIndexed(spark, sfDir))
-    warmUp("web-sink")(graft.sinks.WebSink.materialized(spark, sfDir))
-    // the r17 served twins (web_lang_mix_served / web_funnel_served /
-    // web_pipeline_main_materialized) read the MAIN-content table —
-    // built here so they time serving, not the build
-    warmUp("web-sink-main")(
-      graft.sinks.WebSink.materializedMain(spark, sfDir))
-    // the r18 fetch logs feed the served crawl-decision queries
-    warmUp("web-sink-fetch")(
-      graft.sinks.WebSink.materializedFetch(spark, sfDir))
-    warmUp("web-sink-recrawl")(
-      graft.sinks.WebSink.materializedRecrawl(spark, sfDir))
-    // the round-10 shared-artifact memos are one-time build costs with
-    // the same write-path character as the indexes above: built here so
-    // the timed queries measure SERVING the shared artifact, not which
-    // consumer happened to run first. Their build seconds land in the
-    // JSON's "artifact_builds" map and the "value_with_builds" total.
-    warmUp("knn-components")(
-      graft.ext.Similarity.knnClustersAt(spark, sfDir).count())
-    // also populates the ivf_cell-side components memo (r11): the knn
-    // memo above is already built, so this times the cell-pairs
-    // verify + components loop that knn_cluster_stats serves from —
-    // the memo builds ONLY (not the query's histograms/sort, which the
-    // timed knn_cluster_stats row measures)
-    warmUp("knn-cell-components")(
-      graft.ext.Similarity.knnCellComponentPaths(spark, sfDir))
-    warmUp("lexical-run")(
-      graft.sinks.TextIndex.standardLexRun(spark, sfDir).count())
-    warmUp("neardup-components")(
-      graft.ext.Dedup.nearDupComponentsAt(spark, sfDir).count())
-    warmUp("semantic-components")(
-      graft.ext.Dedup.semanticComponentsAt(spark, sfDir).count())
-    warmUp("bpe-learner")(graft.ext.Bpe.learnAt(spark, sfDir))
-    warmUp("dsir-weights")(
-      graft.ext.Dsir.importanceWeightsAt(spark, sfDir).count())
-    warmUp("pca-fit")(graft.ext.Pca.componentsAt(spark, sfDir).count())
-    warmUp("zorder-layout")(graft.ext.Layout.clusteredOrdersAt(spark, sfDir))
-    warmUp("hilbert-layout")(
-      graft.ext.Layout.clusteredOrdersHilbertAt(spark, sfDir))
-    warmUp("drift-layout")(
-      graft.sinks.LayoutSink.driftedOrdersLayoutAt(spark, sfDir))
-    graft.ext.Dedup.releaseAll()
+    val artifactBuilds = warmArtifacts(spark, sfDir)
     // warm the bench SF's parquet bytes into the OS page cache so the
     // timed pass measures engine work, not which query first touches a
     // cold file (the VM reclaims page cache aggressively; cold-read
@@ -221,13 +170,8 @@ object Bench {
       finally walk.close()
     }
     warmDir(sfDir)
-    // the K1 activity table and ANN index live under java.io.tmpdir
-    warmDir(graft.util.DirKeys.tmpPath("activity", sfDir))
-    warmDir(graft.util.DirKeys.tmpPath("annindex", sfDir))
-    warmDir(graft.util.DirKeys.tmpPath("dedupindex", sfDir))
-    warmDir(graft.util.DirKeys.tmpPath("textindex", sfDir))
-    warmDir(graft.util.DirKeys.tmpPath("pqindex", sfDir))
-    warmDir(graft.util.DirKeys.tmpPath("mediasink", sfDir))
+    // and every artifact the memo built for it under java.io.tmpdir
+    graft.util.ArtifactMemo.dirsOf(sfDir).foreach(warmDir)
     // NOISE NORMALIZER (VERDICT r5 item 7): round-over-round totals moved
     // ±9-40% on identical untouched queries from ambient VM noise alone,
     // making cross-round comparison untrustworthy. The calibration
@@ -325,9 +269,18 @@ object Bench {
     // probes run BETWEEN query timings, so no per-query value includes
     // one; the existing keys are untouched.
     val segCal = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    // Queries whose timed run resolved an already-built memo entry: their
+    // rows measure probing/serving a warm-up-built artifact, not its
+    // build — the artifact_builds map carries the build seconds.
+    // The pass is sequential, so a before/after read of the hit counter
+    // is exact.
+    val memoServed = scala.collection.mutable.ArrayBuffer.empty[String]
     val firstPass = names.zipWithIndex.map { case (n, i) =>
       if (i % 50 == 0) segCal(i.toString) = calibrate()
-      n -> force(n, sfDir)
+      val hits0 = graft.util.ArtifactMemo.hits
+      val t = force(n, sfDir)
+      if (graft.util.ArtifactMemo.hits > hits0) memoServed += n
+      n -> t
     }
     segCal(names.length.toString) = calibrate()
     // Outlier re-measure, two triggers (min-of-2 on flagged queries only,
@@ -360,6 +313,9 @@ object Bench {
         if (t2 >= 0) math.min(t, t2) else t
       } else t)
     }
+    // re-measured values postdate their segment's probe: a trailing
+    // probe gives them a host-speed window of their own
+    val calAfterRemeasure = calibrate()
 
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -367,7 +323,7 @@ object Bench {
       .mkString("{", ",", "}")
     val ab = artifactBuilds.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val buildTotal = artifactBuilds.values.filter(_ >= 0).sum
+    val buildTotal = artifactBuilds.map(_._2).filter(_ >= 0).sum
     val total = results.map(_._2).filter(_ >= 0).sum
     // serve-path total PLUS the one-time artifact builds: the number a
     // build-path regression moves even when every serve-path row is flat
@@ -391,7 +347,7 @@ object Bench {
     val commonPrior = commonQ.map { case (n, _) => prior(n) }.sum
     val priorBuilds =
       priorText.map(parseMap(_, "artifact_builds")).getOrElse(Map.empty)
-    val commonB = artifactBuilds.toSeq.filter { case (n, t) =>
+    val commonB = artifactBuilds.filter { case (n, t) =>
       t >= 0 && priorBuilds.get(n).exists(_ >= 0) }
     val buildsNow = commonB.map(_._2).sum
     val buildsPrior = commonB.map { case (n, _) => priorBuilds(n) }.sum
@@ -413,7 +369,7 @@ object Bench {
     val sc = segCal.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val fileJson =
-      s"""{"queries":$qs,"outlier_first_timings":$rr,"artifact_builds":$ab,"artifact_builds_total":$buildTotal,$trend,"memo_served":${memoServed.map("\"" + _ + "\"").mkString("[", ",", "]")},"calibration_segments":$sc,"calibration_sec":$calibration,"calibration_workload":"4M-row parquet scan + broadcast join(97) + string-keyed agg, noop sink, median-of-3","metric":"total","value":$total,"value_with_builds":$totalWithBuilds,"total_calibrated":$totalCalibrated,"unit":"sec","sf":"$sfDir","n_queries":${results.size}}"""
+      s"""{"queries":$qs,"outlier_first_timings":$rr,"artifact_builds":$ab,"artifact_builds_total":$buildTotal,$trend,"memo_served":${memoServed.map("\"" + _ + "\"").mkString("[", ",", "]")},"calibration_segments":$sc,"calibration_after_remeasure_sec":$calAfterRemeasure,"calibration_sec":$calibration,"calibration_workload":"4M-row parquet scan + broadcast join(97) + string-keyed agg, noop sink, median-of-3","metric":"total","value":$total,"value_with_builds":$totalWithBuilds,"total_calibrated":$totalCalibrated,"unit":"sec","sf":"$sfDir","n_queries":${results.size}}"""
     val outFile = if (sfMismatch) sideFile else "bench_queries.json"
     java.nio.file.Files.write(
       java.nio.file.Paths.get(outFile),

@@ -41,37 +41,9 @@ object BenchSubset {
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    // same one-time write-path warm-ups Bench performs outside the timed
-    // region, so index-probing queries measure probing, not building
-    def warmUp(body: => Any): Unit =
-      try body catch { case e: Throwable => System.err.println(e.getMessage) }
-    warmUp(graft.sinks.ActivitySink.materialized(spark, dir))
-    warmUp(graft.sinks.AnnIndex.materialized(spark, dir))
-    warmUp(graft.sinks.DedupIndex.materialized(spark, dir))
-    warmUp(graft.sinks.TextIndex.materialized(spark, dir))
-    warmUp(graft.sinks.PqIndex.materialized(spark, dir))
-    warmUp(graft.sinks.MediaSink.materialized(spark, dir))
-    warmUp(graft.sinks.MediaSink.annIndexed(spark, dir))
-    warmUp(graft.sinks.WebSink.materialized(spark, dir))
-    warmUp(graft.sinks.WebSink.materializedMain(spark, dir))
-    warmUp(graft.sinks.WebSink.materializedFetch(spark, dir))
-    warmUp(graft.sinks.WebSink.materializedRecrawl(spark, dir))
-    // mirror Bench's shared-artifact memo warm-ups (ADVICE r10): without
-    // these, the first timed memoized query pays the full build here but
-    // not in Bench, making the two harnesses incomparable for exactly
-    // the memo-served queries this harness exists to remeasure
-    warmUp(graft.ext.Similarity.knnClustersAt(spark, dir).count())
-    warmUp(graft.ext.Similarity.knnCellComponentPaths(spark, dir))
-    warmUp(graft.sinks.TextIndex.standardLexRun(spark, dir).count())
-    warmUp(graft.ext.Dedup.nearDupComponentsAt(spark, dir).count())
-    warmUp(graft.ext.Dedup.semanticComponentsAt(spark, dir).count())
-    warmUp(graft.ext.Bpe.learnAt(spark, dir))
-    warmUp(graft.ext.Dsir.importanceWeightsAt(spark, dir).count())
-    warmUp(graft.ext.Pca.componentsAt(spark, dir).count())
-    warmUp(graft.ext.Layout.clusteredOrdersAt(spark, dir))
-    warmUp(graft.ext.Layout.clusteredOrdersHilbertAt(spark, dir))
-    warmUp(graft.sinks.LayoutSink.driftedOrdersLayoutAt(spark, dir))
-    graft.ext.Dedup.releaseAll()
+    // the same one-time artifact builds Bench performs outside the timed
+    // region, so memo-served queries measure serving, not building
+    Bench.warmArtifacts(spark, dir)
     for (n <- args.drop(1)) { // warm-up, untimed
       SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")
         .write.format("noop").mode("overwrite").save()

@@ -310,23 +310,20 @@ object Bpe {
       .orderBy("merge_rank")
   }
 
-  // One learner run per (fixture, numMerges) per JVM (the Pca.fitMemo
-  // precedent): bpe_vocab, bpe_tokenize, bpe_compression, and
-  // pack_windows_bpe all consume the SAME merge table but each re-ran
-  // the driver-paced distributed fixpoint (~1.5-2 s apiece at sf0.1).
-  // The table is a few dozen driver-side rows — plain JVM memoization,
-  // immune to the bench harness's cache release between queries.
-  private val learnMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Merge]]()
-
+  // One learner run per (fixture, numMerges) per JVM: bpe_vocab,
+  // bpe_tokenize, bpe_compression, and pack_windows_bpe all consume the
+  // SAME merge table but each re-ran the driver-paced distributed
+  // fixpoint (~1.5-2 s apiece at sf0.1). The table is a few dozen
+  // driver-side rows — plain JVM memoization, immune to the bench
+  // harness's cache release between queries.
   /** [[learn]] through the per-fixture memo — the registered-query
     * entry point (same merges, same oracles). */
   def learnAt(
       spark: org.apache.spark.sql.SparkSession, sfDir: String,
       numMerges: Int = 20): Seq[Merge] =
-    learnMemo.computeIfAbsent(s"$sfDir|$numMerges", { _ =>
+    graft.util.ArtifactMemo.once("bpelearn", s"$sfDir|$numMerges") {
       learn(graft.sources.Tables(spark, sfDir, "documents"), numMerges)
-    })
+    }
 
   /** [[vocab]] through the same memo. */
   def vocabAt(

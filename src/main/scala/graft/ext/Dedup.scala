@@ -1092,12 +1092,9 @@ object Dedup {
   def nearDupPairsAt(
       spark: org.apache.spark.sql.SparkSession, sfDir: String,
       threshold: Double = 0.8): DataFrame = {
-    // the core memo resolves BEFORE the pairs build lambda — the
-    // ArtifactMemo contract: a nested computeIfAbsent on the shared map
-    // throws whenever the two keys hash into one bin
-    val core = nearDupCorePathAt(spark, sfDir, threshold)
     spark.read.parquet(
       graft.util.ArtifactMemo.path("jacpairs", s"$sfDir|$threshold") { out =>
+        val core = nearDupCorePathAt(spark, sfDir, threshold)
         expandPairs(
           spark.read.parquet(s"$core/members"),
           spark.read.parquet(s"$core/reppairs"))
@@ -1110,9 +1107,9 @@ object Dedup {
   def nearDupComponentsAt(
       spark: org.apache.spark.sql.SparkSession, sfDir: String,
       threshold: Double = 0.8): DataFrame = {
-    val core = nearDupCorePathAt(spark, sfDir, threshold)
     spark.read.parquet(
       graft.util.ArtifactMemo.path("jaccomp", s"$sfDir|$threshold") { out =>
+        val core = nearDupCorePathAt(spark, sfDir, threshold)
         components(edgesFrom(
           spark.read.parquet(s"$core/members"),
           spark.read.parquet(s"$core/reppairs")))

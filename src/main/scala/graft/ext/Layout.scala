@@ -781,34 +781,28 @@ object Layout {
         col("drifted_rows") * 100 >= col("n_rows") * thresholdPct)
   }
 
-  // One clustered-orders build per fixture dir per JVM (the
-  // AnnIndex.materialized pattern): fixture-derived and immutable, so
-  // reuse is sound; Bench warm-up times the build once, the registered
-  // query times the pruned READ — the point of a layout.
-  private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build-once z-clustered orders table (x = o_custkey, y = epoch-day of
     * o_orderdate as `o_day`); the registered `orders_zorder_pruned_read`
-    * query reads this. */
+    * query reads this. Bench warm-up times the build once, the registered
+    * query times the pruned READ — the point of a layout. */
   def clusteredOrdersAt(spark: SparkSession, sfDir: String): String =
-    built.computeIfAbsent(sfDir, { _ =>
-      val path = graft.util.DirKeys.tmpPath("zlayout", sfDir)
-      val orders = graft.sources.Tables(spark, sfDir, "orders")
-        .withColumn("o_day",
-          expr("unix_millis(cast(o_orderdate as timestamp)) div 86400000"))
-      writeClustered(orders, path, "o_custkey", "o_day", cellBits = 6)
-      path
-    })
+    graft.util.ArtifactMemo.path("zlayout", sfDir) { path =>
+      writeClustered(ordersWithDay(spark, sfDir), path, "o_custkey", "o_day",
+        cellBits = 6)
+    }
 
   /** Build-once HILBERT-clustered orders table (same keys as
     * [[clusteredOrdersAt]]); `orders_hilbert_pruned_read` reads this. */
   def clusteredOrdersHilbertAt(spark: SparkSession, sfDir: String): String =
-    built.computeIfAbsent(sfDir + ":h", { _ =>
-      val path = graft.util.DirKeys.tmpPath("hlayout", sfDir)
-      val orders = graft.sources.Tables(spark, sfDir, "orders")
-        .withColumn("o_day",
-          expr("unix_millis(cast(o_orderdate as timestamp)) div 86400000"))
-      writeClusteredHilbert(orders, path, "o_custkey", "o_day", cellBits = 6)
-      path
-    })
+    graft.util.ArtifactMemo.path("hlayout", sfDir) { path =>
+      writeClusteredHilbert(ordersWithDay(spark, sfDir), path, "o_custkey",
+        "o_day", cellBits = 6)
+    }
+
+  /** A fixture's orders with the epoch-day of o_orderdate as `o_day` —
+    * the y key of every clustered-orders layout. */
+  private[graft] def ordersWithDay(spark: SparkSession, sfDir: String): DataFrame =
+    graft.sources.Tables(spark, sfDir, "orders")
+      .withColumn("o_day",
+        expr("unix_millis(cast(o_orderdate as timestamp)) div 86400000"))
 }

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column handling: image/audio/video as opaque `binary`
@@ -4571,8 +4571,6 @@ object Multimodal {
         val off = (2 + (code & 1)) << eb
         off + br.bits(eb) + 1
       }
-
-    private def clamp8(v: Int): Int = if (v < 0) 0 else if (v > 255) 255 else v
 
     /** Decode a VP8L (lossless WebP) within the documented envelope:
       * all four transforms and meta prefix groups supported; distances

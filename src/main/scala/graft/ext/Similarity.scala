@@ -34,8 +34,6 @@ object Similarity {
   /** One-pass cosine ([[graft.expr.CosineSim]]): dot/(√Σa²·√Σb²). */
   def cosine(a: Column, b: Column): Column = graft.expr.VectorExprs.cosineSim(a, b)
 
-  def norm2(a: Column): Column = sqrt(dot(a, a))
-
   /** array<float> → array<double> (exact upcast). */
   def asDouble(a: Column): Column = transform(a, x => x.cast("double"))
 
@@ -752,7 +750,7 @@ object Similarity {
   }
 
   // One k-NN components pass per (fixture, params) per JVM, parquet-
-  // memoized (the PqIndex.materialized pattern): `knn_clusters` and
+  // memoized: `knn_clusters` and
   // `knn_cluster_stats` consume the SAME component labeling of the same
   // edge set in one verify/bench run, and [[Dedup.components]] is a
   // multi-round checkpointed loop — the most expensive intermediate the
@@ -819,12 +817,10 @@ object Similarity {
     val knnPath = knnComponentsPath(spark, sfDir, k, threshold, stride, nprobe) {
       thresholdEdges(knnGraphFrom(base, ranked, k), threshold)
     }
-    // memoized OUTSIDE the knn memo's build (ArtifactMemo contract: no
-    // nested path() calls); key carries every parameter cellPairs
-    // depends on (nprobe included — defensively: the rank-1 assignment
-    // is nprobe-independent for nprobe ≥ 1, but a key that over-splits
-    // only costs a rebuild, while one that under-splits serves a stale
-    // artifact)
+    // the key carries every parameter cellPairs depends on (nprobe
+    // included — defensively: the rank-1 assignment is nprobe-independent
+    // for nprobe ≥ 1, but a key that over-splits only costs a rebuild,
+    // while one that under-splits serves a stale artifact)
     val cellPath = graft.util.ArtifactMemo.path(
       "knncellcomp", s"$sfDir|$threshold|$stride|$nprobe") { out =>
       Dedup.components(cellPairs).write.mode("overwrite").parquet(out)

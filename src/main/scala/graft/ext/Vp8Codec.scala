@@ -605,9 +605,8 @@ object Vp8Codec {
     yOrigin: Int, cOrigin: Int,
     idctAdd: (Array[Int], Int, Array[Int], Int, Int) => Unit): Unit = {
 
-    val hasAbove = mbY > 0 || true // border row supplies 127s
-    val hasLeft = mbX > 0 || true // border col supplies 129s
-    // DC prediction uses REAL availability, not the border fill:
+    // the border row/col supply 127s/129s; DC prediction uses REAL
+    // availability, not the border fill:
     val realAbove = mbY > 0
     val realLeft = mbX > 0
 
@@ -830,7 +829,7 @@ object Vp8Codec {
     def adjust(pl: Array[Int], i: Int, step: Int, useOuter: Boolean): Int = {
       val ps1 = u2s(pl(i - 2 * step)); val ps0 = u2s(pl(i - step))
       val qs0 = u2s(pl(i)); val qs1 = u2s(pl(i + step))
-      var a = clampSC((if (useOuter) clampSC(ps1 - qs1) else 0) + 3 * (qs0 - ps0))
+      val a = clampSC((if (useOuter) clampSC(ps1 - qs1) else 0) + 3 * (qs0 - ps0))
       val f1 = clampSC(a + 4) >> 3
       val f2 = clampSC(a + 3) >> 3
       pl(i) = s2u(qs0 - f1)

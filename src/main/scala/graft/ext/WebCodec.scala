@@ -1015,7 +1015,7 @@ object WebCodec {
 
   private def warcRecordBytes(warcType: String, uri: String,
       payload: Array[Byte], extraHeaders: String = "",
-      date: String = ""): Array[Byte] = {
+      date: String): Array[Byte] = {
     val head = s"WARC/1.0${CRLF}WARC-Type: $warcType$CRLF" +
       s"WARC-Target-URI: $uri$CRLF" +
       s"WARC-Record-ID: <urn:graft:$warcType:${uri.length}>$CRLF" +
@@ -2422,14 +2422,6 @@ object WebCodec {
   // verdict run in narrow codec seams (no shuffle).
   // ------------------------------------------------------------------
 
-  /** The fetched 200 text/html pages — the only records links are
-    * extracted from (3xx stubs, 404/410 bodies, 503 attempts and
-    * text/plain documents never contribute to the frontier). */
-  def webPages(docs: DataFrame): DataFrame =
-    warcResponses(webWarc(docs))
-      .where(col("http_status") === 200 &&
-        col("content_type") === "text/html")
-
   /** Anchor extraction over (media_id, target_uri, body) pages:
     * comments strip FIRST (a commented-out `<a>` is not a link — the
     * planted /ghost/ axis), then every `<a href="…">` in document
@@ -2776,10 +2768,6 @@ object WebCodec {
       .map { case (id, u, p) => (id, u, p, idnHostToAscii(u)) }
       .toDF("media_id", "unicode_host", "punycode_host", "folded_host")
   }
-
-  final case class ChaseRow(
-      media_id: Long, start_uri: String, final_canonical: String,
-      hops: Int, loop: Boolean)
 
   /** The slim per-record FETCH LOG — what a real crawler materializes
     * beside the payload store (status, Location, Retry-After, capture

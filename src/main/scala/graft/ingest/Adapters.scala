@@ -96,12 +96,4 @@ object Adapters {
       targetId = col("following_id"),
       targetType = "user",
       meta = metadata()): _*)
-
-  /** Adapter by source-table name (≙ reference factory strategy.py:137-149,
-    * resolved at plan build time, not per row). */
-  val bySourceTable: Map[String, DataFrame => DataFrame] = Map(
-    "likes" -> likes,
-    "comments" -> comments,
-    "shards" -> shards,
-    "followers" -> followers)
 }

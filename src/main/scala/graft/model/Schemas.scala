@@ -93,10 +93,6 @@ object Schemas {
     StructField("target_type", StringType),
     StructField("metadata", MapType(StringType, StringType))
   ))
-
-  /** Valid activity_type values (reference: strategy.py:31,59,88,120). */
-  val activityTypes: Seq[String] =
-    Seq("LIKE_SHARD", "COMMENT_SHARD", "CREATE_SHARD", "FOLLOW_USER")
 }
 
 /** Typed boundary record (reference: config.py:18-25). Used with

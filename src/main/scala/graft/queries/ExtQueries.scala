@@ -1045,8 +1045,6 @@ ORDER BY q_id, rnk"""
     """'<html><body>Busy, retry /docs/' || doc_id::VARCHAR
       || '</body></html>'"""
   private val webRetryAfterSql = "(doc_id % 5 + 1) * 30"
-  private val webWarcDateSql =
-    "'2026-0' || (doc_id % 6 + 1)::VARCHAR || '-15T00:00:00Z'"
   /** TRUNCATED-capture axis predicate + the received-prefix decode —
     * twins of WebCodec.{truncAxis,truncatedHtml}. */
   private val webTruncWhere =
@@ -1142,7 +1140,6 @@ ORDER BY q_id, rnk"""
            || '.com/lb/' || doc_id::VARCHAR,
          '/la/' || doc_id::VARCHAR, $webHostSql, 'text/html'
        FROM documents WHERE doc_id % 9 = 5"""
-  private val webRedirectWhere = "doc_id % 9 = 4"
 
   /** RFC 3986 §6 canonicalization + tracking-param strip over URL
     * expression `u` — DuckDB twin of
@@ -8254,14 +8251,12 @@ ORDER BY media_id, rec_index""")),
     // streamed bytes and batch bytes share WebCodec.pipelineMain, so
     // the serving table rides web_pipeline_main's oracle verbatim.
     ("web_pipeline_main_materialized",
-      (s: SparkSession, d: String) => {
-        import org.apache.spark.sql.functions._
+      (s: SparkSession, d: String) =>
         graft.sinks.WebSink.materializedMain(s, d)
           .select("media_id", "host", "http_status", "target_uri",
             "location", "body", "n_blocks",
             "n_kept", "boiler_chars", "n_words", "alpha_milli", "kept")
-          .orderBy("media_id", "http_status", "target_uri")
-      },
+          .orderBy("media_id", "http_status", "target_uri"),
       Some(s"""WITH $webMainChainSql
 SELECT doc_id AS media_id, host, http_status, target_uri, location,
        body, n_blocks, n_kept,
@@ -8274,14 +8269,12 @@ FROM g ORDER BY media_id, http_status, target_uri""")),
     // text out of a bucketed serving table, identical rows under the
     // SAME oracle (streamed bytes and batch bytes share one code path).
     ("web_pipeline_materialized",
-      (s: SparkSession, d: String) => {
-        import org.apache.spark.sql.functions._
+      (s: SparkSession, d: String) =>
         graft.sinks.WebSink.materialized(s, d)
           .select("media_id", "host", "http_status", "target_uri",
             "location", "body", "n_words",
             "alpha_milli", "kept")
-          .orderBy("media_id", "http_status", "target_uri")
-      },
+          .orderBy("media_id", "http_status", "target_uri"),
       Some(webPipelineSql)),
 
     // The crawl-politeness gate: every document's URL path evaluated

@@ -1,9 +1,8 @@
 package graft.sinks
 
-import java.util.concurrent.ConcurrentHashMap
-
 import graft.ingest.Pipeline
 import graft.sources.CdcSource
+import graft.util.ArtifactMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -94,16 +93,13 @@ object ActivitySink {
       .distinct
       .toSeq
 
-  // One materialization per fixture dir per JVM; the table itself is
-  // immutable fixture-derived, so reuse is sound.
-  private val cache = new ConcurrentHashMap[String, DataFrame]()
-
-  /** The materialized activity table for a fixture dir (built on first use,
-    * persisted MEMORY_AND_DISK thereafter). Columns: canonical 7 + the
-    * deterministic `activity_pk` tiebreak + `user_bucket`. */
+  /** The materialized activity table for a fixture dir (built once per JVM
+    * through [[graft.util.ArtifactMemo]], persisted MEMORY_AND_DISK
+    * thereafter). Columns: canonical 7 + the deterministic `activity_pk`
+    * tiebreak + `user_bucket`. */
   def materialized(spark: SparkSession, sfDir: String): DataFrame =
-    cache.computeIfAbsent(sfDir, { _ =>
-      val path = graft.util.DirKeys.tmpPath("activity", sfDir)
+    ArtifactMemo.once("activity", sfDir) {
+      val path = ArtifactMemo.dir("activity", sfDir)
       val (l, c, s, f) = CdcSource.all(spark, sfDir)
       // A2: observe() on the write-side plan — the Spark-native counterpart
       // of the reference's processed-events counter (connection_state.py:8-9,
@@ -113,5 +109,5 @@ object ActivitySink {
         .observe("graft_ingest", count(lit(1)).as("events_written"))
       write(activity, path)
       read(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 }

@@ -180,21 +180,14 @@ object DedupIndex {
       probe(newDocs, path, minAgree).select(col("doc_id")).distinct(),
       Seq("doc_id"), "left_anti")
 
-  // One build per fixture dir per JVM (the materialized pattern): the
-  // even-doc_id half is indexed; registered queries probe the odd half.
-  private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build-once path for a fixture dir, indexing the doc_id-even half
     * of `documents`; `dedup_incremental_indexed` probes the odd half.
     * Built in PORTABLE hash mode so the probe carries a full DuckDB
     * oracle (the splitmix64 minima over md5-derived shingle hashes are
     * reproducible in SQL; VERDICT r8 item 7). */
   def materialized(spark: SparkSession, sfDir: String): String =
-    built.computeIfAbsent(sfDir, { _ =>
-      val path =
-        graft.util.DirKeys.tmpPath("dedupindex", sfDir)
+    graft.util.ArtifactMemo.path("dedupindex", sfDir) { path =>
       build(graft.sources.Tables(spark, sfDir, "documents")
         .where(pmod(col("doc_id"), lit(2)) === 0), path, portable = true)
-      path
-    })
+    }
 }

@@ -239,28 +239,19 @@ object LayoutSink {
     needs
   }
 
-  // one drifted-layout fixture per sf dir per JVM (the clusteredOrdersAt
-  // pattern): fixture-derived and immutable, so reuse is sound
-  private val driftBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build-once DRIFTED z-clustered orders: the base layout plus one
     * appended batch whose custkeys all lie past the frozen x bound
     * (every 7th order, custkey shifted by x_hi + 1). The appended rows
     * clamp into edge cells — reads stay exact, and `orders_layout_health`
     * reports the drift with `needs_relayout` riding the hashed oracle. */
   def driftedOrdersLayoutAt(spark: SparkSession, sfDir: String): String =
-    driftBuilt.computeIfAbsent(sfDir, { _ =>
-      val path = graft.util.DirKeys.tmpPath("driftlayout", sfDir)
-      val orders = graft.sources.Tables(spark, sfDir, "orders")
-        .withColumn("o_day",
-          expr("unix_millis(cast(o_orderdate as timestamp)) div 86400000"))
+    graft.util.ArtifactMemo.path("driftlayout", sfDir) { path =>
+      val orders = Layout.ordersWithDay(spark, sfDir)
       Layout.writeClustered(orders, path, "o_custkey", "o_day", cellBits = 6)
       val meta = metaOf(spark, path)
       appendBatch(
         orders.where(expr("o_orderkey % 7 = 0"))
           .withColumn("o_custkey", col("o_custkey") + lit(meta.xHi + 1)),
         path)
-      path
-    })
+    }
 }

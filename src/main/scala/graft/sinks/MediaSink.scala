@@ -1,8 +1,7 @@
 package graft.sinks
 
-import java.util.concurrent.ConcurrentHashMap
-
 import graft.ext.Multimodal
+import graft.util.ArtifactMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -66,33 +65,26 @@ object MediaSink {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path).dropDuplicates("media_id")
 
-  // one table per fixture dir per JVM (fixture-derived and immutable —
-  // the ActivitySink.materialized pattern)
-  private val cache = new ConcurrentHashMap[String, DataFrame]()
-  private val annBuilt = new ConcurrentHashMap[String, String]()
-
   /** The "ANN index build slot" the header names, filled (r15): a
     * persisted [[AnnIndex]] over the served table's BMP-range
     * embeddings (the decode→embed→index→serve loop closed end-to-end:
     * streamed MediaSink table → frozen-codebook IVF index → pruned
     * probes). Build-once per fixture dir, overwrite semantics. */
   def annIndexed(spark: SparkSession, sfDir: String): String =
-    annBuilt.computeIfAbsent(sfDir, { _ =>
-      val path = graft.util.DirKeys.tmpPath("annmedia", sfDir)
+    ArtifactMemo.path("annmedia", sfDir) { path =>
       val embs = materialized(spark, sfDir)
         .where(col("media_id") < 100000000000L) // the BMP range
         .where(expr("aggregate(embedding, 0D, (a, x) -> a + x) > 0D"))
         .select(col("media_id").as("vec_id"), col("embedding"))
       AnnIndex.build(embs, path)
-      path
-    })
+    }
 
   /** The materialized media-embedding table for a fixture dir: the
     * five-format synth corpus through the SAME decode-gate + embed path
     * the streaming ingest runs, persisted for the serving queries. */
   def materialized(spark: SparkSession, sfDir: String): DataFrame =
-    cache.computeIfAbsent(sfDir, { _ =>
-      val path = graft.util.DirKeys.tmpPath("mediasink", sfDir)
+    ArtifactMemo.once("mediasink", sfDir) {
+      val path = ArtifactMemo.dir("mediasink", sfDir)
       val docs = graft.sources.Tables(spark, sfDir, "documents")
       // OVERWRITE, not append (the ActivitySink pattern): the tmp dir
       // outlives the JVM, and an append here would stack a full
@@ -101,5 +93,5 @@ object MediaSink {
       write(Multimodal.mediaEmbedding(Multimodal.mediaAllFormats(docs)),
         path, defaultBuckets, "overwrite")
       read(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 }

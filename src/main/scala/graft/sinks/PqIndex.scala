@@ -139,17 +139,10 @@ object PqIndex {
     Meta(r.getAs[Double]("s"), r.getAs[Int]("buckets"))
   }
 
-  // One build per fixture dir per JVM (the ActivitySink.materialized
-  // pattern): the index is immutable fixture-derived, so reuse is sound.
-  private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build-once path for a fixture dir; the registered
     * `sim_topk_pq_indexed` query probes this. */
   def materialized(spark: SparkSession, sfDir: String): String =
-    built.computeIfAbsent(sfDir, { _ =>
-      val path =
-        graft.util.DirKeys.tmpPath("pqindex", sfDir)
-      build(graft.sources.Tables(spark, sfDir, "embeddings"), path)
-      path
-    })
+    graft.util.ArtifactMemo.path("pqindex", sfDir) {
+      build(graft.sources.Tables(spark, sfDir, "embeddings"), _)
+    }
 }

@@ -1,8 +1,7 @@
 package graft.sinks
 
-import java.util.concurrent.ConcurrentHashMap
-
 import graft.ext.WebCodec
+import graft.util.ArtifactMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -114,18 +113,12 @@ object WebSink {
   def readFetch(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path).dropDuplicates("media_id", "rec_index")
 
-  // one table per fixture dir per JVM (fixture-derived and immutable —
-  // the ActivitySink.materialized pattern, collision-free DirKeys)
-  private val cache = new ConcurrentHashMap[String, DataFrame]()
-  private val mainCache = new ConcurrentHashMap[String, DataFrame]()
-  private val fetchCache = new ConcurrentHashMap[String, DataFrame]()
-
   /** The materialized cleaned-corpus table for a fixture dir: the synth
     * WARC corpus through the SAME parse-gate + extract path the
     * streaming ingest runs, persisted for the serving queries. */
   def materialized(spark: SparkSession, sfDir: String): DataFrame =
-    cache.computeIfAbsent(sfDir, { _ =>
-      val path = graft.util.DirKeys.tmpPath("websink", sfDir)
+    ArtifactMemo.once("websink", sfDir) {
+      val path = ArtifactMemo.dir("websink", sfDir)
       val docs = graft.sources.Tables(spark, sfDir, "documents")
       // OVERWRITE, not append (the ActivitySink pattern): the tmp dir
       // outlives the JVM; appending would stack duplicate copies per
@@ -133,38 +126,36 @@ object WebSink {
       write(WebCodec.pipeline(WebCodec.webWarc(docs)), path,
         defaultBuckets, "overwrite")
       read(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** The materialized MAIN-CONTENT corpus table (r16) — the serving
     * shape a tokenize/pack stage reads when the cleaner runs upstream. */
   def materializedMain(spark: SparkSession, sfDir: String): DataFrame =
-    mainCache.computeIfAbsent(sfDir, { _ =>
-      val path = graft.util.DirKeys.tmpPath("websinkmain", sfDir)
+    ArtifactMemo.once("websinkmain", sfDir) {
+      val path = ArtifactMemo.dir("websinkmain", sfDir)
       val docs = graft.sources.Tables(spark, sfDir, "documents")
       write(WebCodec.pipelineMain(WebCodec.webWarc(docs)), path,
         defaultBuckets, "overwrite")
       read(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** The materialized FETCH LOG (r18) for a fixture dir. */
   def materializedFetch(spark: SparkSession, sfDir: String): DataFrame =
-    fetchCache.computeIfAbsent(sfDir, { _ =>
-      val path = graft.util.DirKeys.tmpPath("websinkfetch", sfDir)
+    ArtifactMemo.once("websinkfetch", sfDir) {
+      val path = ArtifactMemo.dir("websinkfetch", sfDir)
       val docs = graft.sources.Tables(spark, sfDir, "documents")
       writeFetch(WebCodec.fetchLog(WebCodec.webWarc(docs)), path,
         defaultBuckets, "overwrite")
       readFetch(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
-    })
-
-  private val recrawlCache = new ConcurrentHashMap[String, DataFrame]()
+    }
 
   /** The materialized CRAWL-2 fetch log (r18): recrawlRecords rows —
     * live re-fetches with content identity, 304 revisits with their
     * referral + validator — bucketed like the crawl-1 log. Row
     * identity is target_uri (one fetch row per URL per crawl). */
   def materializedRecrawl(spark: SparkSession, sfDir: String): DataFrame =
-    recrawlCache.computeIfAbsent(sfDir, { _ =>
-      val path = graft.util.DirKeys.tmpPath("websinkrecrawl", sfDir)
+    ArtifactMemo.once("websinkrecrawl", sfDir) {
+      val path = ArtifactMemo.dir("websinkrecrawl", sfDir)
       val docs = graft.sources.Tables(spark, sfDir, "documents")
       BucketedSink.write(
         WebCodec.recrawlRecords(WebCodec.webWarcRecrawl(docs)), path,
@@ -173,5 +164,5 @@ object WebSink {
       spark.read.parquet(path)
         .dropDuplicates("media_id", "target_uri")
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ingest.{Adapters, CdcEnvelope, Pipeline}
+import graft.ingest.{CdcEnvelope, Pipeline}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -63,11 +63,11 @@ object StreamingIngest {
 
   /** Raw `value:string` stream (Kafka frame shape) → uniform activity
     * stream. Works on batch and streaming DataFrames alike. */
-  def activityStream(raw: DataFrame): DataFrame =
-    tables
-      .map { t => Adapters.bySourceTable(t)(
-        CdcEnvelope.admitted(CdcEnvelope.parseTable(raw, t))) }
-      .reduce(_ unionByName _)
+  def activityStream(raw: DataFrame): DataFrame = {
+    def branch(t: String) = CdcEnvelope.parseTable(raw, t)
+    Pipeline.activityRaw(
+      branch("likes"), branch("comments"), branch("shards"), branch("followers"))
+  }
 
   /** Effectively-once variant: watermark + dedup on the deterministic
     * event key before the sink. */

@@ -32,12 +32,6 @@ class GraftSpec extends SparkSuite {
     }
   }
 
-  test("Bench.memoServed names all resolve to registered queries") {
-    val missing = Bench.memoServed.filterNot(SparkEntry.queries.contains)
-    assert(missing.isEmpty,
-      s"memo-served annotation names unknown queries: $missing")
-  }
-
   test("query registry: no duplicate names (a dup would silently shadow " +
       "in the Map), and every query carries an oracle") {
     val names = graft.queries.ExtQueries.defs.map(_._1) ++
