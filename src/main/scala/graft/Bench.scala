@@ -54,17 +54,22 @@ object Bench {
   /** Build every [[artifacts]] entry for `sfDir`, each timed and
     * individually guarded (an unguarded build once killed the run before
     * any timing printed; a failed one now only fails its dependent
-    * queries). Returns (label, build seconds), -1 for a failed build: the
-    * build IS the dominant cost of several memo-served queries, so its
-    * seconds stay diffable. */
-  def warmArtifacts(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
+    * queries). Returns (label, build seconds, prebuilt), -1 for a failed
+    * build: the build IS the dominant cost of several memo-served
+    * queries, so its seconds stay diffable. `prebuilt` marks a call that
+    * succeeded but built no memo cell (an earlier pass over the same
+    * fixture built them): its seconds time a memo hit, not a build. */
+  def warmArtifacts(spark: SparkSession, sfDir: String): Seq[(String, Double, Boolean)] = {
     val builds = artifacts.map { case (label, build) =>
+      val builds0 = graft.util.ArtifactMemo.builds
       val t0 = System.nanoTime()
-      try { build(spark, sfDir); label -> (System.nanoTime() - t0) / 1e9 }
-      catch {
+      try {
+        build(spark, sfDir)
+        (label, (System.nanoTime() - t0) / 1e9, graft.util.ArtifactMemo.builds == builds0)
+      } catch {
         case e: Throwable =>
           System.err.println(s"[bench] warm-up $label failed: ${e.getMessage}")
-          label -> -1.0
+          (label, -1.0, false)
       }
     }
     graft.ext.Dedup.releaseAll()
@@ -321,9 +326,12 @@ object Bench {
       .mkString("{", ",", "}")
     val rr = rerun.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val ab = artifactBuilds.map { case (k, v) => "\"" + k + "\":" + v }
+    val ab = artifactBuilds.map { case (k, v, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val buildTotal = artifactBuilds.map(_._2).filter(_ >= 0).sum
+    // a prebuilt label's seconds time a memo hit: listed, never summed
+    val prebuilt = artifactBuilds.collect { case (k, _, true) => k }
+    val built = artifactBuilds.collect { case (k, v, false) => k -> v }
+    val buildTotal = built.map(_._2).filter(_ >= 0).sum
     val total = results.map(_._2).filter(_ >= 0).sum
     // serve-path total PLUS the one-time artifact builds: the number a
     // build-path regression moves even when every serve-path row is flat
@@ -347,7 +355,7 @@ object Bench {
     val commonPrior = commonQ.map { case (n, _) => prior(n) }.sum
     val priorBuilds =
       priorText.map(parseMap(_, "artifact_builds")).getOrElse(Map.empty)
-    val commonB = artifactBuilds.filter { case (n, t) =>
+    val commonB = built.filter { case (n, t) =>
       t >= 0 && priorBuilds.get(n).exists(_ >= 0) }
     val buildsNow = commonB.map(_._2).sum
     val buildsPrior = commonB.map { case (n, _) => priorBuilds(n) }.sum
@@ -369,7 +377,7 @@ object Bench {
     val sc = segCal.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val fileJson =
-      s"""{"queries":$qs,"outlier_first_timings":$rr,"artifact_builds":$ab,"artifact_builds_total":$buildTotal,$trend,"memo_served":${memoServed.map("\"" + _ + "\"").mkString("[", ",", "]")},"calibration_segments":$sc,"calibration_after_remeasure_sec":$calAfterRemeasure,"calibration_sec":$calibration,"calibration_workload":"4M-row parquet scan + broadcast join(97) + string-keyed agg, noop sink, median-of-3","metric":"total","value":$total,"value_with_builds":$totalWithBuilds,"total_calibrated":$totalCalibrated,"unit":"sec","sf":"$sfDir","n_queries":${results.size}}"""
+      s"""{"queries":$qs,"outlier_first_timings":$rr,"artifact_builds":$ab,"artifact_builds_total":$buildTotal,"artifact_builds_prebuilt":${prebuilt.map("\"" + _ + "\"").mkString("[", ",", "]")},$trend,"memo_served":${memoServed.map("\"" + _ + "\"").mkString("[", ",", "]")},"calibration_segments":$sc,"calibration_after_remeasure_sec":$calAfterRemeasure,"calibration_sec":$calibration,"calibration_workload":"4M-row parquet scan + broadcast join(97) + string-keyed agg, noop sink, median-of-3","metric":"total","value":$total,"value_with_builds":$totalWithBuilds,"total_calibrated":$totalCalibrated,"unit":"sec","sf":"$sfDir","n_queries":${results.size}}"""
     val outFile = if (sfMismatch) sideFile else "bench_queries.json"
     java.nio.file.Files.write(
       java.nio.file.Paths.get(outFile),

@@ -3,12 +3,12 @@ package graft.ingest
 import graft.model.Schemas
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** CDC envelope handling: JSON deserialization + validity/op gates.
   *
   * Mirrors the reference's consumer-side contract:
-  *  - F1 json.loads per message            (reference: event_processor.py:63)
+  *  - F1 json.loads per message, once, with one envelope schema for all
+  *    four tables                          (reference: event_processor.py:63)
   *  - F2 require __op/__table/__source_ts_ms, else drop
   *                                         (reference: strategy.py:12-18)
   *  - F3 keep only op='c' (creates); updates/deletes intentionally ignored —
@@ -21,24 +21,20 @@ import org.apache.spark.sql.types.StructType
   */
 object CdcEnvelope {
 
-  /** F1: parse a Kafka-shaped frame (`value: binary|string`) into the
-    * flattened Debezium envelope for one source table. PERMISSIVE mode maps
-    * malformed records to all-null rows (then dropped by [[valid]]). */
-  def parse(raw: DataFrame, schema: StructType): DataFrame =
-    raw
-      .select(
-        from_json(
-          col("value").cast("string"),
-          schema,
-          Map("mode" -> "PERMISSIVE")).as("r"))
-      .select(col("r.*"))
-
-  /** F1 for a multiplexed stream: parse all four table schemas and keep the
-    * branch named by `__source_table`. */
-  def parseTable(raw: DataFrame, table: String): DataFrame = {
-    val schema = Schemas.cdcSchemas(table)
-    parse(raw, schema).where(col("__source_table") === table)
-  }
+  /** F1: parse a Kafka-shaped frame (`value: binary|string`) once, with
+    * [[Schemas.cdcEnvelope]], whatever table the message comes from; the
+    * adapters route the row on `__source_table`. PERMISSIVE mode maps
+    * malformed records to all-null rows (then dropped by [[valid]]).
+    * `inline(array(...))` expands the parsed struct through a Generate,
+    * which the gate predicates cannot be pushed below: a `r.*` projection
+    * lets Catalyst copy `from_json` into every gate conjunct, parsing each
+    * envelope up to six times. */
+  def parse(raw: DataFrame): DataFrame =
+    raw.select(inline(array(
+      from_json(
+        col("value").cast("string"),
+        Schemas.cdcEnvelope,
+        Map("mode" -> "PERMISSIVE")))))
 
   /** F2: validity gate — the three required meta-fields must be present
     * (reference: strategy.py:12-18). */

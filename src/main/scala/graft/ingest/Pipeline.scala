@@ -4,10 +4,13 @@ import graft.expr.TimeUuid
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The core dataflow: 4 CDC branches -> admission gates -> per-table
-  * projection -> union -> activity stream (reference: event_processor.py
-  * poll loop 45-79 + strategy factory 137-149, re-expressed as one
-  * declarative plan).
+/** The core dataflow: CDC envelopes -> admission gates -> the adapter
+  * table, routed on `__source_table` -> activity stream (reference:
+  * event_processor.py poll loop 45-79 + strategy factory 137-149,
+  * re-expressed as one declarative plan). A multiplexed stream is parsed
+  * once with one envelope schema ([[CdcEnvelope.parse]]) and projected once
+  * ([[Adapters.activity]]); the four typed batch frames go through the same
+  * projection and are unioned.
   *
   * Works identically on batch and streaming DataFrames — the plan is the
   * same; only the source binding differs (parquet fixtures here, Kafka
@@ -41,14 +44,10 @@ object Pipeline {
       likes: DataFrame,
       comments: DataFrame,
       shards: DataFrame,
-      followers: DataFrame): DataFrame = {
-    val branches = Seq(
-      Adapters.likes(CdcEnvelope.admitted(likes)),
-      Adapters.comments(CdcEnvelope.admitted(comments)),
-      Adapters.shards(CdcEnvelope.admitted(shards)),
-      Adapters.followers(CdcEnvelope.admitted(followers)))
-    branches.reduce(_ unionByName _)
-  }
+      followers: DataFrame): DataFrame =
+    Seq(likes, comments, shards, followers)
+      .map(t => Adapters.activity(CdcEnvelope.admitted(t)))
+      .reduce(_ unionByName _)
 
   /** The canonical 7-column sink shape (reference: cassandra-init.cql:6-15),
     * dropping internal columns. */
@@ -72,13 +71,4 @@ object Pipeline {
     * must exceed any realistic replay window (SURVEY.md §7.4 item 3). */
   def dedupedStreaming(activity: DataFrame, horizon: String = "1 hour"): DataFrame =
     activity.withWatermark("event_timestamp", horizon).dropDuplicates(eventKey)
-
-  /** Same guarantee via `dropDuplicatesWithinWatermark`: duplicates are
-    * only required to arrive within the watermark delay of each other
-    * (not to share an exact event-time key with live state), which evicts
-    * state more aggressively — the preferred shape when replays are
-    * bounded-lag rather than arbitrary. */
-  def dedupedStreamingWithin(activity: DataFrame, horizon: String = "1 hour"): DataFrame =
-    activity.withWatermark("event_timestamp", horizon)
-      .dropDuplicatesWithinWatermark(eventKey)
 }

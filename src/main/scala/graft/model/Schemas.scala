@@ -70,38 +70,11 @@ object Schemas {
     StructField("created_at", StringType)
   )
 
-  /** CDC schema by source-table name (reference dispatch: enums.py:4-9,
-    * strategy.py:137-149). */
-  val cdcSchemas: Map[String, StructType] = Map(
-    "likes" -> likesCdc,
-    "comments" -> commentsCdc,
-    "shards" -> shardsCdc,
-    "followers" -> followersCdc
-  )
-
-  /** Uniform activity record, the engine's one typed IR
-    * (reference: config.py:18-25 CassandraRecord; sink DDL
-    * cassandra-init.cql:6-15). `event_timestamp` is a proper timestamp
-    * (from `__source_ts_ms` millis); `activity_id` is a time-ordered
-    * unique id (see graft.expr.TimeUuid). */
-  val activity: StructType = StructType(Seq(
-    StructField("user_id", StringType, nullable = false),
-    StructField("activity_id", StringType, nullable = false),
-    StructField("activity_type", StringType, nullable = false),
-    StructField("event_timestamp", TimestampType, nullable = false),
-    StructField("target_id", StringType),
-    StructField("target_type", StringType),
-    StructField("metadata", MapType(StringType, StringType))
-  ))
+  /** The one envelope every CDC message is parsed with: the field-by-field
+    * union of the four table schemas (field types agree across tables).
+    * A field another table owns parses to null, and `__source_table`
+    * routes the row (reference dispatch: enums.py:4-9, strategy.py:137-149). */
+  val cdcEnvelope: StructType = StructType(
+    Seq(likesCdc, commentsCdc, shardsCdc, followersCdc)
+      .flatMap(_.fields).distinctBy(_.name))
 }
-
-/** Typed boundary record (reference: config.py:18-25). Used with
-  * Dataset[ActivityRecord] at the adapter edge; DataFrame inside the engine. */
-case class ActivityRecord(
-    user_id: String,
-    activity_id: String,
-    activity_type: String,
-    event_timestamp: java.sql.Timestamp,
-    target_id: String,
-    target_type: String,
-    metadata: Map[String, String])

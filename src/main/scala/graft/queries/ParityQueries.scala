@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.ingest.{CdcEnvelope, Pipeline}
+import graft.ingest.{Adapters, CdcEnvelope, Pipeline}
 import graft.serve.FeedQueries
 import graft.sources.CdcSource
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -84,28 +84,28 @@ WHERE user_id IN (SELECT DISTINCT following_id FROM followers_cdc
 
     // P1-P4 + F2/F3: per-table adapter outputs (creates only)
     ("cdc_adapter_likes",
-      (s: SparkSession, d: String) => flatten(graft.ingest.Adapters.likes(
+      (s: SparkSession, d: String) => flatten(Adapters.activity(
         CdcEnvelope.admitted(CdcSource.likes(CdcSource.events(s, d)))))
         .orderBy("activity_pk"),
       Some(OracleCte.withCdc(
         "SELECT * FROM act_likes ORDER BY activity_pk"))),
 
     ("cdc_adapter_comments",
-      (s: SparkSession, d: String) => flatten(graft.ingest.Adapters.comments(
+      (s: SparkSession, d: String) => flatten(Adapters.activity(
         CdcEnvelope.admitted(CdcSource.comments(CdcSource.events(s, d)))))
         .orderBy("activity_pk"),
       Some(OracleCte.withCdc(
         "SELECT * FROM act_comments ORDER BY activity_pk"))),
 
     ("cdc_adapter_shards",
-      (s: SparkSession, d: String) => flatten(graft.ingest.Adapters.shards(
+      (s: SparkSession, d: String) => flatten(Adapters.activity(
         CdcEnvelope.admitted(CdcSource.shards(CdcSource.events(s, d)))))
         .orderBy("activity_pk"),
       Some(OracleCte.withCdc(
         "SELECT * FROM act_shards ORDER BY activity_pk"))),
 
     ("cdc_adapter_follows",
-      (s: SparkSession, d: String) => flatten(graft.ingest.Adapters.followers(
+      (s: SparkSession, d: String) => flatten(Adapters.activity(
         CdcEnvelope.admitted(CdcSource.followers(CdcSource.events(s, d)))))
         .orderBy("activity_pk"),
       Some(OracleCte.withCdc(
@@ -258,9 +258,9 @@ LIMIT 50 OFFSET 10"""))),
     ("feed_comment_enriched",
       (s: SparkSession, d: String) => {
         val ev = CdcSource.events(s, d)
-        val commentsAct = flatten(graft.ingest.Adapters.comments(
+        val commentsAct = flatten(Adapters.activity(
           CdcEnvelope.admitted(CdcSource.comments(ev))))
-        val shardTitles = flatten(graft.ingest.Adapters.shards(
+        val shardTitles = flatten(Adapters.activity(
           CdcEnvelope.admitted(CdcSource.shards(ev))))
           .select(col("target_id"), col("md_title").as("shard_title"))
         commentsAct
@@ -340,7 +340,7 @@ ORDER BY user_id"""))),
       (s: SparkSession, d: String) => {
         val ev = CdcSource.events(s, d)
         graft.serve.GraphStats.trendingTargets(
-          flatten(graft.ingest.Adapters.likes(
+          flatten(Adapters.activity(
             CdcEnvelope.admitted(CdcSource.likes(ev)))))
       },
       Some(OracleCte.withCdc(
@@ -383,7 +383,7 @@ FROM r GROUP BY u ORDER BY user_id"""))),
     ("feed_cooccurrence",
       (s: SparkSession, d: String) => {
         val ev = CdcSource.events(s, d)
-        val likesAct = flatten(graft.ingest.Adapters.likes(
+        val likesAct = flatten(Adapters.activity(
           CdcEnvelope.admitted(CdcSource.likes(ev))))
           .select("user_id", "target_id")
         graft.serve.GraphStats.coEngagement(likesAct,

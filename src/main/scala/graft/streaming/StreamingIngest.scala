@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ingest.{CdcEnvelope, Pipeline}
+import graft.ingest.{Adapters, CdcEnvelope, Pipeline}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -9,10 +9,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * event_processor.py:45-79 — poll → parse → transform → sink — re-expressed
   * as one streaming plan).
   *
-  * The plan is identical to the batch [[graft.ingest.Pipeline]]: the four
-  * envelope branches are parsed from the multiplexed `value` stream
-  * (≙ one consumer over 4 Kafka topics, services/kafka.py:8-26), gated
-  * (F2+F3), projected (P1-P4) and unioned. In production the source is
+  * The plan is the batch [[graft.ingest.Pipeline]]'s: the multiplexed
+  * `value` stream (≙ one consumer over 4 Kafka topics,
+  * services/kafka.py:8-26) is parsed once with the envelope schema, gated
+  * (F2+F3), and projected (P1-P4) by the adapter table, routed on
+  * `__source_table`. In production the source is
   * `spark.readStream.format("kafka")`; in this environment tests bind the
   * same plan to `MemoryStream[String]` — the plan does not change, only the
   * source.
@@ -26,7 +27,7 @@ object StreamingIngest {
 
   /** The four source tables in the Debezium publication
     * (reference: debezium-postgres-connector.config.json:12). */
-  val tables: Seq[String] = Seq("likes", "comments", "shards", "followers")
+  val tables: Seq[String] = Adapters.all.map(_.table)
 
   /** CDC topic names as Debezium publishes them: `postgres.public.<table>`
     * (reference main.py:30, debezium topic routing). */
@@ -62,23 +63,15 @@ object StreamingIngest {
     activityStream(kafkaStream(spark, servers))
 
   /** Raw `value:string` stream (Kafka frame shape) → uniform activity
-    * stream. Works on batch and streaming DataFrames alike. */
-  def activityStream(raw: DataFrame): DataFrame = {
-    def branch(t: String) = CdcEnvelope.parseTable(raw, t)
-    Pipeline.activityRaw(
-      branch("likes"), branch("comments"), branch("shards"), branch("followers"))
-  }
+    * stream: one scan, one envelope parse, one projection. Works on batch
+    * and streaming DataFrames alike. */
+  def activityStream(raw: DataFrame): DataFrame =
+    Adapters.activity(CdcEnvelope.admitted(CdcEnvelope.parse(raw)))
 
   /** Effectively-once variant: watermark + dedup on the deterministic
     * event key before the sink. */
   def dedupedActivityStream(raw: DataFrame, horizon: String = "1 hour"): DataFrame =
     Pipeline.dedupedStreaming(activityStream(raw), horizon)
-
-  /** Effectively-once via `dropDuplicatesWithinWatermark` — more
-    * aggressive state eviction when redelivery lag is bounded by the
-    * watermark delay (see [[Pipeline.dedupedStreamingWithin]]). */
-  def dedupedActivityStreamWithin(raw: DataFrame, horizon: String = "1 hour"): DataFrame =
-    Pipeline.dedupedStreamingWithin(activityStream(raw), horizon)
 
   /** How long (event time) a user's counter survives with no new activity
     * before the state store evicts it — bounds state size in a

@@ -26,6 +26,7 @@ object ArtifactMemo {
 
   private val cells = new java.util.concurrent.ConcurrentHashMap[String, Cell]()
   private val hitCount = new java.util.concurrent.atomic.AtomicLong()
+  private val buildCount = new java.util.concurrent.atomic.AtomicLong()
 
   /** The value for (kind, key), building it on the first call per JVM. */
   def once[T](kind: String, key: String)(build: => T): T = {
@@ -33,7 +34,7 @@ object ArtifactMemo {
     if (cell.built) hitCount.incrementAndGet()
     else cell.synchronized {
       if (cell.built) hitCount.incrementAndGet()
-      else { cell.value = build; cell.built = true }
+      else { cell.value = build; cell.built = true; buildCount.incrementAndGet() }
     }
     cell.value.asInstanceOf[T]
   }
@@ -54,6 +55,9 @@ object ArtifactMemo {
 
   /** Calls so far that were served by an already-built cell. */
   def hits: Long = hitCount.get()
+
+  /** Builds so far that completed (a build that threw is not counted). */
+  def builds: Long = buildCount.get()
 
   /** The existing tmp directories of the artifacts built for a fixture. */
   def dirsOf(sfDir: String): Seq[String] = {

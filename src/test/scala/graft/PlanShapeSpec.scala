@@ -161,6 +161,28 @@ class PlanShapeSpec extends SparkSuite {
     assert(p.contains("event_type"))
   }
 
+  test("activityStream scans and parses its source once") {
+    import spark.implicits._
+    val dir = tmpDir("graft_plan_envelopes")
+    Seq(
+      """{"id":7,"shard_id":3,"liked_by":"2","__op":"c","__table":"likes","__source_ts_ms":1752228000000,"__source_table":"likes"}""",
+      """{"id":2,"follower_id":"2","following_id":"1","__op":"c","__table":"followers","__source_ts_ms":1752228180000,"__source_table":"followers"}""")
+      .toDF("value").write.mode("overwrite").text(dir)
+    val out = graft.streaming.StreamingIngest.activityStream(spark.read.text(dir))
+    val exec = out.queryExecution.executedPlan
+    val scans = exec.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    // every from_json occurrence: a gate predicate pushed below the parse
+    // would carry its own copy and parse the envelope again
+    val parses = exec.collect { case n => n.expressions.map(_.collect {
+      case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j
+    }.size).sum }.sum
+    assert(scans.size === 1, exec)
+    assert(parses === 1, exec)
+    assert(out.count() === 2)
+  }
+
   test("pack_windows: no single-partition global window anywhere") {
     // the naive global cumsum plans an `Exchange SinglePartition` — the
     // one shape that cannot scale; the range-partitioned prefix sum must

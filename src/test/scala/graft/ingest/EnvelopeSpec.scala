@@ -20,7 +20,7 @@ class EnvelopeSpec extends SparkSuite {
 
   private def run(rows: Seq[String]) =
     CdcEnvelope.admitted(
-      CdcEnvelope.parseTable(rows.toDF("value"), "likes"))
+      CdcEnvelope.parse(rows.toDF("value")))
 
   test("F3: only creates survive; updates and deletes are dropped") {
     val out = run(Seq(create, update, delete)).collect()
@@ -37,7 +37,7 @@ class EnvelopeSpec extends SparkSuite {
   }
 
   test("deletes arrive flagged but never pass the gate (rewrite mode)") {
-    val parsed = CdcEnvelope.parseTable(Seq(delete).toDF("value"), "likes")
+    val parsed = CdcEnvelope.parse(Seq(delete).toDF("value"))
     assert(parsed.count() === 1)                    // it arrives
     assert(parsed.where("__deleted = 'true'").count() === 1)
     assert(CdcEnvelope.admitted(parsed).count() === 0) // it never passes

@@ -35,9 +35,9 @@ object PropertySpec extends Properties("graft") {
       import I.i._
       val json =
         s"""{"id":$id,"shard_id":$shard,"liked_by":"$user","__op":"c","__table":"likes","__source_ts_ms":$ts,"__source_table":"likes"}"""
-      val out = graft.ingest.Adapters.likes(
+      val out = graft.ingest.Adapters.activity(
         graft.ingest.CdcEnvelope.admitted(
-          graft.ingest.CdcEnvelope.parseTable(Seq(json).toDF("value"), "likes")))
+          graft.ingest.CdcEnvelope.parse(Seq(json).toDF("value"))))
         .collect()
       out.length == 1 &&
         out.head.getAs[String]("user_id") == user &&

@@ -112,9 +112,9 @@ class FormatsSpec extends SparkSuite {
     // column -> from_json parse -> gates -> projection
     val frames = likes
       .select(to_json(struct(likes.columns.map(col): _*)).cast("binary").as("value"))
-    val parsed = graft.ingest.CdcEnvelope.parseTable(frames, "likes")
+    val parsed = graft.ingest.CdcEnvelope.parse(frames)
     assert(parsed.count() === likes.count())
-    val acts = graft.ingest.Adapters.likes(graft.ingest.CdcEnvelope.admitted(parsed))
+    val acts = graft.ingest.Adapters.activity(graft.ingest.CdcEnvelope.admitted(parsed))
     assert(acts.count() === likes.where(col("__op") === "c").count())
   }
 }

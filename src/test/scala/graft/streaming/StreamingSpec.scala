@@ -88,30 +88,6 @@ class StreamingSpec extends SparkSuite {
     assert(pruned.count() === 5)
   }
 
-  test("dropDuplicatesWithinWatermark variant also absorbs bounded-lag replays") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[String]
-    val out = tmpDir("graft_replay_within_out")
-    val ckpt = tmpDir("graft_replay_within_ckpt")
-
-    mem.addData(events: _*)
-    StreamingIngest.runToParquet(
-      StreamingIngest.dedupedActivityStreamWithin(mem.toDF()), out, ckpt)
-      .awaitTermination()
-
-    // same events redelivered within the watermark horizon + one new
-    val fresh =
-      """{"id":99,"shard_id":5,"liked_by":"3","__op":"c","__table":"likes","__source_ts_ms":1752228300000,"__source_table":"likes"}"""
-    mem.addData(events :+ fresh: _*)
-    StreamingIngest.runToParquet(
-      StreamingIngest.dedupedActivityStreamWithin(mem.toDF()), out, ckpt)
-      .awaitTermination()
-
-    val res = spark.read.parquet(out)
-    assert(res.count() === 5)
-    assert(res.dropDuplicates("activity_type", "activity_pk").count() === 5)
-  }
-
   test("kafka binding is compiled in-tree and reaches source resolution") {
     // The production constructor runs the real code path: subscribe list,
     // offsets, frame projection. Without the spark-sql-kafka connector jar

@@ -47,6 +47,19 @@ class ArtifactMemoSpec extends AnyFunSuite {
     assert(ArtifactMemo.hits === hits0 + 1)
   }
 
+  test("builds counts completed builds only: not hits, not a build that throws") {
+    val key = freshKey()
+    val builds0 = ArtifactMemo.builds
+    intercept[IllegalStateException] {
+      ArtifactMemo.once[Int]("spec-count", key)(throw new IllegalStateException("fails"))
+    }
+    assert(ArtifactMemo.builds === builds0)
+    assert(ArtifactMemo.once("spec-count", key)(1) === 1)
+    assert(ArtifactMemo.builds === builds0 + 1)
+    assert(ArtifactMemo.once("spec-count", key)(2) === 1)
+    assert(ArtifactMemo.builds === builds0 + 1)
+  }
+
   test("a build that throws is not cached: the next call builds again") {
     val key = freshKey()
     val builds = new AtomicInteger()
