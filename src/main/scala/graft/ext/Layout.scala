@@ -642,7 +642,7 @@ object Layout {
 
   /** Run `body` over the stats manifest riding out the maintenance
     * swap window: LayoutSink.compactStats briefly renames the live dir
-    * aside (live → `stats__old`, folded → live), so a concurrent
+    * aside ([[graft.util.SwapDirs.replace]]), so a concurrent
     * reader can land when the live path is absent — the complete prior
     * copy is at `__old` then, and if the writer finishes the swap
     * mid-read (deleting `__old`) the retry lands on the fresh live
@@ -653,17 +653,16 @@ object Layout {
   private def readStatsResilient[T](spark: SparkSession,
     path: String)(body: DataFrame => T): T = {
     val stats = new org.apache.hadoop.fs.Path(s"$path/stats")
-    val old = new org.apache.hadoop.fs.Path(s"$path/stats__old")
     val fs = stats.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // 8 attempts with a geometric cap (~6.4 s total): a reader that
     // keeps landing in repeated back-to-back fold swaps (per-batch
     // folds under a fast appender) outlasts any realistic swap burst —
     // each swap window is two renames, so the budget covers thousands
-    // of consecutive windows. The __old fallback is RE-CHECKED inside
-    // every attempt (the `target` probe below), including the last.
+    // of consecutive windows. The renamed-aside fallback is RE-CHECKED
+    // inside every attempt (the `target` probe below), including the last.
     var attempt = 0
     while (true) {
-      val target = if (fs.exists(stats) || !fs.exists(old)) stats else old
+      val target = graft.util.SwapDirs.readable(fs, stats)
       try return body(spark.read.parquet(target.toString))
       catch {
         case scala.util.control.NonFatal(e) =>

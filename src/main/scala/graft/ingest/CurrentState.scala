@@ -77,18 +77,14 @@ object CurrentState {
         val spark = batch.sparkSession
         val hPath = new org.apache.hadoop.fs.Path(path)
         val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val merged =
-          if (fs.exists(hPath))
-            latestPerKey(
-              spark.read.parquet(path).unionByName(batch), pkCols, tsCol, tieBreak)
-          else latestPerKey(batch, pkCols, tsCol, tieBreak)
-        val tmp = new org.apache.hadoop.fs.Path(path + "__next")
-        // writing the merge materializes the read of the old table before
-        // the swap deletes it
-        merged.write.mode("overwrite").parquet(tmp.toString)
-        fs.delete(hPath, true)
-        fs.rename(tmp, hPath)
-        ()
+        graft.util.SwapDirs.replace(fs, hPath) { tmp =>
+          val merged =
+            if (fs.exists(hPath))
+              latestPerKey(
+                spark.read.parquet(path).unionByName(batch), pkCols, tsCol, tieBreak)
+            else latestPerKey(batch, pkCols, tsCol, tieBreak)
+          merged.write.mode("overwrite").parquet(tmp.toString)
+        }
       }
       .outputMode("append")
       .option("checkpointLocation", checkpointPath)

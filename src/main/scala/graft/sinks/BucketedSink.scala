@@ -63,42 +63,19 @@ private[sinks] object BucketedSink {
       .start()
 
   /** Compact an appended table back to the canonical one-file-per-bucket
-    * clustered layout and GC the `_batches` markers. The rewrite goes to
-    * a sibling directory first (the write materializes the read of the
-    * old files before the swap deletes them), then swaps via
-    * rename-aside (ADVICE r7 — a delete-then-rename swap had a crash
-    * window that lost the table): the live dir moves to `path__old`,
-    * the rewrite renames into place, and only then is the old copy
-    * deleted — a crash at any step leaves a complete copy, and the next
-    * compact self-heals via [[graft.util.SwapDirs.restoreFromOld]]
-    * (`path__old` if the second rename never ran, `path` otherwise). A
-    * leftover `path__old` beside a complete live table is cleared first. Run BETWEEN streaming runs, not concurrently with
-    * an active writer: the markers only guard foreachBatch retries
-    * within a run (committed batches are already fenced by the
-    * checkpoint), so a quiesced stream loses nothing by their removal. */
+    * clustered layout and GC the `_batches` markers, swapping the rewrite
+    * in through [[graft.util.SwapDirs.replace]]. Run BETWEEN streaming
+    * runs, not concurrently with an active writer: the markers only guard
+    * foreachBatch retries within a run (committed batches are already
+    * fenced by the checkpoint), so a quiesced stream loses nothing by
+    * their removal. */
   def compact(
       spark: SparkSession,
       path: String,
       rewrite: (DataFrame, String) => Unit): Unit = {
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compact")
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
-    // a prior compact crashed between its two renames → the table lives
-    // only at __old; rename it back before reading
-    graft.util.SwapDirs.restoreFromOld(fs, hPath)
-    rewrite(spark.read.parquet(path), tmp.toString)
-    if (fs.exists(old)) fs.delete(old, true)
-    // Hadoop rename signals most failures by RETURNING FALSE, not
-    // throwing; an unchecked false on the first rename would leave the
-    // live dir in place and the second rename would nest the rewrite
-    // INSIDE it (copy-into-dest fallback) — silent corruption. Abort
-    // loudly instead: a failed swap leaves both complete copies.
-    require(fs.rename(hPath, old),
-      s"compact: rename $hPath -> $old failed; table unchanged, rewrite at $tmp")
-    require(fs.rename(tmp, hPath),
-      s"compact: rename $tmp -> $hPath failed; original preserved at $old")
-    fs.delete(old, true)
-    ()
+    graft.util.SwapDirs.replace(fs, hPath)(tmp =>
+      rewrite(spark.read.parquet(path), tmp.toString))
   }
 }

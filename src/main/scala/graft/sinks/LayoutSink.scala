@@ -106,30 +106,18 @@ object LayoutSink {
   /** Fold the stats manifest back to one row per file — min of mins /
     * max of maxes, counts summed: exactly the rows a fresh
     * [[Layout.writeStats]] over the appended data would produce, without
-    * touching a data byte. Crash-safe via the house rename-aside swap
-    * (write beside, rename live → __old, folded → live, drop __old). */
+    * touching a data byte. Swapped in by [[graft.util.SwapDirs.replace]]. */
   def compactStats(spark: SparkSession, path: String): Unit = {
     val meta = metaOf(spark, path)
     val stats = new org.apache.hadoop.fs.Path(s"$path/stats")
     val fs = stats.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.util.SwapDirs.restoreFromOld(fs, stats)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/stats__fold")
-    val old = new org.apache.hadoop.fs.Path(s"$path/stats__old")
-    // writing the fold beside the live manifest materializes the read
-    // before the swap retires it
-    spark.read.parquet(stats.toString)
-      .groupBy(meta.partitionCol)
-      .agg(sum("n").as("n"),
-        min("x_min").as("x_min"), max("x_max").as("x_max"),
-        min("y_min").as("y_min"), max("y_max").as("y_max"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(old)) fs.delete(old, true)
-    require(fs.rename(stats, old),
-      s"compactStats: rename $stats -> $old failed; manifest unchanged")
-    require(fs.rename(tmp, stats),
-      s"compactStats: rename $tmp -> $stats failed; original preserved at $old")
-    fs.delete(old, true)
-    ()
+    graft.util.SwapDirs.replace(fs, stats)(tmp =>
+      spark.read.parquet(stats.toString)
+        .groupBy(meta.partitionCol)
+        .agg(sum("n").as("n"),
+          min("x_min").as("x_min"), max("x_max").as("x_max"),
+          min("y_min").as("y_min"), max("y_max").as("y_max"))
+        .coalesce(1).write.mode("overwrite").parquet(tmp.toString))
   }
 
   /** Checkpointed AvailableNow maintenance run: each micro-batch appends
@@ -169,23 +157,18 @@ object LayoutSink {
 
   /** Re-layout the whole table under FRESH normalization bounds — the
     * OPTIMIZE rerun that resolves edge-cell pile-up from drifted
-    * appends. The rebuild (data + stats + new meta) lands in
-    * `path__next` while the live table stays readable, then swaps at
-    * the table ROOT with the [[BucketedSink.compact]] posture (rename
-    * live → __old, __next → live, both checked, then drop __old — a
-    * crash never leaves less than one complete table). Rows dedup on
-    * `key` so replayed appends are folded in the same pass. */
+    * appends. The rebuild (data + stats + new meta) is swapped in at the
+    * table ROOT by [[graft.util.SwapDirs.replace]], so the live table
+    * stays readable while it is written. Rows dedup on `key` so replayed
+    * appends are folded in the same pass. */
   def recluster(spark: SparkSession, path: String, key: String): Unit = {
-    val meta = metaOf(spark, path) // also heals a crashed prior swap
-    val next = path + "__next"
+    val meta = metaOf(spark, path)
+    val root = new org.apache.hadoop.fs.Path(path)
     val stage = path + "__stage"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // __stage is table-sized derived data: reclaim it on EVERY exit (a
-    // writeClustered error or a failed rename used to leak a complete
-    // deduped copy of the table until the next successful recluster)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // __stage is table-sized derived data: reclaim it on EVERY exit
     try {
-      // the rebuild re-reads the live table while overwriting __next:
+      // the rebuild re-reads the live table while writing the new copy:
       // materialize the deduped read BEFORE any write touches the live
       // files. To a temp parquet directory, not localCheckpoint(true) —
       // an eager block-storage checkpoint of the ENTIRE table was the
@@ -195,31 +178,14 @@ object LayoutSink {
         .drop(meta.partitionCol).dropDuplicates(key)
         .write.mode("overwrite").parquet(stage)
       val all = spark.read.parquet(stage)
-      // a FAILED rebuild write leaves unusable partial garbage at
-      // __next — delete it before rethrowing (a failed RENAME below
-      // deliberately keeps __next: it is complete there, and the
-      // require message points operators at it)
-      try {
+      graft.util.SwapDirs.replace(fs, root) { next =>
         if (meta.curve == "h")
-          Layout.writeClusteredHilbert(
-            all, next, meta.xName, meta.yName, meta.cellBits, meta.cellsPerFile)
+          Layout.writeClusteredHilbert(all, next.toString,
+            meta.xName, meta.yName, meta.cellBits, meta.cellsPerFile)
         else
-          Layout.writeClustered(
-            all, next, meta.xName, meta.yName, meta.cellBits, meta.cellsPerFile)
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          fs.delete(new org.apache.hadoop.fs.Path(next), true)
-          throw e
+          Layout.writeClustered(all, next.toString,
+            meta.xName, meta.yName, meta.cellBits, meta.cellsPerFile)
       }
-      val hPath = new org.apache.hadoop.fs.Path(path)
-      val nPath = new org.apache.hadoop.fs.Path(next)
-      val old = new org.apache.hadoop.fs.Path(path + "__old")
-      if (fs.exists(old)) fs.delete(old, true)
-      require(fs.rename(hPath, old),
-        s"recluster: rename $hPath -> $old failed; table unchanged, rebuild at $next")
-      require(fs.rename(nPath, hPath),
-        s"recluster: rename $next -> $hPath failed; original preserved at $old")
-      fs.delete(old, true)
     } finally {
       fs.delete(new org.apache.hadoop.fs.Path(stage), true)
       invalidateMeta(path)

@@ -50,46 +50,24 @@ object StreamComponents {
     val spark = batch.sparkSession
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a crash between the swap's two renames below leaves the table only
-    // at __old; heal before deciding "missing table = empty graph"
-    graft.util.SwapDirs.restoreFromOld(fs, hPath)
     val newEdges = batchEdges(batch)
-    val merged =
-      if (fs.exists(hPath)) {
-        // star edges: every labeled vertex → its component's min id.
-        // The min vertex's own star is a self-loop (label == id) and is
-        // dropped — its membership survives via the other members'
-        // stars, and components never tracks edgeless singletons.
-        val stars = spark.read.parquet(path)
-          .select(col("user_id").as("doc_a"),
-            col("component_id").as("doc_b"))
-          .where(col("doc_a") =!= col("doc_b"))
-        graft.ext.Dedup.components(stars.unionByName(newEdges))
-      } else graft.ext.Dedup.components(newEdges)
-    val out = merged
-      .select(col("doc_id").as("user_id"), col("cluster_id").as("component_id"))
-    val tmp = new org.apache.hadoop.fs.Path(path + "__next")
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
-    // writing the merge materializes the read of the old table before
-    // the swap retires it
-    out.write.mode("overwrite").parquet(tmp.toString)
-    // BucketedSink.compact posture: a crash never LOSES the table. The
-    // live path is briefly absent between the two renames — a crash
-    // there leaves the data only at __old, which the restoreFromOld at
-    // the top of the next fold renames back before anything could
-    // rebuild from an empty graph. (A delete-then-rename swap had no
-    // such recovery: prior labels silently lost.) Rename live -> __old,
-    // __next -> live (require: Hadoop rename signals failure by
-    // returning false), then drop __old.
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(hPath)) {
-      require(fs.rename(hPath, old),
-        s"foldBatch: rename $hPath -> $old failed; table unchanged, merge at $tmp")
+    graft.util.SwapDirs.replace(fs, hPath) { tmp =>
+      val merged =
+        if (fs.exists(hPath)) {
+          // star edges: every labeled vertex → its component's min id.
+          // The min vertex's own star is a self-loop (label == id) and is
+          // dropped — its membership survives via the other members'
+          // stars, and components never tracks edgeless singletons.
+          val stars = spark.read.parquet(path)
+            .select(col("user_id").as("doc_a"),
+              col("component_id").as("doc_b"))
+            .where(col("doc_a") =!= col("doc_b"))
+          graft.ext.Dedup.components(stars.unionByName(newEdges))
+        } else graft.ext.Dedup.components(newEdges)
+      merged
+        .select(col("doc_id").as("user_id"), col("cluster_id").as("component_id"))
+        .write.mode("overwrite").parquet(tmp.toString)
     }
-    require(fs.rename(tmp, hPath),
-      s"foldBatch: rename $tmp -> $hPath failed; prior table preserved at $old")
-    fs.delete(old, true)
-    ()
   }
 
   /** Streaming maintenance of the component-label table over a CDC

@@ -51,114 +51,97 @@ object StreamTriangles {
     val spark = batch.sparkSession
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a crash between the swap's two renames below leaves the root only
-    // at __old; heal before deciding "missing root = empty state"
-    graft.util.SwapDirs.restoreFromOld(fs, root)
-    val exists = fs.exists(root)
-    val oldEdges =
-      if (exists) spark.read.parquet(s"$path/edges")
-      else spark.emptyDataFrame.select(lit(0L).as("a"), lit(0L).as("b")).limit(0)
-    val oldStats =
-      if (exists) spark.read.parquet(s"$path/stats")
-      else spark.emptyDataFrame
-        .select(lit(0L).as("user_id"), lit(0L).as("degree"),
-          lit(0L).as("triangles")).limit(0)
-    // new edges only: already-present arrivals (and replays of a
-    // completed fold) contribute nothing. Cached — En feeds T1, T2, T3,
-    // the degree delta, and the edge-table merge. Plain persist(), NOT
-    // Dedup.cached: that registry holds a STRONG handle per entry until
-    // releaseAll, which a long-running stream never calls — one leaked
-    // reference per fold, forever. Scoped persist/unpersist on our own
-    // frame is the documented streaming-safe pattern.
-    val en = canonicalEdges(batch)
-      .join(oldEdges, Seq("a", "b"), "left_anti").persist()
-    // old adjacency, both directions (edges are (lo, hi)-canonical)
-    val adjOld = oldEdges.select(col("a").as("v"), col("b").as("w"))
-      .unionAll(oldEdges.select(col("b").as("v"), col("a").as("w")))
-    val degOld = oldStats.select(col("user_id").as("v"), col("degree"))
+    // single root swap: edges + stats land together or not at all
+    graft.util.SwapDirs.replace(fs, root) { tmp =>
+      val exists = fs.exists(root)
+      val oldEdges =
+        if (exists) spark.read.parquet(s"$path/edges")
+        else spark.emptyDataFrame
+          .select(lit(0L).as("a"), lit(0L).as("b")).limit(0)
+      val oldStats =
+        if (exists) spark.read.parquet(s"$path/stats")
+        else spark.emptyDataFrame
+          .select(lit(0L).as("user_id"), lit(0L).as("degree"),
+            lit(0L).as("triangles")).limit(0)
+      // new edges only: already-present arrivals (and replays of a
+      // completed fold) contribute nothing. Cached — En feeds T1, T2, T3,
+      // the degree delta, and the edge-table merge. Plain persist(), NOT
+      // Dedup.cached: that registry holds a STRONG handle per entry until
+      // releaseAll, which a long-running stream never calls — one leaked
+      // reference per fold, forever. Scoped persist/unpersist on our own
+      // frame is the documented streaming-safe pattern.
+      val en = canonicalEdges(batch)
+        .join(oldEdges, Seq("a", "b"), "left_anti").persist()
+      // old adjacency, both directions (edges are (lo, hi)-canonical)
+      val adjOld = oldEdges.select(col("a").as("v"), col("b").as("w"))
+        .unionAll(oldEdges.select(col("b").as("v"), col("a").as("w")))
+      val degOld = oldStats.select(col("user_id").as("v"), col("degree"))
 
-    // T1: expand from the lower-degree endpoint (ties → `a`), close
-    // (other, w) against the old edge set. Vertices the state has never
-    // seen have degree 0 via coalesce — nothing to expand.
-    val withDeg = en
-      .join(degOld.select(col("v").as("a"), col("degree").as("deg_a")),
-        Seq("a"), "left")
-      .join(degOld.select(col("v").as("b"), col("degree").as("deg_b")),
-        Seq("b"), "left")
-      .select(col("a"), col("b"),
-        (coalesce(col("deg_a"), lit(0L)) <= coalesce(col("deg_b"), lit(0L)))
-          .as("aFirst"))
-    val probes = withDeg.select(
-      when(col("aFirst"), col("a")).otherwise(col("b")).as("u"),
-      when(col("aFirst"), col("b")).otherwise(col("a")).as("v"))
-    val t1 = probes
-      .join(adjOld.select(col("v").as("u"), col("w")), Seq("u"))
-      .join(oldEdges,
-        least(col("v"), col("w")) === col("a") &&
-          greatest(col("v"), col("w")) === col("b"),
-        "left_semi")
-      .select(col("u").as("c1"), col("v").as("c2"), col("w").as("c3"))
+      // T1: expand from the lower-degree endpoint (ties → `a`), close
+      // (other, w) against the old edge set. Vertices the state has never
+      // seen have degree 0 via coalesce — nothing to expand.
+      val withDeg = en
+        .join(degOld.select(col("v").as("a"), col("degree").as("deg_a")),
+          Seq("a"), "left")
+        .join(degOld.select(col("v").as("b"), col("degree").as("deg_b")),
+          Seq("b"), "left")
+        .select(col("a"), col("b"),
+          (coalesce(col("deg_a"), lit(0L)) <= coalesce(col("deg_b"), lit(0L)))
+            .as("aFirst"))
+      val probes = withDeg.select(
+        when(col("aFirst"), col("a")).otherwise(col("b")).as("u"),
+        when(col("aFirst"), col("b")).otherwise(col("a")).as("v"))
+      val t1 = probes
+        .join(adjOld.select(col("v").as("u"), col("w")), Seq("u"))
+        .join(oldEdges,
+          least(col("v"), col("w")) === col("a") &&
+            greatest(col("v"), col("w")) === col("b"),
+          "left_semi")
+        .select(col("u").as("c1"), col("v").as("c2"), col("w").as("c3"))
 
-    // T2: wedges of two new edges at a shared center, closed by an OLD
-    // edge (the closing pair is canonical by n1 < n2)
-    val adjNew = en.select(col("a").as("v"), col("b").as("w"))
-      .unionAll(en.select(col("b").as("v"), col("a").as("w")))
-    val t2 = adjNew.select(col("v").as("c"), col("w").as("n1"))
-      .join(adjNew.select(col("v").as("c"), col("w").as("n2")), Seq("c"))
-      .where(col("n1") < col("n2"))
-      .join(oldEdges,
-        col("n1") === col("a") && col("n2") === col("b"), "left_semi")
-      .select(col("c").as("c1"), col("n1").as("c2"), col("n2").as("c3"))
+      // T2: wedges of two new edges at a shared center, closed by an OLD
+      // edge (the closing pair is canonical by n1 < n2)
+      val adjNew = en.select(col("a").as("v"), col("b").as("w"))
+        .unionAll(en.select(col("b").as("v"), col("a").as("w")))
+      val t2 = adjNew.select(col("v").as("c"), col("w").as("n1"))
+        .join(adjNew.select(col("v").as("c"), col("w").as("n2")), Seq("c"))
+        .where(col("n1") < col("n2"))
+        .join(oldEdges,
+          col("n1") === col("a") && col("n2") === col("b"), "left_semi")
+        .select(col("c").as("c1"), col("n1").as("c2"), col("n2").as("c3"))
 
-    // T3: triangles entirely inside the micro-batch (micro-batch-sized
-    // frames — plain wedge enumeration; n1 < n2 keys the canonical set)
-    val t3 = adjNew.select(col("v").as("c"), col("w").as("n1"))
-      .join(adjNew.select(col("v").as("c"), col("w").as("n2")), Seq("c"))
-      .where(col("n1") < col("n2") && col("c") < col("n1"))
-      .join(en,
-        col("n1") === col("a") && col("n2") === col("b"), "left_semi")
-      .select(col("c").as("c1"), col("n1").as("c2"), col("n2").as("c3"))
+      // T3: triangles entirely inside the micro-batch (micro-batch-sized
+      // frames — plain wedge enumeration; n1 < n2 keys the canonical set)
+      val t3 = adjNew.select(col("v").as("c"), col("w").as("n1"))
+        .join(adjNew.select(col("v").as("c"), col("w").as("n2")), Seq("c"))
+        .where(col("n1") < col("n2") && col("c") < col("n1"))
+        .join(en,
+          col("n1") === col("a") && col("n2") === col("b"), "left_semi")
+        .select(col("c").as("c1"), col("n1").as("c2"), col("n2").as("c3"))
 
-    val corners = t1.unionAll(t2).unionAll(t3)
-    val triDelta = corners.select(col("c1").as("user_id"))
-      .unionAll(corners.select(col("c2").as("user_id")))
-      .unionAll(corners.select(col("c3").as("user_id")))
-      .groupBy("user_id").agg(count(lit(1)).as("d_tri"))
-    val degDelta = en.select(col("a").as("user_id"))
-      .unionAll(en.select(col("b").as("user_id")))
-      .groupBy("user_id").agg(count(lit(1)).as("d_deg"))
+      val corners = t1.unionAll(t2).unionAll(t3)
+      val triDelta = corners.select(col("c1").as("user_id"))
+        .unionAll(corners.select(col("c2").as("user_id")))
+        .unionAll(corners.select(col("c3").as("user_id")))
+        .groupBy("user_id").agg(count(lit(1)).as("d_tri"))
+      val degDelta = en.select(col("a").as("user_id"))
+        .unionAll(en.select(col("b").as("user_id")))
+        .groupBy("user_id").agg(count(lit(1)).as("d_deg"))
 
-    val merged = oldStats
-      .join(degDelta, Seq("user_id"), "full_outer")
-      .join(triDelta, Seq("user_id"), "full_outer")
-      .select(col("user_id"),
-        (coalesce(col("degree"), lit(0L)) + coalesce(col("d_deg"), lit(0L)))
-          .as("degree"),
-        (coalesce(col("triangles"), lit(0L)) + coalesce(col("d_tri"), lit(0L)))
-          .as("triangles"))
-    val newEdges = oldEdges.unionByName(en)
+      val merged = oldStats
+        .join(degDelta, Seq("user_id"), "full_outer")
+        .join(triDelta, Seq("user_id"), "full_outer")
+        .select(col("user_id"),
+          (coalesce(col("degree"), lit(0L)) + coalesce(col("d_deg"), lit(0L)))
+            .as("degree"),
+          (coalesce(col("triangles"), lit(0L)) + coalesce(col("d_tri"), lit(0L)))
+            .as("triangles"))
+      val newEdges = oldEdges.unionByName(en)
 
-    // single root swap: edges + stats land together or not at all.
-    // BucketedSink.compact posture — a crash never loses the root (the
-    // brief live-absent window between the renames is healed by the
-    // restoreFromOld at the top of the next fold): rename live -> __old,
-    // __next -> live (require: Hadoop rename signals failure by
-    // returning false), then drop __old.
-    val tmp = new org.apache.hadoop.fs.Path(path + "__next")
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
-    fs.delete(tmp, true)
-    newEdges.write.parquet(s"$tmp/edges")
-    merged.write.parquet(s"$tmp/stats")
-    en.unpersist()
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(root)) {
-      require(fs.rename(root, old),
-        s"foldBatch: rename $root -> $old failed; table unchanged, fold at $tmp")
+      newEdges.write.parquet(s"$tmp/edges")
+      merged.write.parquet(s"$tmp/stats")
+      en.unpersist()
     }
-    require(fs.rename(tmp, root),
-      s"foldBatch: rename $tmp -> $root failed; prior table preserved at $old")
-    fs.delete(old, true)
-    ()
   }
 
   /** Streaming maintenance over a CDC follower stream. */

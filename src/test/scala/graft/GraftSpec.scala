@@ -61,4 +61,16 @@ class GraftSpec extends SparkSuite {
     assert(spark.sql("SELECT count(*) FROM likes_cdc WHERE __op = 'c'")
       .collect().head.getLong(0) > 0)
   }
+
+  test("only SwapDirs renames directories: every table swap goes through " +
+      "SwapDirs.replace") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main")
+    val renaming = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(f => new String(java.nio.file.Files.readAllBytes(f),
+        java.nio.charset.StandardCharsets.UTF_8).contains(".rename("))
+      .map(root.relativize(_).toString).toSet
+    assert(renaming === Set("scala/graft/util/SwapDirs.scala"))
+  }
 }

@@ -69,4 +69,28 @@ class CurrentStateSpec extends SparkSuite {
     // tombstone for pk 2 retained in the underlying table
     assert(spark.read.parquet(path).count() === 3)
   }
+
+  test("a fold after a crash between the swap's renames keeps every " +
+      "earlier key") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Long, String, Long, String)]
+    val path = tmpDir("graft_curstate_crash") + "/state"
+    val ckpt = tmpDir("graft_curstate_crash_ckpt")
+    def run() = CurrentState.runCurrentStateTable(
+      mem.toDF().toDF("pk", "__op", "__source_ts_ms", "payload"),
+      path, ckpt, Seq("pk")).awaitTermination()
+
+    mem.addData((1L, "c", 100L, "a"), (2L, "c", 100L, "b"))
+    run()
+    // the crash window: live renamed aside, second rename never ran
+    val live = new org.apache.hadoop.fs.Path(path)
+    val old = new org.apache.hadoop.fs.Path(path + "__old")
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(live, old))
+    mem.addData((3L, "c", 200L, "c"))
+    run()
+    assert(CurrentState.readCurrentState(spark, path)
+      .select("pk").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
+    assert(!fs.exists(old))
+  }
 }

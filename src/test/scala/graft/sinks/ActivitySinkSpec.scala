@@ -92,7 +92,11 @@ class ActivitySinkSpec extends SparkSuite {
       s"${compactBreaks.size} of $compacted compacted files out of clustering order")
   }
 
-  test("compact restores one-file-per-bucket and GCs batch markers") {
+  // crashed: the table is left only at __old by a swap that crashed
+  // between its renames
+  for (crashed <- Seq(false, true)) test(
+      "compact restores one-file-per-bucket and GCs batch markers" +
+        (if (crashed) ", from a table left only at __old" else "")) {
     val path = tmpDir("graft_compact") + "/activity"
     val activity = ActivitySink.materialized(spark, "/root/testdata/sf0.001")
       .drop("user_bucket")
@@ -115,6 +119,9 @@ class ActivitySinkSpec extends SparkSuite {
     val before = spark.read.parquet(path)
       .orderBy("activity_type", "activity_pk").collect()
 
+    // the crash window: live renamed aside, second rename never ran
+    if (crashed) assert(fs.rename(new org.apache.hadoop.fs.Path(path),
+      new org.apache.hadoop.fs.Path(path + "__old")))
     ActivitySink.compact(spark, path, buckets = 8)
 
     val files = bucketFiles()
@@ -124,6 +131,7 @@ class ActivitySinkSpec extends SparkSuite {
     val after = spark.read.parquet(path)
       .orderBy("activity_type", "activity_pk").collect()
     assert(after.toSeq === before.toSeq) // identical reads
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__old")))
     // pruning still works: bucket column consistent with the hash
     val bad = spark.read.parquet(path).where(
       col("user_bucket") =!= pmod(hash(col("user_id")), lit(8)))
