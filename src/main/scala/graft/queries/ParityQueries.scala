@@ -546,8 +546,10 @@ ORDER BY tbl, pk""")))
 
   /** The follow-graph CTE block both influence oracles share (twin of
     * `Influence.followGraph`), and the per-round spill/contrib kernel
-    * (twin of `Influence.spillOf`/`contribOf`) — one definition, so an
-    * integer-discipline fix cannot leave a variant behind.
+    * (twin of a round of `Influence.iterate`: the spill over the previous
+    * state, the dst-keyed sum of `pr div outdeg` shares) — one
+    * definition, so an integer-discipline fix cannot leave a variant
+    * behind.
     * MATERIALIZED — each round references the previous state twice
     * (spill + contributions), so inlined CTEs would expand
     * exponentially (the BPE-oracle lesson). */

@@ -1,7 +1,7 @@
 package graft.serve
 
 import graft.ext.Dedup
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** PageRank-style influence over the follower graph — the feed domain's
@@ -13,91 +13,85 @@ import org.apache.spark.sql.functions._
   *
   * EXACT INTEGER ARITHMETIC: rank is carried as BIGINT micro-units of
   * probability mass (total [[Mass]] = 10¹²), every per-edge share is an
-  * integer `div`, and dangling + division-remainder mass is redistributed
-  * uniformly (its own remainder dropped — deterministically). No doubles
+  * integer `div`, and dangling + division-remainder mass (the spill) is
+  * redistributed, its own remainder dropped deterministically. No doubles
   * anywhere, so sums are order-free under any partitioning and the DuckDB
-  * oracle replays the identical iterations as unrolled MATERIALIZED CTEs
-  * — the same discipline the LM gate gets from decimals, taken all the
-  * way to exactness. Damping 85/100 in the same integer form.
+  * oracle replays the identical iterations as unrolled MATERIALIZED CTEs.
+  * Damping 85/100 in the same integer form.
   *
-  * Scale: per iteration, one edge×rank hash-join (skinny: two id strings
-  * + two longs) and one dst-keyed sum — the canonical distributed
-  * PageRank shape; the spill aggregate collects ONE long to the driver
-  * per iteration (the `components`/BPE loop pattern), and rank lineage is
-  * checkpoint-truncated every round (two actions per round read the
-  * state, so a lazy chain re-executes multiplicatively — see the loop
-  * comment). Nothing corpus-global; the edge frame is built once and
-  * checkpointed. */
+  * Scale: the rank state `(id, dsts, outdeg, pr)` carries each node's
+  * adjacency — MapReduce PageRank passes the graph structure along with
+  * the rank (Lin & Dyer, ch. 5). A round is `explode(dsts)` into per-edge
+  * shares, unioned with each node's own row, and ONE id-keyed aggregate:
+  * no join, no broadcast. Its result is an eager `localCheckpoint` whose
+  * materializing job also observes the next round's spill, which enters
+  * that round as a literal — so a round is exactly two Spark jobs (the
+  * shuffle, the checkpoint). The node count and the default source are
+  * observed the same way on the graph's one materialization. */
 object Influence {
 
   /** Total probability mass, in micro-units. */
   val Mass = 1000000000000L
 
-  /** The static frames every PageRank variant iterates over, each built
-    * once and lineage-truncated so no round re-runs the CDC parse →
-    * distinct → aggregate pipeline (the spill join reads outdeg every
-    * iteration). */
-  private final case class FollowGraph(
-      nodes: DataFrame, outdeg: DataFrame, ewd: DataFrame)
+  /** Eager lineage-truncating checkpoint of `df`, plus the scalars
+    * `metrics` observed by that same materializing job. */
+  private def fenced(df: DataFrame, metrics: Column*): (DataFrame, Map[String, Any]) = {
+    val obs = Observation()
+    val cp = Dedup.checkpointed(df.observe(obs, metrics.head, metrics.tail: _*))
+    (cp, obs.get)
+  }
 
-  private def followGraph(followers: DataFrame): FollowGraph = {
+  /** `(id, dsts, outdeg)` per node of the creates-only, self-loop-free
+    * follow graph, `collect_set` doing the edge dedup. `outdeg` is null for
+    * a dangling node, never 0: `pr div outdeg` may be evaluated below the
+    * `explode`. Observed: node count `n`, `min_id`, and `probe_hits`, the
+    * nodes equal to `probe`. */
+  private def followGraph(followers: DataFrame, probe: Option[String]) = {
     val edges = followers.where(col("__op") === "c")
-      .select(col("follower_id").as("src"), col("following_id").as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-    val nodes = Dedup.checkpointed(
-      edges.select(col("src").as("id"))
-        .union(edges.select(col("dst").as("id"))).distinct())
-    val outdeg = Dedup.checkpointed(
-      edges.groupBy("src").agg(count(lit(1)).as("outdeg")))
-    FollowGraph(nodes, outdeg,
-      Dedup.checkpointed(edges.join(outdeg, "src")))
+      .select(col("follower_id").as("id"), col("following_id").as("dst"))
+      .where(col("id") =!= col("dst"))
+    fenced(
+      edges.union(edges.select(col("dst"), lit(null).cast("string")))
+        .groupBy("id").agg(collect_set("dst").as("dsts"))
+        .withColumn("outdeg", nullif(size(col("dsts")), lit(0)).cast("long")),
+      count(lit(1)).as("n"), min("id").as("min_id"),
+      count_if(col("id") === lit(probe.orNull)).as("probe_hits"))
+  }
+
+  /** (user_id, pr_units) after `iterations` rounds from `pr0`, each giving
+    * a node `teleport + (85 * (contrib + extra(spill))) div 100`, where
+    * `spill` sums the previous state's dangling mass and remainders. */
+  private def iterate(graph: DataFrame, iterations: Int, pr0: Column,
+      teleport: Column, extra: Long => Column): DataFrame = {
+    val spillOf = sum(when(col("outdeg").isNull, col("pr"))
+      .otherwise(col("pr") % col("outdeg"))).as("spill")
+    def round(s: DataFrame, spill: Long): DataFrame =
+      s.select(explode(col("dsts")).as("id"), expr("pr div outdeg").as("share"),
+          lit(null).cast("array<string>").as("dsts"), lit(null).cast("long").as("outdeg"))
+        .unionByName(s.select(col("id"), lit(0L).as("share"), col("dsts"), col("outdeg")))
+        .groupBy("id").agg(sum("share").as("contrib"),
+          first("dsts", ignoreNulls = true).as("dsts"), max("outdeg").as("outdeg"))
+        .select(col("*"), teleport.as("t"), extra(spill).as("x"))
+        .select(col("id"), col("dsts"), col("outdeg"),
+          expr("t + (85 * (contrib + x)) div 100").as("pr"))
+    var (pr, obs) = fenced(graph.withColumn("pr", pr0), spillOf)
+    // a null spill is an empty graph's: no round to run
+    for (it <- 1 to iterations if obs("spill") != null) {
+      pr = round(pr, obs("spill").asInstanceOf[Long])
+      if (it < iterations) { val f = fenced(pr, spillOf); pr = f._1; obs = f._2 }
+    }
+    pr.select(col("id").as("user_id"), col("pr").as("pr_units")).orderBy("user_id")
   }
 
   /** (user_id, pr_units) after `iterations` damped rounds, one row per
-    * node of the creates-only, self-loop-free, deduplicated follow graph.
-    * `followers` is the CDC branch frame ([[graft.sources.CdcSource]]). */
-  /** One damped round's shared frames — THE integer-discipline kernel
-    * both variants (and their DuckDB twins) must agree on: spill =
-    * dangling mass + per-node division remainders (a broadcast
-    * single-row aggregate, kept IN-PLAN so each round is exactly ONE
-    * Spark job — a driver-collected scalar doubled the per-round job
-    * count for no informational gain); contrib = dst-keyed sum of
-    * integer-divided shares. */
-  private def spillOf(pr: DataFrame, outdeg: DataFrame): DataFrame =
-    pr.join(outdeg, pr("id") === outdeg("src"), "left")
-      .agg(coalesce(sum(when(col("outdeg").isNull, col("pr"))
-        .otherwise(expr("pr % outdeg"))), lit(0L)).as("spill"))
-
-  private def contribOf(ewd: DataFrame, pr: DataFrame): DataFrame =
-    ewd.join(pr, ewd("src") === pr("id"))
-      .select(col("dst"), expr("pr div outdeg").as("share"))
-      .groupBy("dst").agg(sum("share").as("contrib"))
-
+    * node of the creates-only, self-loop-free, deduplicated follow graph;
+    * teleport and spill spread uniformly (`div n`). `followers` is the
+    * CDC branch frame ([[graft.sources.CdcSource]]). */
   def pageRank(followers: DataFrame, iterations: Int = 10): DataFrame = {
-    val FollowGraph(nodes, outdeg, ewd) = followGraph(followers)
-    val n = nodes.count()
-    if (n == 0)
-      return nodes.select(col("id").as("user_id"), col("id").cast("long").as("pr_units"))
-    val baseUnit = (Mass * 15L / 100L) / n
-    // the rank state is checkpointed EVERY round: each round runs two
-    // actions (the spill scalar + the next-state materialization), and a
-    // lazy chain would re-execute every round since the last truncation
-    // inside each spill aggregate — measured 7.2 s → ~2 s at sf0.1 for
-    // the same 10 iterations
-    var pr = Dedup.checkpointed(
-      nodes.select(col("id"), lit(Mass / n).as("pr")))
-    for (it <- 1 to iterations) {
-      val next = nodes
-        .join(contribOf(ewd, pr), nodes("id") === col("dst"), "left")
-        .crossJoin(broadcast(spillOf(pr, outdeg)))
-        .select(col("id"),
-          expr(s"$baseUnit + (85 * (coalesce(contrib, 0) + spill div $n)) div 100")
-            .as("pr"))
-      pr = if (it < iterations) Dedup.checkpointed(next) else next
-    }
-    pr.select(col("id").as("user_id"), col("pr").as("pr_units"))
-      .orderBy("user_id")
+    val (graph, stats) = followGraph(followers, None)
+    val n = stats("n").asInstanceOf[Long] max 1L // an empty graph runs no round
+    iterate(graph, iterations, lit(Mass / n),
+      lit((Mass * 15L / 100L) / n), spill => lit(spill / n))
   }
 
   /** Personalized PageRank: the teleport mass returns to ONE source user
@@ -105,59 +99,26 @@ object Influence {
     * walk restarting at `source` is here", i.e. the per-user
     * recommendation signal a feed serves (global [[pageRank]] answers
     * "who matters overall"; this answers "who matters TO this user").
+    * Teleport (15 % of [[Mass]]) and spill both go to the source — no
+    * divide-by-n, so the only dropped remainders are the `div 100` ones.
+    * The walk starts with all mass at the source.
     *
-    * The integer discipline gets SIMPLER than the uniform variant: the
-    * teleport term (15 % of [[Mass]]) and the spill (dangling mass +
-    * division remainders) both go entirely to the source node — no
-    * divide-by-n anywhere, so the only dropped remainders are the final
-    * `div 100` damping ones, same as uniform. Initial state: all mass at
-    * the source (the walk starts there).
-    *
-    * `source` = None picks the lexicographic min node id in-plan (the
-    * deterministic fixture-independent choice the registered query uses
-    * — a broadcast single-row aggregate, no driver collect); pass
-    * Some(userId) to serve a specific user.
-    *
-    * Scale: identical per-round shape to [[pageRank]] — one skinny
-    * edge⋈rank join + dst-keyed sum + two broadcast single-row frames;
-    * rank checkpointed every round. */
+    * `source` = None picks the lexicographic min node id (the registered
+    * query's deterministic choice); Some(userId) serves a specific user.
+    * Either is bound as a literal. */
   def personalizedPageRank(
       followers: DataFrame,
       source: Option[String] = None,
       iterations: Int = 10): DataFrame = {
-    val FollowGraph(nodes, outdeg, ewd) = followGraph(followers)
+    val (graph, stats) = followGraph(followers, source)
     // An explicit source absent from the graph would silently drain ALL
-    // mass (teleport and spill target a node no edge reaches, so every
-    // rank decays to 0 with no error — ADVICE r7). Fail fast instead:
-    // one limit-1 lookup on the node frame, the same bounded-driver-
-    // action class as the loop's own convergence reads.
+    // mass (teleport and spill target a node no edge reaches — ADVICE r7).
     source.foreach { s =>
-      require(!nodes.where(col("id") === s).limit(1).isEmpty,
+      require(stats("probe_hits").asInstanceOf[Long] > 0,
         s"personalizedPageRank source '$s' is not a node of the follow graph")
     }
-    val srcF = source match {
-      case Some(s) => nodes.sparkSession.range(1).select(lit(s).as("src_id"))
-      case None => nodes.agg(min(col("id")).as("src_id"))
-    }
-    val teleport = Mass * 15L / 100L
-    var pr = Dedup.checkpointed(
-      nodes.crossJoin(broadcast(srcF))
-        .select(col("id"),
-          when(col("id") === col("src_id"), lit(Mass))
-            .otherwise(lit(0L)).as("pr")))
-    for (it <- 1 to iterations) {
-      val next = nodes
-        .join(contribOf(ewd, pr), nodes("id") === col("dst"), "left")
-        .crossJoin(broadcast(spillOf(pr, outdeg)))
-        .crossJoin(broadcast(srcF))
-        .select(col("id"),
-          expr(s"CASE WHEN id = src_id THEN ${teleport}L ELSE 0L END" +
-            " + (85 * (coalesce(contrib, 0L)" +
-            " + CASE WHEN id = src_id THEN spill ELSE 0L END)) div 100")
-            .as("pr"))
-      pr = if (it < iterations) Dedup.checkpointed(next) else next
-    }
-    pr.select(col("id").as("user_id"), col("pr").as("pr_units"))
-      .orderBy("user_id")
+    val isSrc = col("id") === lit(source.getOrElse(stats("min_id").asInstanceOf[String]))
+    iterate(graph, iterations, when(isSrc, Mass).otherwise(0L),
+      when(isSrc, Mass * 15L / 100L).otherwise(0L), when(isSrc, _).otherwise(0L))
   }
 }

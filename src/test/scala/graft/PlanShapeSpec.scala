@@ -113,34 +113,10 @@ class PlanShapeSpec extends SparkSuite {
 
   test("feed_page_materialized: one served page is exactly two Spark jobs") {
     val (table, edges, reader) = served
-    val sc = spark.sparkContext
-    val (page, fence) = ("plan-shape-page", "plan-shape-fence")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val fenced = new java.util.concurrent.CountDownLatch(1)
-    // listener events arrive in post order: once the fence job's start is
-    // seen, every job the page started has been counted
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`page`) => jobs.incrementAndGet()
-          case Some(`fence`) => fenced.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(page, page)
-      val rows = servePage(table, edges, reader).collect()
-      sc.setJobGroup(fence, fence)
-      sc.parallelize(Seq(1), 1).count()
-      assert(fenced.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      assert(rows.nonEmpty)
-      // the follow-set collect, then the page scan
-      assert(jobs.get === 2)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val (rows, jobs) = withJobCount(servePage(table, edges, reader).collect())
+    assert(rows.nonEmpty)
+    // the follow-set collect, then the page scan
+    assert(jobs === 2)
   }
 
   test("events_session_attribution: range join plans as equi-join, not BNL") {
@@ -350,11 +326,33 @@ class PlanShapeSpec extends SparkSuite {
       "totals frame is a single-row broadcast")
   }
 
-  test("feed_influence contribution round: edge-rank joins are " +
-      "equi-joins; spill is a broadcast single row") {
-    val p = plan("feed_influence")
-    assert(p.contains("BroadcastExchange"))
-    assert(!p.contains("CartesianProduct"))
+  private lazy val followers = graft.sources.CdcSource.followers(
+    graft.sources.CdcSource.events(spark, d))
+
+  test("a PageRank round is exactly two Spark jobs") {
+    // one round more is one id-keyed shuffle plus one eager checkpoint
+    // that also observes the next spill; both variants
+    val variants = Seq[Int => DataFrame](
+      k => graft.serve.Influence.pageRank(followers, iterations = k),
+      k => graft.serve.Influence.personalizedPageRank(followers, iterations = k))
+    for (pr <- variants) {
+      def jobs(k: Int): Int =
+        try withJobCount(pr(k).collect())._2 finally graft.ext.Dedup.releaseAll()
+      jobs(2) // warm: the fixture's schema and codegen cache
+      assert(jobs(3) - jobs(2) === 2)
+    }
+  }
+
+  test("a PageRank round's plan: no join, broadcast or cartesian") {
+    // the plan is the last round over the checkpointed previous state
+    for (q <- Seq("feed_influence", "feed_influence_personalized")) {
+      val p = plan(q)
+      graft.ext.Dedup.releaseAll()
+      assert(p.contains("Generate"), q)
+      assert(!p.contains("Join"), q)
+      assert(!p.contains("Broadcast"), q)
+      assert(!p.contains("CartesianProduct"), q)
+    }
   }
 
   test("corpus_split: the doc-sized rank path is the range-partitioned " +

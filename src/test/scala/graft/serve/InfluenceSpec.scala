@@ -106,6 +106,61 @@ class InfluenceSpec extends SparkSuite {
     assert(fromX("a") === 0L && fromX("b") === 0L && fromX("c") === 0L)
   }
 
+  /** Plain-Scala driver reference of the integer recurrence: Long
+    * arithmetic, round r's spill taken from state r-1, `div 100` damping.
+    * `personalized` sends teleport and spill to the min node id instead
+    * of spreading them `div n`. */
+  private def reference(
+      ops: Seq[(String, String, String)], iterations: Int,
+      personalized: Boolean): Map[String, Long] = {
+    val edges = ops.collect { case (a, b, "c") if a != b => (a, b) }.distinct
+    val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct
+    if (nodes.isEmpty) return Map.empty
+    val n = nodes.size.toLong
+    val outdeg = edges.groupBy(_._1).map { case (s, es) => s -> es.size.toLong }
+    val src = nodes.min
+    def teleport(id: String): Long =
+      if (!personalized) (M * 15L / 100L) / n else if (id == src) M * 15L / 100L else 0L
+    def extra(id: String, spill: Long): Long =
+      if (!personalized) spill / n else if (id == src) spill else 0L
+    var pr: Map[String, Long] = nodes.map(id =>
+      id -> (if (!personalized) M / n else if (id == src) M else 0L)).toMap
+    for (_ <- 1 to iterations) {
+      val spill = nodes.map(id => outdeg.get(id).fold(pr(id))(pr(id) % _)).sum
+      val contrib = edges.groupBy(_._2).map { case (dst, es) =>
+        dst -> es.map { case (s, _) => pr(s) / outdeg(s) }.sum }
+      pr = nodes.map(id => id ->
+        (teleport(id) + (85L * (contrib.getOrElse(id, 0L) + extra(id, spill))) / 100L)).toMap
+    }
+    pr
+  }
+
+  test("both variants equal the driver-side integer recurrence exactly " +
+      "(dangling node, duplicates, self-loop, non-creates, outdeg-3 remainders)") {
+    // a has outdeg 3 over 5 nodes: M/5 % 3 = 2, so remainders spill from
+    // round 1; e is dangling; the duplicate, self-loop and non-creates
+    // must not count
+    val ops = Seq(
+      ("a", "b", "c"), ("a", "c", "c"), ("a", "d", "c"), ("a", "b", "c"),
+      ("b", "c", "c"), ("c", "a", "c"), ("d", "e", "c"), ("b", "b", "c"),
+      ("e", "a", "u"), ("c", "b", "d"))
+    val g = ops.toDF("follower_id", "following_id", "__op")
+    for (k <- Seq(1, 2, 10)) {
+      val uniform = reference(ops, k, personalized = false)
+      val personal = reference(ops, k, personalized = true)
+      assert(uniform.keySet === Set("a", "b", "c", "d", "e"))
+      assert(rankMap(Influence.pageRank(g, iterations = k)) === uniform, s"k=$k")
+      assert(rankMap(Influence.personalizedPageRank(g, iterations = k)) === personal, s"k=$k")
+    }
+  }
+
+  test("an empty follow set ranks no one, in both variants") {
+    val none = followersOf()
+    assert(reference(Seq.empty, 10, personalized = false).isEmpty)
+    assert(rankMap(Influence.pageRank(none)).isEmpty)
+    assert(rankMap(Influence.personalizedPageRank(none)).isEmpty)
+  }
+
   test("personalized PageRank fails fast on a source absent from the " +
       "graph (ADVICE r7: it previously drained all mass silently)") {
     val g = followersOf("a" -> "b")

@@ -104,7 +104,21 @@ class FormatsSpec extends SparkSuite {
       val got = loaded.orderBy("user_id")
         .select(expr("unix_micros(ts)")).as[Long].collect().toSeq
       assert(got === micros, s"dir=$dir") // user_id preserves insertion order
+      // the schema is resolved once: a later read builds its frame jobless
+      val (again, jobs) = withJobCount(Tables(spark, dir, "events"))
+      assert(jobs === 0, s"dir=$dir")
+      assert(again.schema === loaded.schema, s"dir=$dir")
     }
+  }
+
+  test("a table rewritten in place is read with its new schema") {
+    val dir = tmpDir("fmt_rewrite")
+    Seq(1L, 2L).toDF("a").write.parquet(s"$dir/t.parquet")
+    assert(Tables(spark, dir, "t").columns.toSeq === Seq("a"))
+    Seq((3L, "x")).toDF("a", "b").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val back = Tables(spark, dir, "t")
+    assert(back.columns.toSeq === Seq("a", "b"))
+    assert(back.as[(Long, String)].collect().toSeq === Seq((3L, "x")))
   }
 
   test("kafka-frame shape: value-bytes -> envelope -> adapter round trip") {
