@@ -14,7 +14,7 @@ object PlanDump {
     val suffix = args(1)
     val sf = "/root/testdata/sf0.01"
     new java.io.File(outDir).mkdirs()
-    for (q <- args.drop(2)) {
+    for (q <- args.drop(2)) graft.util.Fence.scope {
       val df = graft.SparkEntry.queries(q)(spark, sf)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
@@ -22,7 +22,6 @@ object PlanDump {
         java.nio.file.Paths.get(outDir, s"${q}_$suffix.txt"),
         txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       println(s"dumped $q")
-      graft.ext.Dedup.releaseAll()
     }
     spark.stop()
   }

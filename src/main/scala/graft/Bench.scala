@@ -59,12 +59,12 @@ object Bench {
     * queries, so its seconds stay diffable. `prebuilt` marks a call that
     * succeeded but built no memo cell (an earlier pass over the same
     * fixture built them): its seconds time a memo hit, not a build. */
-  def warmArtifacts(spark: SparkSession, sfDir: String): Seq[(String, Double, Boolean)] = {
-    val builds = artifacts.map { case (label, build) =>
+  def warmArtifacts(spark: SparkSession, sfDir: String): Seq[(String, Double, Boolean)] =
+    artifacts.map { case (label, build) =>
       val builds0 = graft.util.ArtifactMemo.builds
       val t0 = System.nanoTime()
       try {
-        build(spark, sfDir)
+        graft.util.Fence.scope(build(spark, sfDir))
         (label, (System.nanoTime() - t0) / 1e9, graft.util.ArtifactMemo.builds == builds0)
       } catch {
         case e: Throwable =>
@@ -72,9 +72,6 @@ object Bench {
           (label, -1.0, false)
       }
     }
-    graft.ext.Dedup.releaseAll()
-    builds
-  }
 
   /** Extract the per-query map from a committed bench_queries.json.
     * Regex-parsed — no JSON lib on the classpath, and the format is this
@@ -138,16 +135,14 @@ object Bench {
 
     def force(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
+      // each query pays its own cache-build cost inside the timed region
+      // and its scope leaves no blocks behind for the next one
+      try graft.util.Fence.scope(SparkEntry.queries(name)(spark, dir)
+        .write.format("noop").mode("overwrite").save())
       catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           return -1.0
-      } finally {
-        // each query pays its own cache-build cost inside the timed region
-        // and leaves no blocks behind for the next one
-        graft.ext.Dedup.releaseAll()
       }
       (System.nanoTime() - t0) / 1e9
     }

@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Local timing harness for individual registered queries — Bench's
-  * timed region (noop write + releaseAll between queries) over an
+  * timed region (noop write, one fence scope per query) over an
   * explicit subset, with the same sf0.001 warm-up, so a single query's
   * plan change can be measured without a full 180-query run.
   * Usage: runMain graft.BenchSubset <sfDir> <queryName>...
@@ -44,16 +44,14 @@ object BenchSubset {
     // the same one-time artifact builds Bench performs outside the timed
     // region, so memo-served queries measure serving, not building
     Bench.warmArtifacts(spark, dir)
-    for (n <- args.drop(1)) { // warm-up, untimed
-      SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")
-        .write.format("noop").mode("overwrite").save()
-      graft.ext.Dedup.releaseAll()
-    }
-    for (n <- args.drop(1)) {
-      val t0 = System.nanoTime()
+    def force(n: String, dir: String): Unit = graft.util.Fence.scope {
       SparkEntry.queries(n)(spark, dir)
         .write.format("noop").mode("overwrite").save()
-      graft.ext.Dedup.releaseAll()
+    }
+    for (n <- args.drop(1)) force(n, "/root/testdata/sf0.001") // warm-up, untimed
+    for (n <- args.drop(1)) {
+      val t0 = System.nanoTime()
+      force(n, dir)
       println(f"TIMED $n ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     spark.stop()

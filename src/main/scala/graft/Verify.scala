@@ -33,32 +33,19 @@ object Verify {
     // err rows). Collect per-query messages and write errors.json beside
     // oracle_sql.json so a regression shows up as an explicit failure.
     val errors = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    // The retry below hides a transient failure; retried.json keeps each
-    // retried query's first error so the race stays visible.
-    val retried = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    def describe(e: Throwable): String =
-      s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
+    // Each query runs in its own fence scope, so one query's release can
+    // never drop another in-flight query's blocks (graft.util.Fence).
     val futures = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
       scala.concurrent.Future {
-        def runOnce(): Unit =
+        try graft.util.Fence.scope {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
-        try runOnce()
-        catch { case first: Throwable =>
-          // one retry: with 8 queries sharing a JVM, a concurrent
-          // eviction/cleanup race can lose a cached or checkpointed
-          // block transiently; a DETERMINISTIC failure fails twice and
-          // still lands in errors.json
-          System.err.println(
-            s"[verify] $name failed (${first.getMessage}); retrying once")
-          retried.put(name, describe(first))
-          try runOnce()
-          catch { case e: Throwable =>
-            System.err.println(s"[verify] $name failed: ${e.getMessage}")
-            errors.put(name, describe(e))
-          }
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          errors.put(name,
+            s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}")
         }
       }
     }
@@ -82,16 +69,14 @@ object Verify {
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Both always written (empty object when clean) so absence vs
-    // emptiness is itself a signal: errors.json has one entry per failed
-    // query, retried.json one per retried query with its first error.
-    def mapJson(m: java.util.Map[String, String]): String = {
+    // Always written (empty object when clean) so absence vs emptiness is
+    // itself a signal: one entry per failed query.
+    val errorsJson = {
       import scala.jdk.CollectionConverters._
-      m.asScala.toSeq.sortBy(_._1)
+      errors.asScala.toSeq.sortBy(_._1)
         .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     }
-    Files.writeString(Paths.get(s"$outDir/errors.json"), mapJson(errors))
-    Files.writeString(Paths.get(s"$outDir/retried.json"), mapJson(retried))
+    Files.writeString(Paths.get(s"$outDir/errors.json"), errorsJson)
     spark.stop()
   }
 }

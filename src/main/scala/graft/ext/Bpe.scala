@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.util.Fence
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -21,7 +22,7 @@ import org.apache.spark.sql.functions._
   *  - The loop is driver-paced like [[Dedup.components]]: one tiny
   *    aggregate job per round (the arg-max pair — a LIMIT 1 collect,
   *    same footprint as components' convergence sum), with the state
-  *    lineage truncated through [[Dedup.checkpointed]] every
+  *    lineage truncated through [[Fence.checkpointed]] every
   *    `checkpointEvery` rounds so round r never replans rounds 1..r-1.
   *
   * Determinism: pair counts are exact longs; the winning pair is the max
@@ -177,7 +178,7 @@ object Bpe {
       batchSize: Int = 8,
       mode: BatchMode = BatchMode.Exact): LearnResult = {
     require(batchSize >= 1, "batchSize must be >= 1")
-    var state = Dedup.checkpointed(
+    var state = Fence.checkpointed(
       wordCounts(docs)
         .select(spacedChars(col("w")).as("ws"), col("cnt"))
         .repartition(statePartitions))
@@ -253,7 +254,7 @@ object Bpe {
         state =
           if (sinceCkpt >= checkpointEvery && merges.size < numMerges) {
             sinceCkpt = 0
-            Dedup.checkpointed(next)
+            Fence.checkpointed(next)
           } else next
       }
     }
@@ -288,7 +289,7 @@ object Bpe {
     * arg-max. */
   private[ext] def sequentialValidity(
       docs: DataFrame, merges: Seq[Merge]): Seq[(Merge, Long, Long)] = {
-    var state = Dedup.checkpointed(
+    var state = Fence.checkpointed(
       wordCounts(docs).select(spacedChars(col("w")).as("ws"), col("cnt")))
     merges.map { m =>
       val r = pairCounts(state).agg(
@@ -296,7 +297,7 @@ object Bpe {
         max(when(col("l") === m.left_sym && col("r") === m.right_sym,
           col("n"))).as("act")).head()
       val (pat, rep) = mergePattern(m.left_sym, m.right_sym)
-      state = Dedup.checkpointed(
+      state = Fence.checkpointed(
         state.withColumn("ws", replace(col("ws"), lit(pat), lit(rep))))
       (m, if (r.isNullAt(1)) -1L else r.getLong(1), r.getLong(0))
     }

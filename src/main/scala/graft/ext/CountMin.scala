@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.util.Fence
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -70,9 +71,9 @@ object CountMin {
     requirePow2(width)
     val k = keyed(keys)
     // exact recount feeds the per-key rows AND the total — cache the
-    // key-cardinality-sized frame (scoped registry; released between
-    // queries), one source scan for it + one for the sketch
-    val exact = Dedup.cached(
+    // key-cardinality-sized frame, one source scan for it + one for the
+    // sketch
+    val exact = Fence.cached(
       k.groupBy("key").agg(count(lit(1)).as("exact_n")))
     val total = exact.agg(sum("exact_n").as("n_total"))
     val cells = exact.select(col("key"),

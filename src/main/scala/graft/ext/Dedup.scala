@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.util.Fence
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -27,81 +28,11 @@ object Dedup {
 
   import TextOps._
 
-  /** Intermediates persisted by the near-dup builders. The returned plans
-    * are lazy, so the library cannot unpersist eagerly itself; callers that
-    * invoke these repeatedly (benchmarks, services) should call
-    * [[releaseCaches]] after materializing a result to keep the session's
-    * block store bounded. */
-  private val cachedHandles =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  private[graft] def cached(df: DataFrame): DataFrame = {
-    val p = df.persist()
-    cachedHandles.add(p)
-    p
-  }
-
-  /** Frames whose lineage [[checkpointed]] truncated — held WEAKLY: a
-    * caller that never calls [[releaseCaches]] (notebook, service) keeps
-    * the old GC-based cleanup (frame unreachable → ContextCleaner frees
-    * the blocks), while Bench-style callers get prompt release. A strong
-    * queue here would pin every checkpointed frame forever for
-    * non-Bench users. */
-  private val checkpointHandles =
-    new java.util.concurrent.ConcurrentLinkedQueue[
-      java.lang.ref.WeakReference[DataFrame]]()
-
-  /** Eager `localCheckpoint` with an explicit release handle: the
-    * checkpoint blocks are dropped by the next [[releaseCaches]] call.
-    * Unlike a persisted frame, a checkpointed frame has NO lineage to
-    * recompute from — after release the returned plan is dead, so do not
-    * hold one across a releaseCheckpoints() boundary (Bench's releaseAll
-    * between queries is exactly the intended lifetime). */
-  private[graft] def checkpointed(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint()
-    checkpointHandles.add(new java.lang.ref.WeakReference(cp))
-    cp
-  }
-
-  /** Unpersist every intermediate cached by previous near-dup calls.
-    * ALWAYS SAFE: unpersisted CACHE blocks are recomputed on next
-    * access, never wrong — any frame a caller still holds stays valid.
-    * (ADVICE r6 split this API: this name once also killed checkpoint
-    * blocks, silently breaking live frames for library callers;
-    * checkpoint release is now the explicitly-destructive
-    * [[releaseCheckpoints]].) */
-  def releaseCaches(): Unit = {
-    var d = cachedHandles.poll()
-    while (d != null) { d.unpersist(blocking = false); d = cachedHandles.poll() }
-  }
-
-  /** Drop checkpoint blocks registered via [[checkpointed]].
-    * DESTRUCTIVE: a checkpointed frame has no lineage to recompute from,
-    * so any frame built on one (packWindows result, pageRank output, BPE
-    * state) FAILS on its next action after this call. Call only at a
-    * boundary where no checkpoint-derived frame is still live — Bench
-    * between queries is the intended lifetime; a notebook/service that
-    * never calls it keeps the GC-based cleanup (handles are weak). */
-  def releaseCheckpoints(): Unit = {
-    var ref = checkpointHandles.poll()
-    while (ref != null) {
-      val c = ref.get()
-      if (c != null) // GC'd frames were already cleaned by ContextCleaner
-        c.queryExecution.analyzed.collectLeaves().foreach {
-          case lr: org.apache.spark.sql.execution.LogicalRDD =>
-            lr.rdd.unpersist(blocking = false)
-          case _ => ()
-        }
-      ref = checkpointHandles.poll()
-    }
-  }
-
-  /** [[releaseCaches]] + [[releaseCheckpoints]] — the full between-
-    * queries reset Bench-style callers want. */
-  def releaseAll(): Unit = {
-    releaseCaches()
-    releaseCheckpoints()
-  }
+  /** Free the intermediates registered with no [[graft.util.Fence]] scope
+    * open. Kept for perfbench's `FeedAnalytics`, which forces each query
+    * outside any scope and releases between queries; engine code and the
+    * harnesses scope their blocks with `Fence.scope` instead. */
+  def releaseAll(): Unit = Fence.releaseRoot()
 
   /** Exact dedup survivors: first doc_id per normalized-text group.
     * One shuffle; at scale this is the canonical `groupBy(norm)` keeper
@@ -197,7 +128,7 @@ object Dedup {
     // banded frame is skinny by design (three longs per (doc, band) row,
     // `bands`× the rep count) — exactly what [[graft.sinks.DedupIndex]]
     // persists durably for the same reason.
-    val bd = cached(banded(signed))
+    val bd = Fence.cached(banded(signed))
     val a = bd.as("a")
     val b = bd.as("b")
     a.join(b,
@@ -255,7 +186,7 @@ object Dedup {
     // inherent to pair semantics; it carries only (id, id, double), and
     // the clustering consumers collapse it to component labels.
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("sh"))
-    val withRep = cached(sh.select(col("doc_id"), col("sh"))
+    val withRep = Fence.cached(sh.select(col("doc_id"), col("sh"))
       .withColumn("rep", min(col("doc_id")).over(w)))
     val members = withRep.select(col("doc_id"), col("rep"))
     val reps = withRep.where(col("doc_id") === col("rep"))
@@ -410,9 +341,9 @@ object Dedup {
   def containmentPairs(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
     // scanParallel: the fused shingle pass + posting explode otherwise run
     // on a single-file scan's one partition
-    val sh = cached(
+    val sh = Fence.cached(
       shingled(TextOps.scanParallel(docs)).where(size(col("sh")) > 0))
-    val postings = cached(
+    val postings = Fence.cached(
       sh.select(col("doc_id"), size(col("sh")).as("n_sh"),
         explode(col("sh")).as("h")))
     val dfreq = postings.groupBy("h").agg(count(lit(1)).as("df"))
@@ -546,7 +477,7 @@ object Dedup {
     val edges =
       pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
         .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-        .transform(checkpointed)
+        .transform(Fence.checkpointed)
     // one job per round: persist, then materialize the cache with a
     // noop write whose OBSERVED metric is the convergence sum (r20,
     // guide §2.4 — the r19 shape ran a separate agg over the fresh
@@ -560,7 +491,7 @@ object Dedup {
     // 2^64); decimal(38,0) holds ~10^38 ≫ |V|·2^63 for any realistic
     // corpus.
     def materialize(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val p = cached(df)
+      val p = Fence.cached(df)
       val obs = org.apache.spark.sql.Observation()
       p.observe(obs, sum(col("label").cast("decimal(38,0)")).as("s"))
         .write.format("noop").mode("overwrite").save()
@@ -601,7 +532,7 @@ object Dedup {
       // late rounds replan expensively. Truncate lineage every few rounds;
       // near-dup graphs converge in 1-3 rounds and never hit this.
       val truncated =
-        if ((it + 1) % checkpointEvery == 0) checkpointed(plan) else plan
+        if ((it + 1) % checkpointEvery == 0) Fence.checkpointed(plan) else plan
       val (next, s) = materialize(truncated)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
@@ -670,7 +601,7 @@ object Dedup {
     * exact [[nearDupSurvivors]] anti-join shape with a weight column
     * instead of a drop. */
   def softDedupWeights(docs: DataFrame, threshold: Double = 0.8): DataFrame =
-    softWeightsFrom(docs, cached(nearDupClusters(docs, threshold)))
+    softWeightsFrom(docs, Fence.cached(nearDupClusters(docs, threshold)))
 
   /** [[softDedupWeights]]' body over ANY (doc_id, cluster_id) labeling —
     * shared by the direct and memoized entry points. */
@@ -788,7 +719,7 @@ object Dedup {
     val L = spanLen
     // token array materialized behind its own projection (the
     // interpreted-HOF rule: an inline split would re-tokenize per window)
-    val withToks = cached(TextOps.scanParallel(docs).select(
+    val withToks = Fence.cached(TextOps.scanParallel(docs).select(
       col("doc_id"), TextOps.wsTokens(lower(col("text"))).as("toks")))
     val spans = withToks
       .select(col("doc_id"),
@@ -838,7 +769,7 @@ object Dedup {
       threshold: Double = 0.4,
       stride: Int = Similarity.ivfStride,
       maxOccupancy: Int = Similarity.maxCellOccupancy): DataFrame = {
-    val base = cached(embeddings.select(
+    val base = Fence.cached(embeddings.select(
       col("vec_id"), Similarity.asDouble(col("embedding")).as("v")))
     val cents = base.where(pmod(col("vec_id"), lit(stride)) === 0)
       .select(col("vec_id").as("cent_id"), col("v").as("cv"))
@@ -852,13 +783,13 @@ object Dedup {
     // capped projection both read it, and an uncached subtree would run
     // the N×C argmax twice (and re-display a second
     // BroadcastNestedLoopJoin in the plan — PlanShapeSpec pins one).
-    val rawCells = cached(base
+    val rawCells = Fence.cached(base
       .crossJoin(broadcast(cents))
       .withColumn("csim", Similarity.cosine(col("v"), col("cv")))
       .groupBy("vec_id")
       .agg(max_by(col("cent_id"),
         struct(col("csim"), (-col("cent_id")).as("neg_id"))).as("cell")))
-    val cells = cached(Similarity.capCells(rawCells, maxOccupancy))
+    val cells = Fence.cached(Similarity.capCells(rawCells, maxOccupancy))
     val withCell = base.join(cells, Seq("vec_id"))
     withCell.select(col("cell"), col("vec_id").as("id_a"), col("v").as("v_a"))
       .join(withCell.select(
@@ -1027,7 +958,7 @@ object Dedup {
     // Nulls ride the window in their own harmless partition and are
     // dropped from the cached output everywhere downstream.
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
-    val withRep0 = cached(fps.select(col("doc_id"), col("fp"))
+    val withRep0 = Fence.cached(fps.select(col("doc_id"), col("fp"))
       .withColumn("rep", min(col("doc_id")).over(w)))
     val withRep = withRep0.where(col("fp").isNotNull)
     val members = withRep.select(col("doc_id"), col("rep"))

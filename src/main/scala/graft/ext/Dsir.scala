@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.util.Fence
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -130,11 +131,10 @@ object Dsir {
   def nanoRatioModel(
       docs: DataFrame,
       targetLang: String = "en",
-      topK: Int = 4096): (Map[String, Long], Long) = {
+      topK: Int = 4096): (Map[String, Long], Long) = Fence.scope {
     // three actions read the token frame (raw totals, target totals,
-    // top-K collect) — persist it once, scoped (the Pca.fit rule: no
-    // global release inside a library call)
-    val all = toks(docs)(Seq("lang")).persist()
+    // top-K collect) — persist it once
+    val all = Fence.cached(toks(docs)(Seq("lang")))
     val rv = all.groupBy("t").agg(count(lit(1)).as("n"))
     val rt = rv.agg(coalesce(sum("n"), lit(0L)).as("total"),
       count(lit(1)).as("vsz")).head()
@@ -156,7 +156,6 @@ object Dsir {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val unk = math.floor((math.log(K / (totT + (vszT + 1) * K))
       - math.log(K / (totR + (vszR + 1) * K))) * 1e9).toLong
-    all.unpersist(blocking = false)
     (top, unk)
   }
 

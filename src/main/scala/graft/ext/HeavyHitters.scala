@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.util.Fence
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -107,10 +108,9 @@ object HeavyHitters {
       .where(col("key").isNotNull)
     val est = mgSummary(keyed, k)
     // the exact recount feeds BOTH the survivor filter and the total —
-    // cache the key-cardinality-sized frame (Dedup's scoped registry;
-    // Bench releases between queries) so the source scans twice (sketch
-    // + recount), not three times
-    val exact = Dedup.cached(
+    // cache the key-cardinality-sized frame so the source scans twice
+    // (sketch + recount), not three times
+    val exact = Fence.cached(
       keyed.groupBy("key").agg(count(lit(1)).as("exact_n")))
     val total = exact.agg(sum("exact_n").as("n_total"))
     exact

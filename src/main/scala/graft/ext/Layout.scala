@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.util.Fence
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -166,7 +167,7 @@ object Layout {
   def skippingReport(df: DataFrame, x: Column, y: Column, cellBits: Int,
     yLo: Long, yHi: Long): DataFrame = {
     require(cellBits >= 2 && cellBits <= 16, s"cellBits out of range: $cellBits")
-    val keys = Dedup.cached(
+    val keys = Fence.cached(
       normalized(df, x, y)
         .withColumn("zcell",
           shiftright(zValue(col("xk"), col("yk")), 32 - cellBits))
@@ -233,7 +234,7 @@ object Layout {
       s"if($hi - $lo >= 0 AND $hi - $lo <= ${maxDomain3}L, " +
         s"(($v - $lo) * 2097151L) div greatest($hi - $lo, 1L), " +
         s"raise_error('3-key domain wider than ${maxDomain3}'))")
-    val keys = Dedup.cached(
+    val keys = Fence.cached(
       raw.crossJoin(broadcast(mm))
         .withColumn("xk", key("xr", "x_lo", "x_hi"))
         .withColumn("yk", key("yr", "y_lo", "y_hi"))
@@ -399,7 +400,7 @@ object Layout {
       s"cell grid out of hilbertIndex range: $cellBits")
     require(cellsPerFile >= 1, s"cellsPerFile: $cellsPerFile")
     val axisBits = cellBits / 2
-    val keys = Dedup.cached(normalized(df, x, y)
+    val keys = Fence.cached(normalized(df, x, y)
       .withColumn("zcell",
         shiftright(zValue(col("xk"), col("yk")), 32 - cellBits))
       .withColumn("hcell", hilbertIndex(
@@ -431,7 +432,7 @@ object Layout {
       s"cell grid out of hilbertIndex range: $cellBits")
     require(cellsPerFile >= 1, s"cellsPerFile: $cellsPerFile")
     val axisBits = cellBits / 2
-    val keys = Dedup.cached(normalized(df, x, y)
+    val keys = Fence.cached(normalized(df, x, y)
       .withColumn("zcell",
         shiftright(zValue(col("xk"), col("yk")), 32 - cellBits))
       .withColumn("hcell", hilbertIndex(

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.util.Fence
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -56,19 +57,17 @@ object Packing {
       else spark.conf.get("spark.sql.shuffle.partitions").toInt
     // localCheckpoint (eager) pins the range partitioning: RangePartitioner
     // SAMPLES its boundaries per execution, so a mere persist() could be
-    // dropped (eviction, releaseCaches) and re-planned with DIFFERENT
+    // dropped (eviction, scope release) and re-planned with DIFFERENT
     // __pid ranges than the driver-collected prefix map — silently wrong
     // offsets. A checkpoint truncates lineage: a lost block fails the job
     // instead of recomputing, which keeps the "recomputed, never wrong"
-    // cache contract intact. The registered handle lets
-    // Dedup.releaseCheckpoints() free the blocks between bench queries;
-    // after that release the returned plan is dead (same contract as
-    // Dedup.checkpointed — don't reuse across a release boundary).
+    // cache contract intact. The result dies with the caller's scope
+    // (the checkpoint lifetime in [[graft.util.Fence]]).
     val ranged =
       df.repartitionByRange(n, orderCols.map(col): _*)
         .sortWithinPartitions(orderCols.head, orderCols.tail: _*)
         .withColumn("__pid", spark_partition_id())
-        .transform(Dedup.checkpointed)
+        .transform(Fence.checkpointed)
     val partSums: Map[Int, Long] = ranged
       .groupBy("__pid").agg(sum(valueCol).as("s"))
       .collect()

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.util.Fence
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -68,12 +69,8 @@ object Pca {
 
   /** Fit on the corpus: one moments pass (bounded collect: 64 + 2080
     * rows), then driver-side covariance + power iteration. */
-  def fit(embeddings: DataFrame, p: Int = numComponents): Model = {
-    // plain persist + scoped unpersist — NOT Dedup.cached/releaseAll:
-    // Verify runs queries CONCURRENTLY, and a global release here would
-    // drop another in-flight query's blocks (observed: it killed
-    // feed_influence_personalized's localCheckpoint mid-run)
-    val x = xRows(embeddings).persist()
+  def fit(embeddings: DataFrame, p: Int = numComponents): Model = Fence.scope {
+    val x = Fence.cached(xRows(embeddings))
     val n = embeddings.count()
     val s1 = x.groupBy("i")
       .agg(sum(n12Col(col("xi"))).as("s1"))
@@ -86,7 +83,6 @@ object Pca {
       .collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2) / 1e12)
       .toMap
-    x.unpersist(blocking = false)
     // covariance from the exact moments (double ops on identical inputs)
     val a = Array.tabulate(dim, dim) { (i, j) =>
       val (lo, hi) = (math.min(i, j), math.max(i, j))

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.util.Fence
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -174,7 +175,7 @@ object Pq {
       numQueries: Int,
       k: Int,
       stride: Int = pqStride): DataFrame = {
-    val q8 = Dedup.cached(q8Of(embeddings))
+    val q8 = Fence.cached(q8Of(embeddings))
     val cb = codebookFrom(q8, stride)
     adcRank(
       encodeWith(q8, flatCodebook(cb)), cb,
@@ -229,7 +230,7 @@ object Pq {
       stride: Int = pqStride): DataFrame = {
     // ONE cached quantize pass feeds the cell pruning, codebook collect,
     // encode scan, and query-side norm/LUT slices
-    val q8 = Dedup.cached(q8Of(embeddings))
+    val q8 = Fence.cached(q8Of(embeddings))
     val cands = Similarity.ivfCandidates(
         q8.select(col("vec_id"), col("qv").as("embedding")),
         numQueries, ivfStride, nprobe)
@@ -302,7 +303,7 @@ object Pq {
       minShared: Int = 2,
       threshold: Double = 0.3,
       stride: Int = pqStride): DataFrame = {
-    val q8 = Dedup.cached(q8Of(embeddings))
+    val q8 = Fence.cached(q8Of(embeddings))
     // Drop PqEncodeAll's fail-closed ragged-vector sentinel (-1 in every
     // subspace) BEFORE the self-join: two corrupt vectors would collide
     // on all 8 (j, -1) keys and surface as a bogus n_shared=8 candidate,

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.util.Fence
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -103,7 +104,7 @@ object Profile {
     * lexicographically-smallest key attaining the bucket's max — the
     * exemplar you'd go look at. */
   def skewReport(keys: DataFrame): DataFrame = {
-    val counts = graft.ext.Dedup.cached(
+    val counts = Fence.cached(
       keys.select(col(keys.columns.head).cast("string").as("key"))
         .where(col("key").isNotNull)
         .groupBy("key").agg(count(lit(1)).as("n")))

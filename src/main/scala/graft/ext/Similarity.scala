@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.util.Fence
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -272,7 +273,7 @@ object Similarity {
         .bitwiseOR(bucket.cast("long"))
     // both self-join sides derive from ONE persisted sketch pass (ids +
     // bucket ints only — L rows per vector, never the vectors)
-    val bk = Dedup.cached(
+    val bk = Fence.cached(
       bucketed(base, dim).select("vec_id", "table_id", "bucket"))
     val b = bk.select(col("vec_id"), packed(col("bucket")).as("key"))
     val probed = bk.select(
@@ -536,7 +537,7 @@ object Similarity {
       k: Int = 3,
       stride: Int = ivfStride,
       nprobe: Int = knnProbes): DataFrame = {
-    val base = Dedup.cached(embeddings.select(
+    val base = Fence.cached(embeddings.select(
       col("vec_id"), asDouble(col("embedding")).as("v")))
     knnGraphFrom(base, rankedCells(base, stride, nprobe), k)
   }
@@ -554,7 +555,7 @@ object Similarity {
       .select(col("vec_id").as("cent_id"), col("v").as("cv"))
     val pw = org.apache.spark.sql.expressions.Window
       .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cent_id"))
-    Dedup.cached(base
+    Fence.cached(base
       .crossJoin(broadcast(cents))
       .select(col("vec_id"), col("cent_id"), cosine(col("v"), col("cv")).as("csim"))
       .withColumn("prn", row_number().over(pw))
@@ -718,7 +719,7 @@ object Similarity {
       threshold: Double = 0.4,
       stride: Int = ivfStride,
       nprobe: Int = knnProbes): DataFrame = {
-    val base = Dedup.cached(embeddings.select(
+    val base = Fence.cached(embeddings.select(
       col("vec_id"), asDouble(col("embedding")).as("v")))
     val ranked = rankedCells(base, stride, nprobe)
     def histo(clusters: DataFrame, method: String) =
@@ -755,11 +756,9 @@ object Similarity {
   // edge set in one verify/bench run, and [[Dedup.components]] is a
   // multi-round checkpointed loop — the most expensive intermediate the
   // two queries used to compute independently (VERDICT r9 item 2, ~13 s
-  // combined at sf0.1). Disk memoization, not cache memoization, because
-  // Bench calls releaseAll() between queries — a cached frame would be
-  // dropped (and a checkpointed one KILLED) right when the second query
-  // needs it; a parquet path survives, and rereading a 2-long-column
-  // labeling is cheap.
+  // combined at sf0.1). Disk memoization, not frame memoization: a
+  // fenced frame does not outlive its query's scope ([[graft.util.Fence]]);
+  // a parquet path does, and rereading a 2-long-column labeling is cheap.
   /** `edges` is by-name so a caller that already holds a cached `base` +
     * [[rankedCells]] frame (knnVsCellClustersAt shares them with its
     * cell method) can donate those to the build instead of paying the
@@ -801,7 +800,7 @@ object Similarity {
       k: Int = 3, threshold: Double = 0.4,
       stride: Int = ivfStride, nprobe: Int = knnProbes): (String, String) = {
     val embeddings = graft.sources.Tables(spark, sfDir, "embeddings")
-    val base = Dedup.cached(embeddings.select(
+    val base = Fence.cached(embeddings.select(
       col("vec_id"), asDouble(col("embedding")).as("v")))
     val ranked = rankedCells(base, stride, nprobe)
     val withCell = base.join(
@@ -877,7 +876,7 @@ object Similarity {
   def mmrTopK(
       embeddings: DataFrame, numQueries: Int = 10, n: Int = 20,
       k: Int = 10, lambdaRel: Double = 0.5): DataFrame = {
-    val base = Dedup.cached(embeddings.select(
+    val base = Fence.cached(embeddings.select(
       col("vec_id"), asDouble(col("embedding")).as("v")))
     val qframe = base.where(col("vec_id") < numQueries)
       .select(col("vec_id").as("q_id"), col("v").as("q"))
@@ -921,7 +920,7 @@ object Similarity {
       cand0: DataFrame, k: Int, lambdaRel: Double): DataFrame = {
     val spark = cand0.sparkSession
     import spark.implicits._
-    val cand = Dedup.cached(cand0)
+    val cand = Fence.cached(cand0)
     val pairs = cand.select(col("q_id"), col("cand_id").as("ca"), col("v").as("va"))
       .join(cand.select(col("q_id"), col("cand_id").as("cb"), col("v").as("vb")),
         Seq("q_id"))

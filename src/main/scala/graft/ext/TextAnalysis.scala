@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.util.Fence
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -318,7 +319,7 @@ object TextAnalysis {
     *    ≥ that many partitions — any real corpus — are left untouched.
     *  - the hash counts are persisted: the cutoff and the candidate filter
     *    both read them, and the frame is one (hash, count) row per
-    *    distinct bigram. Released via [[Dedup.releaseCaches]]. */
+    *    distinct bigram. */
   def bigramTopK(docs: DataFrame, k: Int = 100): DataFrame = {
     val src = scanParallel(docs)
     val withToks = src
@@ -328,7 +329,7 @@ object TextAnalysis {
       withToks.select(explode(
         transform(sequence(lit(1), size(col("toks")) - 1),
           i => f(element_at(col("toks"), i), element_at(col("toks"), i + 1)))))
-    val counts = Dedup.cached(
+    val counts = Fence.cached(
       pairsOf((a, b) => xxhash64(a, b)).toDF("h")
         .groupBy("h").agg(count(lit(1)).as("n")))
     val cutoff = counts.orderBy(col("n").desc).limit(k).agg(min("n").as("n_min"))
@@ -1217,7 +1218,7 @@ object TextAnalysis {
     // Unlike the exact operator, the fences here are scale-safe: grams
     // persists only until the two consumers run, and sketches is
     // |sources| rows by construction.
-    val grams = Dedup.cached(scanParallel(docs)
+    val grams = Fence.cached(scanParallel(docs)
       .select(col("source"), wsTokens(lower(col("text"))).as("ts"))
       .select(col("source"), explode(shingles(col("ts"), 3)).as("g"))
       .select(col("source"),
@@ -1234,7 +1235,7 @@ object TextAnalysis {
           col("n_sh")).cast("long")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source")).orderBy(col("hv"))
-    val sketches = Dedup.cached(grams
+    val sketches = Fence.cached(grams
       .join(broadcast(thr), Seq("source"))
       .where(col("hv") < col("thr"))
       .withColumn("rn", row_number().over(w)) // ≤ ~safety·k rows/source

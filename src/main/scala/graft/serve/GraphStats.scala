@@ -1,5 +1,6 @@
 package graft.serve
 
+import graft.util.Fence
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -40,7 +41,7 @@ object GraphStats {
     // frame feeds FOUR consumers (both degree-union arms, orientation,
     // wedge closure) and each would otherwise re-run the CDC parse →
     // distinct chain
-    val und = graft.ext.Dedup.checkpointed(
+    val und = Fence.checkpointed(
       followers.where(col("__op") === "c")
         .select(col("follower_id").as("x"), col("following_id").as("y"))
         .where(col("x") =!= col("y"))
@@ -48,7 +49,7 @@ object GraphStats {
           greatest(col("x"), col("y")).as("b"))
         .distinct())
     // degrees feed the two orientation joins and the final report
-    val deg = graft.ext.Dedup.checkpointed(
+    val deg = Fence.checkpointed(
       und.select(col("a").as("v"))
         .unionAll(und.select(col("b").as("v")))
         .groupBy("v").agg(count(lit(1)).as("degree")))

@@ -1,6 +1,6 @@
 package graft.serve
 
-import graft.ext.Dedup
+import graft.util.Fence
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
@@ -37,7 +37,7 @@ object Influence {
     * `metrics` observed by that same materializing job. */
   private def fenced(df: DataFrame, metrics: Column*): (DataFrame, Map[String, Any]) = {
     val obs = Observation()
-    val cp = Dedup.checkpointed(df.observe(obs, metrics.head, metrics.tail: _*))
+    val cp = Fence.checkpointed(df.observe(obs, metrics.head, metrics.tail: _*))
     (cp, obs.get)
   }
 

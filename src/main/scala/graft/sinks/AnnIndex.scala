@@ -1,6 +1,7 @@
 package graft.sinks
 
 import graft.ext.Similarity
+import graft.util.Fence
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -69,7 +70,7 @@ object AnnIndex {
     Similarity.quantizeScale(embeddings)
       .select(col("s"), lit(stride).as("stride"), lit(buckets).as("buckets"))
       .write.mode("overwrite").parquet(s"$path/meta")
-    val q = graft.ext.Dedup.cached(
+    val q = Fence.cached(
       Similarity.quantize(embeddings).select(col("vec_id"), col("qv")))
     q.where(pmod(col("vec_id"), lit(stride)) === 0)
       .select(col("vec_id").as("cent_id"), col("qv").as("qcv"))
@@ -201,7 +202,7 @@ object AnnIndex {
       (if (filtered) Seq(col("qlabel")) else Nil) :+ col("cent_id").as("cell")
     // cached: the ranking feeds BOTH the driver-side pruning collect and
     // the candidate join below — |q|·nprobe skinny rows, one computation
-    val probes = graft.ext.Dedup.cached(queries
+    val probes = Fence.cached(queries
       .crossJoin(broadcast(cents))
       .withColumn("qsim", Similarity.cosine(col("q"), col("cv")))
       .withColumn("qrn", row_number().over(qw))

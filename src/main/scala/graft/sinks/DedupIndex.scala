@@ -1,6 +1,7 @@
 package graft.sinks
 
 import graft.ext.Dedup
+import graft.util.Fence
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -74,7 +75,7 @@ object DedupIndex {
     docs.sparkSession.range(1).select(lit(buckets).as("buckets"),
       lit(portable).as("portable"))
       .write.mode("overwrite").parquet(s"$path/meta")
-    writeTables(Dedup.cached(signedOf(docs, portable)), path, buckets,
+    writeTables(Fence.cached(signedOf(docs, portable)), path, buckets,
       "overwrite")
   }
 
@@ -87,12 +88,14 @@ object DedupIndex {
     * rows (at-least-once, [[BucketedSink.runToTable]]'s stated
     * contract). Readers restore exactly-once by deterministic-key
     * dedup: [[probe]] dedups the sigs scan on doc_id, and its band
-    * candidates are `distinct` by construction. */
-  def append(newDocs: DataFrame, path: String): Unit = {
+    * candidates are `distinct` by construction. Its own fence scope
+    * frees the batch's cached signatures on return: [[runToIndex]] calls
+    * it once per micro-batch, where no query scope is open. */
+  def append(newDocs: DataFrame, path: String): Unit = Fence.scope {
     val meta = newDocs.sparkSession.read.parquet(s"$path/meta")
       .head() // bounded: 1 row
     writeTables(
-      Dedup.cached(signedOf(newDocs, metaPortable(meta))),
+      Fence.cached(signedOf(newDocs, metaPortable(meta))),
       path, meta.getAs[Int]("buckets"), "append")
   }
 
@@ -143,7 +146,7 @@ object DedupIndex {
       path: String,
       minAgree: Double = defaultMinAgree): DataFrame = {
     val spark = newDocs.sparkSession
-    val incoming = Dedup.cached(signedOf(newDocs,
+    val incoming = Fence.cached(signedOf(newDocs,
       metaPortable(spark.read.parquet(s"$path/meta").head())))
     val newBands = Dedup.banded(incoming)
       .select(col("doc_id").as("new_id"), col("band_id"), col("band_hash"))

@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.util.Fence
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -131,7 +132,7 @@ object TextIndex {
       queries: DataFrame, path: String, k: Int = 10,
       maxTermsPerQuery: Int = 4): DataFrame = {
     val spark = queries.sparkSession
-    val qterms = graft.ext.Dedup.cached(
+    val qterms = Fence.cached(
       queries.select(col("query_id"),
           explode(toks(col("qtext"))).as("term"))
         .distinct())
@@ -151,7 +152,7 @@ object TextIndex {
     // scan by construction) and the scoring input below. The explicit
     // repartition(term) is reused by the dedup aggregate and the df
     // window (HashPartitioning(term) satisfies both clusterings).
-    val probed = graft.ext.Dedup.cached(postings
+    val probed = Fence.cached(postings
       .join(broadcast(qterms.select("term").distinct()), Seq("term"))
       .repartition(col("term"))
       .dropDuplicates("term", "doc_id")

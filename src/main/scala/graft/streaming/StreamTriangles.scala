@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.util.Fence
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -47,7 +48,7 @@ object StreamTriangles {
       .distinct()
 
   /** One fold step, exposed for the spec. */
-  def foldBatch(batch: DataFrame, path: String): Unit = {
+  def foldBatch(batch: DataFrame, path: String): Unit = Fence.scope {
     val spark = batch.sparkSession
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -65,13 +66,9 @@ object StreamTriangles {
             lit(0L).as("triangles")).limit(0)
       // new edges only: already-present arrivals (and replays of a
       // completed fold) contribute nothing. Cached — En feeds T1, T2, T3,
-      // the degree delta, and the edge-table merge. Plain persist(), NOT
-      // Dedup.cached: that registry holds a STRONG handle per entry until
-      // releaseAll, which a long-running stream never calls — one leaked
-      // reference per fold, forever. Scoped persist/unpersist on our own
-      // frame is the documented streaming-safe pattern.
-      val en = canonicalEdges(batch)
-        .join(oldEdges, Seq("a", "b"), "left_anti").persist()
+      // the degree delta, and the edge-table merge.
+      val en = Fence.cached(canonicalEdges(batch)
+        .join(oldEdges, Seq("a", "b"), "left_anti"))
       // old adjacency, both directions (edges are (lo, hi)-canonical)
       val adjOld = oldEdges.select(col("a").as("v"), col("b").as("w"))
         .unionAll(oldEdges.select(col("b").as("v"), col("a").as("w")))
@@ -140,7 +137,6 @@ object StreamTriangles {
 
       newEdges.write.parquet(s"$tmp/edges")
       merged.write.parquet(s"$tmp/stats")
-      en.unpersist()
     }
   }
 

@@ -62,15 +62,32 @@ class GraftSpec extends SparkSuite {
       .collect().head.getLong(0) > 0)
   }
 
-  test("only SwapDirs renames directories: every table swap goes through " +
-      "SwapDirs.replace") {
+  /** The `src/main` Scala files that contain `text`, relative to src/main. */
+  private def mainFilesContaining(text: String): Set[String] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main")
-    val renaming = java.nio.file.Files.walk(root).iterator().asScala
+    java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .filter(f => new String(java.nio.file.Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8).contains(".rename("))
+        java.nio.charset.StandardCharsets.UTF_8).contains(text))
       .map(root.relativize(_).toString).toSet
-    assert(renaming === Set("scala/graft/util/SwapDirs.scala"))
+  }
+
+  test("only SwapDirs renames directories: every table swap goes through " +
+      "SwapDirs.replace") {
+    assert(mainFilesContaining(".rename(") === Set("scala/graft/util/SwapDirs.scala"))
+  }
+
+  test("only Fence releases fenced blocks, and each harness main opens a " +
+      "scope per query") {
+    // the root release is defined in Fence and delegated to by
+    // Dedup.releaseAll, which nothing under src/main calls
+    assert(mainFilesContaining("releaseRoot(") ===
+      Set("scala/graft/util/Fence.scala", "scala/graft/ext/Dedup.scala"))
+    assert(mainFilesContaining("releaseAll(") === Set("scala/graft/ext/Dedup.scala"))
+    val scoping = mainFilesContaining("Fence.scope")
+    Seq("scala/graft/Bench.scala", "scala/graft/BenchSubset.scala",
+      "scala/PlanDump.scala", "scala/graft/Verify.scala")
+      .foreach(h => assert(scoping(h), s"$h runs a query outside a Fence scope"))
   }
 }

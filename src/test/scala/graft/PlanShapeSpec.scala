@@ -1,6 +1,7 @@
 package graft
 
 import graft.SparkSuite
+import graft.util.Fence
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -337,7 +338,7 @@ class PlanShapeSpec extends SparkSuite {
       k => graft.serve.Influence.personalizedPageRank(followers, iterations = k))
     for (pr <- variants) {
       def jobs(k: Int): Int =
-        try withJobCount(pr(k).collect())._2 finally graft.ext.Dedup.releaseAll()
+        Fence.scope(withJobCount(pr(k).collect())._2)
       jobs(2) // warm: the fixture's schema and codegen cache
       assert(jobs(3) - jobs(2) === 2)
     }
@@ -346,8 +347,7 @@ class PlanShapeSpec extends SparkSuite {
   test("a PageRank round's plan: no join, broadcast or cartesian") {
     // the plan is the last round over the checkpointed previous state
     for (q <- Seq("feed_influence", "feed_influence_personalized")) {
-      val p = plan(q)
-      graft.ext.Dedup.releaseAll()
+      val p = Fence.scope(plan(q))
       assert(p.contains("Generate"), q)
       assert(!p.contains("Join"), q)
       assert(!p.contains("Broadcast"), q)

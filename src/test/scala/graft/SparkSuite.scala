@@ -1,11 +1,17 @@
 package graft
 
+import graft.util.Fence
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (getOrCreate → one JVM-wide
-  * session; suites must not stop() it). */
+  * session; suites must not stop() it). Each test runs in its own
+  * [[Fence]] scope, so the blocks it fences are freed when it ends. */
 trait SparkSuite extends AnyFunSuite {
+  override def withFixture(test: NoArgTest): Outcome =
+    Fence.scope(super.withFixture(test))
+
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", 4)

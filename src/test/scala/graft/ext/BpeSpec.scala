@@ -197,7 +197,6 @@ class BpeSpec extends SparkSuite {
           s"merge ${m.merge_rank} ${(m.left_sym, m.right_sym)} has count " +
             s"$actual but the state's max is $mx — not an arg-max step")
     }
-    graft.ext.Dedup.releaseAll()
   }
 
   test("DeferConflicts mode records EXACT counts (disjointness keeps " +
@@ -213,7 +212,6 @@ class BpeSpec extends SparkSuite {
           s"merge ${m.merge_rank} ${(m.left_sym, m.right_sym)} recorded " +
             s"count ${m.pair_n} but its sequential state holds $actual")
     }
-    graft.ext.Dedup.releaseAll()
   }
 
   test("production mode at vocab scale: saturated tokenization matches " +

@@ -170,7 +170,6 @@ class DedupSpec extends SparkSuite {
         graft.ext.TextOps.wsTokens(lower(col("text"))).as("__toks"))
     val lines = Dedup.lineDedup(withToks,
       Dedup.tokenBlockLines(col("__toks")), minDocs = 2).collect()
-    Dedup.releaseAll()
     lines.foreach { r =>
       assert(r.getAs[Long]("n_kept") === r.getAs[Long]("n_lines"),
         "segment dedup must miss the misaligned copy")
@@ -185,7 +184,6 @@ class DedupSpec extends SparkSuite {
         ((r.getAs[Long]("cluster_id"), r.getAs[Long]("cluster_size"),
           r.getAs[Double]("weight_r"))))
       .toMap
-    Dedup.releaseAll()
     // docs 1, 2, 4 form one cluster (1~2 near, 1~4 exact modulo case):
     // each weighs 1/3; unrelated doc 3 is a singleton at full weight
     assert(out.keySet === Set(1L, 2L, 3L, 4L))

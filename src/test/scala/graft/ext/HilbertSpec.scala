@@ -42,13 +42,12 @@ class HilbertSpec extends SparkSuite {
 
   test("unaligned curve files: hilbert boxes strictly tighter than z " +
       "on the orders keys; both layouts file every row") {
-    val rows = try Layout.curveFileStats(
+    val rows = Layout.curveFileStats(
       graft.sources.Tables(spark, "/root/testdata/sf0.001", "orders"),
       col("o_custkey"),
       expr("unix_millis(cast(o_orderdate as timestamp)) div 86400000"),
       cellBits = 6, cellsPerFile = 6)
       .collect()
-    finally Dedup.releaseAll() // curveFileStats caches its key frame
     def area(curve: String): Long = rows.filter(_.getString(0) == curve)
       .map(r => (r.getAs[Long]("x_max") - r.getAs[Long]("x_min") + 1) *
         (r.getAs[Long]("y_max") - r.getAs[Long]("y_min") + 1)).sum

@@ -168,9 +168,8 @@ class LayoutSpec extends SparkSuite {
     val rnd = new scala.util.Random(17)
     val df = Seq.tabulate(6000)(i => (rnd.nextInt(1000).toLong,
       rnd.nextInt(1000).toLong, rnd.nextInt(1000).toLong)).toDF("x", "y", "z")
-    val r = try Layout.skippingReport3(df, col("x"), col("y"), col("z"),
+    val r = Layout.skippingReport3(df, col("x"), col("y"), col("z"),
       cellBits = 6, zLo = 500000L, zHi = 1000000L).collect().head
-    finally Dedup.releaseAll()
     assert(r.getAs[Boolean]("z3_sound") && r.getAs[Boolean]("lin_sound"))
     assert(r.getAs[Long]("z3_rows_scanned") >= r.getAs[Long]("rows_match"))
     // uniform data: x-clustered cells all span the z domain → no pruning

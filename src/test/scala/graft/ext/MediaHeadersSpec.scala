@@ -769,7 +769,6 @@ class MediaHeadersSpec extends SparkSuite {
     assert(perturbedCaught > 0,
       "the one-pixel perturbation must be catchable at pixel level")
     assert(pairs.forall(_._3 <= 3))
-    graft.ext.Dedup.releaseAll()
   }
 
   test("PgmCodec decodes hand-built P5/P6 exactly: tokenized header, " +

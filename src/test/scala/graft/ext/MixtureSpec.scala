@@ -44,7 +44,6 @@ class MixtureSpec extends SparkSuite {
     val got = Mixture.sample(skewed).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("source"),
         r.getAs[Long]("rk")))
-    Dedup.releaseAll()
     val bySource = got.groupBy(_._2).view.mapValues(_.map(_._1).sorted).toMap
     assert(bySource("big") === (0L until 38L).toArray)
     assert(bySource("mid") === (1000L until 1019L).toArray)
@@ -68,7 +67,6 @@ class MixtureSpec extends SparkSuite {
     assert(alloc === Map("big" -> ((43L, 43L)), "rare" -> ((9L, 4L))))
     val got = Mixture.sampleTokens(docs).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("tok_pfx")))
-    Dedup.releaseAll()
     // big: exclusive prefixes 0,10..90 → docs 0-4 kept (doc 4 straddles
     // 43 with pfx 40); rare: both docs fit in 9
     assert(got.map(_._1).sorted === Array(0L, 1L, 2L, 3L, 4L, 100L, 101L))
@@ -88,7 +86,6 @@ class MixtureSpec extends SparkSuite {
     val sampleBySrc = Mixture.sample(docs).collect()
       .map(r => r.getAs[String]("source"))
       .groupBy(identity).view.mapValues(_.length).toMap
-    Dedup.releaseAll()
     Seq("a", "a|!").foreach { s =>
       assert(strata((s, "test")) === 1 && strata((s, "validation")) === 1 &&
         strata((s, "train")) === 8)
@@ -151,7 +148,6 @@ class MixtureSpec extends SparkSuite {
       (10L, 1L, 0L, 0L), (20L, 2L, 0L, 1L),
       (30L, 2L, 1L, 0L), (40L, 3L, 1L, 1L),
       (50L, 4L, 2L, 0L)))
-    graft.ext.Dedup.releaseAll()
   }
 
   test("trainingOrder: reproducible, shard-contiguous 0-based positions; " +
@@ -177,7 +173,6 @@ class MixtureSpec extends SparkSuite {
     val runs = Mixture.trainingOrderRuns(docs).collect()
       .map(r => (r.getAs[Long]("shard"), r.getAs[Long]("max_run"),
         r.getAs[Long]("n_runs"), r.getAs[Long]("n_docs")))
-    Dedup.releaseAll()
     assert(runs.map(_._4).sum === a.length,
       "every ordered doc lands in exactly one run")
     val docsByShard = a.groupBy(_._3).view.mapValues(_.length.toLong).toMap
@@ -194,7 +189,6 @@ class MixtureSpec extends SparkSuite {
         r.getAs[String]("split")))
     val a = run()
     val b = run()
-    Dedup.releaseAll()
     assert(a.toSet === b.toSet, "membership must be a pure function of the data")
     assert(a.length === 129, "every document lands in exactly one split")
     val bySrc = a.groupBy(_._2).view

@@ -55,7 +55,6 @@ class NearDupCollapseSpec extends SparkSuite {
     assert(withinGroup.size === 31 * 30 / 2,
       s"expected 465 within-group pairs, got ${withinGroup.size}")
     assert(withinGroup.forall(_._3 == 1.0))
-    Dedup.releaseAll()
   }
 
   test("banding/verify work is bounded by distinct content: the candidate " +
@@ -76,7 +75,6 @@ class NearDupCollapseSpec extends SparkSuite {
     assert(rawCands >= collapsedCands + 465,
       s"raw=$rawCands collapsed=$collapsedCands — collapse must remove " +
         "the duplicate-group quadratic from the verify stage")
-    Dedup.releaseAll()
   }
 
   test("nearDupEdges' linear star + rep-pair edges yield IDENTICAL " +
@@ -97,7 +95,6 @@ class NearDupCollapseSpec extends SparkSuite {
     assert(nPairs - nEdges >= 465 - 30,
       s"edges=$nEdges pairs=$nPairs — the linear form must drop the " +
         "duplicate-group quadratic")
-    Dedup.releaseAll()
   }
 
   test("SimHash path: identical fingerprints collapse the same way — " +
@@ -131,7 +128,6 @@ class NearDupCollapseSpec extends SparkSuite {
     val withinGroup = got.filter(p => dupIds(p._1) && dupIds(p._2))
     assert(withinGroup.size === 31 * 30 / 2)
     assert(withinGroup.forall(_._3 == 0))
-    Dedup.releaseAll()
   }
 
   test("degenerate parameters that would break the collapse equivalence " +

@@ -20,7 +20,6 @@ class PackingSpec extends SparkSuite {
     val values = rows.sortBy(_._1)
     val exclusive = values.map(_._2).scanLeft(0L)(_ + _).init
     assert(got.toSeq === values.map(_._1).zip(exclusive))
-    Dedup.releaseAll()
   }
 
   test("packWindows: offsets, straddles, and window spans at budget 10") {
@@ -40,7 +39,6 @@ class PackingSpec extends SparkSuite {
       (2L, 7L, 0L, 1L, 2L),
       (3L, 12L, 1L, 2L, 2L),
       (4L, 22L, 2L, 5L, 4L)))
-    Dedup.releaseAll()
   }
 
   test("packWindows covers the token stream exactly: max window == total div budget") {
@@ -53,6 +51,5 @@ class PackingSpec extends SparkSuite {
     val total = agg.getAs[Long]("total")
     assert(agg.getAs[Long]("end") === total, "offsets tile the stream gaplessly")
     assert(agg.getAs[Long]("last_win") === (total - 1) / 512)
-    Dedup.releaseAll()
   }
 }

@@ -67,6 +67,5 @@ class ProfileSpec extends SparkSuite {
       (0, 1L, 1L, 1L, "a"),
       (1, 2L, 5L, 3L, "c"),
       (2, 2L, 11L, 7L, "e")))
-    graft.ext.Dedup.releaseAll()
   }
 }

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSuite
+import graft.util.Fence
 
 /** Cosine/ANN correctness: hand-checkable vectors + recall floor on the
   * fixture corpus. */
@@ -87,10 +88,9 @@ class SimilaritySpec extends SparkSuite {
       10L -> at(44), 11L -> at(48))
       .toDF("vec_id", "embedding")
     def nbrOf10(nprobe: Int): Long = {
-      val m = Similarity.knnGraph(vecs, k = 1, stride = 20, nprobe = nprobe)
+      val m = Fence.scope(Similarity.knnGraph(vecs, k = 1, stride = 20, nprobe = nprobe)
         .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("nbr_id"))
-        .toMap
-      graft.ext.Dedup.releaseAll()
+        .toMap)
       m(10L)
     }
     assert(nbrOf10(1) === 3L, "own-cell build: nearest A-cluster member")
@@ -116,17 +116,15 @@ class SimilaritySpec extends SparkSuite {
       (20L + j, member(1, j)),
       (40L + j, member(2, j))))
       .toDF("vec_id", "embedding")
-    val rec = Similarity.knnGraphRecall(clustered, k = 3, stride = 20, nprobe = 2)
-      .head()
-    graft.ext.Dedup.releaseAll()
+    val rec = Fence.scope(Similarity.knnGraphRecall(clustered, k = 3, stride = 20, nprobe = 2)
+      .head())
     assert(rec.getAs[Double]("mean_recall_r") >= 0.95,
       s"clustered recall ${rec.getAs[Double]("mean_recall_r")}")
 
     val embs = graft.sources.Tables(spark, "/root/testdata/sf0.001", "embeddings")
     def meanRecall(nprobe: Int): Double = {
-      val r = Similarity.knnGraphRecall(embs, k = 3, nprobe = nprobe)
-        .head().getAs[Double]("mean_recall_r")
-      graft.ext.Dedup.releaseAll()
+      val r = Fence.scope(Similarity.knnGraphRecall(embs, k = 3, nprobe = nprobe)
+        .head().getAs[Double]("mean_recall_r"))
       r
     }
     val single = meanRecall(1)
@@ -153,7 +151,6 @@ class SimilaritySpec extends SparkSuite {
       .toDF("vec_id", "embedding")
     val out = Similarity.knnClusters(all, k = 3, threshold = 0.4, stride = 20)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.ext.Dedup.releaseAll()
     assert(!out.contains(60L), "isolated vector must not cluster")
     assert(out.size === 24)
     (0 until 8).foreach { j =>

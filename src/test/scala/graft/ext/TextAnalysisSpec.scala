@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSuite
+import graft.util.Fence
 import org.apache.spark.sql.functions._
 
 /** Training-data triage ops the fixture corpus doesn't exercise end-to-end
@@ -316,9 +317,8 @@ class TextAnalysisSpec extends SparkSuite {
     assert(rep.forall(r => !r.getAs[Double]("dup_token_frac").isNaN))
     // packWindows: every doc keeps a row; null text → null token count,
     // empty text → its (degenerate) token count, offsets stay monotone
-    val pw = Packing.packWindows(docs, budget = 10).collect()
+    val pw = Fence.scope(Packing.packWindows(docs, budget = 10).collect())
     assert(pw.length === 3)
-    Dedup.releaseAll()
     // sourceMixture: null text aggregates as zero tokens, no crash
     val mix = TextAnalysis.sourceMixture(docs).collect()
     assert(mix.length === 2)
@@ -351,7 +351,6 @@ class TextAnalysisSpec extends SparkSuite {
     // stratified sample + batching: null text scores minimum, still sampled
     assert(TextAnalysis.stratifiedSample(docs, kPerStratum = 5).count() >= 1L)
     assert(TextAnalysis.lengthBucketBatches(docs).count() >= 1L)
-    Dedup.releaseAll()
   }
 
   test("tokenPmi ranks a planted collocation above independent tokens") {

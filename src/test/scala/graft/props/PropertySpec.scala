@@ -1,6 +1,7 @@
 package graft.props
 
 import graft.serve.FeedQueries
+import graft.util.Fence
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
@@ -416,10 +417,9 @@ object PropertySpec extends Properties("graft") {
       val pts = Seq.fill(800)((rnd.nextLong(xSpan), rnd.nextLong(ySpan)))
       // predicate in NORMALIZED key space, like the registered query
       val (yLo, yHi) = (655L * aFrac, 655L * bFrac + 654L)
-      val r = try graft.ext.Layout.skippingReport(
+      val r = Fence.scope(graft.ext.Layout.skippingReport(
         pts.toDF("x", "y"), col("x"), col("y"),
-        cellBits = 6, yLo = yLo, yHi = yHi).collect().head
-      finally graft.ext.Dedup.releaseAll() // the report caches its key frame
+        cellBits = 6, yLo = yLo, yHi = yHi).collect().head)
       r.getAs[Boolean]("z_sound") && r.getAs[Boolean]("lin_sound") &&
         r.getAs[Long]("z_rows_scanned") >= r.getAs[Long]("rows_match") &&
         r.getAs[Long]("lin_rows_scanned") >= r.getAs[Long]("rows_match")

@@ -1,6 +1,7 @@
 package graft.serve
 
 import graft.SparkSuite
+import graft.util.Fence
 
 /** PageRank influence: closed-form fixed points, hand-computed damped
   * steps, exact mass accounting, and ranking sanity on the fixture. */
@@ -15,12 +16,9 @@ class InfluenceSpec extends SparkSuite {
     edges.map { case (a, b) => (a, b, "c") }
       .toDF("follower_id", "following_id", "__op")
 
-  private def rankMap(df: org.apache.spark.sql.DataFrame): Map[String, Long] = {
-    val m = df.collect()
-      .map(r => r.getAs[String]("user_id") -> r.getAs[Long]("pr_units")).toMap
-    graft.ext.Dedup.releaseAll()
-    m
-  }
+  private def rankMap(df: => org.apache.spark.sql.DataFrame): Map[String, Long] =
+    Fence.scope(df.collect()
+      .map(r => r.getAs[String]("user_id") -> r.getAs[Long]("pr_units")).toMap)
 
   test("two-node cycle is the closed-form fixed point: half the mass each") {
     val pr = rankMap(Influence.pageRank(followersOf("a" -> "b", "b" -> "a")))
@@ -168,6 +166,5 @@ class InfluenceSpec extends SparkSuite {
       Influence.personalizedPageRank(g, source = Some("nobody"))
     }
     assert(e.getMessage.contains("nobody"))
-    graft.ext.Dedup.releaseAll()
   }
 }

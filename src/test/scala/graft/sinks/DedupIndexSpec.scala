@@ -1,7 +1,7 @@
 package graft.sinks
 
 import graft.SparkSuite
-import graft.ext.Dedup
+import graft.util.Fence
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -41,8 +41,7 @@ class DedupIndexSpec extends SparkSuite {
     val path = tmpDir("dedupidx")
     DedupIndex.build(df(0L -> textA, 2L -> textB), path)
     val batch = df(1L -> textA, 3L -> textBNear, 5L -> textNovel)
-    val got = matches(DedupIndex.probe(batch, path, minAgree = 0.5))
-    Dedup.releaseAll()
+    val got = Fence.scope(matches(DedupIndex.probe(batch, path, minAgree = 0.5)))
     assert(got.keySet === Set((1L, 0L), (3L, 2L)),
       s"unexpected match set: $got")
     assert(got((1L, 0L)) === 1.0)
@@ -53,7 +52,6 @@ class DedupIndexSpec extends SparkSuite {
       s"agreement ${got((3L, 2L))} far from true Jaccard $trueJ")
     val novel = DedupIndex.novel(batch, path, minAgree = 0.5)
       .select("doc_id").as[Long].collect().toSeq
-    Dedup.releaseAll()
     assert(novel === Seq(5L))
   }
 
@@ -62,8 +60,7 @@ class DedupIndexSpec extends SparkSuite {
     val path = tmpDir("dedupidx_portable")
     DedupIndex.build(df(0L -> textA, 2L -> textB), path, portable = true)
     val batch = df(1L -> textA, 3L -> textBNear, 5L -> textNovel)
-    val got = matches(DedupIndex.probe(batch, path, minAgree = 0.5))
-    Dedup.releaseAll()
+    val got = Fence.scope(matches(DedupIndex.probe(batch, path, minAgree = 0.5)))
     // same planted structure as the default-mode test: the exact copy at
     // 1.0, the near-dup near its true Jaccard, the novel doc absent —
     // only the element-hash family differs, so agreement values may move
@@ -75,9 +72,7 @@ class DedupIndexSpec extends SparkSuite {
     // probes at 1.0, which can only happen if both sides signed with the
     // same (portable) hash family
     DedupIndex.append(df(5L -> textNovel), path)
-    Dedup.releaseAll()
     val got2 = matches(DedupIndex.probe(df(7L -> textNovel), path))
-    Dedup.releaseAll()
     assert(got2.get((7L, 5L)) === Some(1.0))
   }
 
@@ -88,11 +83,9 @@ class DedupIndexSpec extends SparkSuite {
     val batch1 = df(5L -> textNovel)
     assert(matches(DedupIndex.probe(batch1, path)).isEmpty)
     DedupIndex.append(batch1, path)
-    Dedup.releaseAll()
     // a copy of the APPENDED doc now matches it, and still matches
     // nothing from the original build other than via doc 5
     val got = matches(DedupIndex.probe(df(7L -> textNovel), path))
-    Dedup.releaseAll()
     assert(got.keySet === Set((7L, 5L)))
     assert(got((7L, 5L)) === 1.0)
   }
@@ -102,10 +95,8 @@ class DedupIndexSpec extends SparkSuite {
     val path = tmpDir("dedupidx_compact")
     DedupIndex.build(df(0L -> textA, 2L -> textB), path)
     DedupIndex.append(df(10L -> textNovel), path)
-    Dedup.releaseAll()
     val batch = df(1L -> textA, 3L -> textBNear, 11L -> textNovel)
-    val before = matches(DedupIndex.probe(batch, path, minAgree = 0.5))
-    Dedup.releaseAll()
+    val before = Fence.scope(matches(DedupIndex.probe(batch, path, minAgree = 0.5)))
     def bandFiles() = {
       val dir = new java.io.File(s"$path/bands")
       def walk(f: java.io.File): Seq[java.io.File] =
@@ -115,7 +106,6 @@ class DedupIndexSpec extends SparkSuite {
     val filesBefore = bandFiles()
     DedupIndex.compact(spark, path)
     val after = matches(DedupIndex.probe(batch, path, minAgree = 0.5))
-    Dedup.releaseAll()
     assert(after === before, "compaction must not change probe results")
     assert(before.keySet === Set((1L, 0L), (3L, 2L), (11L, 10L)),
       "probe must see built AND appended docs")
@@ -138,7 +128,6 @@ class DedupIndexSpec extends SparkSuite {
     run()
     run() // restart with nothing new: markers + checkpoint fence batch 0
     val got = matches(DedupIndex.probe(df(7L -> textNovel), path))
-    Dedup.releaseAll()
     assert(got.keySet === Set((7L, 5L)), "exactly one copy of doc 5 indexed")
   }
 }

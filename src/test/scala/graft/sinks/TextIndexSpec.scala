@@ -1,6 +1,7 @@
 package graft.sinks
 
 import graft.SparkSuite
+import graft.util.Fence
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -34,7 +35,6 @@ class TextIndexSpec extends SparkSuite {
       path, k = 4)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank"),
         r.getAs[Long]("doc_id"), r.getAs[Double]("score_r")))
-    graft.ext.Dedup.releaseAll()
     val top = got.filter(_._2 == 1).map(t => t._1 -> t._3).toMap
     assert(top === Map(100L -> 2L, 101L -> 0L), s"rank-1 wrong: ${got.toSeq}")
     // scores strictly decrease with rank within a query (no rare-term
@@ -51,7 +51,6 @@ class TextIndexSpec extends SparkSuite {
     TextIndex.build(df(corpus), path)
     val got = TextIndex.bm25TopK(
       q(7L -> "zzz qqq unseen"), path, k = 3).count()
-    graft.ext.Dedup.releaseAll()
     assert(got === 0L)
   }
 
@@ -65,7 +64,6 @@ class TextIndexSpec extends SparkSuite {
     val got = TextIndex.bm25TopK(
       q(9L -> "catalyst optimizer plans the watermark"), path, k = 10)
       .select("doc_id").as[Long].collect().toSet
-    graft.ext.Dedup.releaseAll()
     assert(got === Set(2L, 3L), s"candidates: $got")
   }
 
@@ -74,15 +72,13 @@ class TextIndexSpec extends SparkSuite {
     val path = tmpDir("textidx_append")
     TextIndex.build(df(corpus.take(2)), path)
     TextIndex.append(df(Seq(9L -> "broadcast joins avoid the shuffle entirely")), path)
-    val got = TextIndex.bm25TopK(q(1L -> "broadcast joins"), path, k = 2)
-      .collect()
-    graft.ext.Dedup.releaseAll()
+    val got = Fence.scope(TextIndex.bm25TopK(q(1L -> "broadcast joins"), path, k = 2)
+      .collect())
     assert(got.head.getAs[Long]("doc_id") === 9L)
     // "the" now occurs in 3 docs: stats must see the union. Probe a
     // pure-filler query: every holder of "the" scores, none excluded
     // (max-score selection caps terms per query, it never empties one).
     val filler = TextIndex.bm25TopK(q(2L -> "the"), path, k = 10).count()
-    graft.ext.Dedup.releaseAll()
     assert(filler === 3L)
   }
 
@@ -105,11 +101,9 @@ class TextIndexSpec extends SparkSuite {
     TextIndex.build(df(corpus.take(2)), path)
     TextIndex.append(df(corpus.drop(2)), path)
     val query = q(5L -> "catalyst plans the watermark")
-    val before = TextIndex.bm25TopK(query, path, k = 4).collect().toSeq
-    graft.ext.Dedup.releaseAll()
+    val before = Fence.scope(TextIndex.bm25TopK(query, path, k = 4).collect().toSeq)
     TextIndex.compact(spark, path)
     val after = TextIndex.bm25TopK(query, path, k = 4).collect().toSeq
-    graft.ext.Dedup.releaseAll()
     assert(after === before)
     // compaction collapsed to one file per populated bucket dir
     val postings = new java.io.File(s"$path/postings")
@@ -134,9 +128,8 @@ class TextIndexSpec extends SparkSuite {
     }
     mem.addData(corpus(2))
     run()
-    assert(TextIndex.bm25TopK(q(1L -> "catalyst optimizer"), path, k = 1)
-      .collect().head.getAs[Long]("doc_id") === 2L)
-    graft.ext.Dedup.releaseAll()
+    Fence.scope(assert(TextIndex.bm25TopK(q(1L -> "catalyst optimizer"), path, k = 1)
+      .collect().head.getAs[Long]("doc_id") === 2L))
     mem.addData(corpus(3))
     run()
     run() // restart with nothing new: the checkpoint+marker fence holds
@@ -145,7 +138,6 @@ class TextIndexSpec extends SparkSuite {
     assert(lens === 4L)
     assert(TextIndex.bm25TopK(q(2L -> "watermark streaming"), path, k = 1)
       .collect().head.getAs[Long]("doc_id") === 3L)
-    graft.ext.Dedup.releaseAll()
   }
 
   test("hybrid RRF: a doc ranked top by both runs beats docs ranked top " +
@@ -164,7 +156,6 @@ class TextIndexSpec extends SparkSuite {
       q(42L -> "catalyst optimizer plans"), qv, vecs, path, k = 4)
       .collect().map(r => (r.getAs[Int]("rank"), r.getAs[Long]("doc_id"),
         r.getAs[Double]("rrf_r")))
-    graft.ext.Dedup.releaseAll()
     // doc 2: lexical rank 1 AND dense rank 1 -> rrf 2/61; must lead
     assert(got.head._2 === 2L)
     assert(math.abs(got.head._3 - 2.0 / 61.0) <= 1e-6)

@@ -64,4 +64,7 @@ for name, sql in sorted(oracle.items()):
     else:
         print(f"OK   {name}: {len(d)} rows")
 
+# close before exit: tearing DuckDB's threads down while they still run
+# can abort the interpreter (exit 134) after every line printed OK
+con.close()
 sys.exit(1 if fails else 0)
