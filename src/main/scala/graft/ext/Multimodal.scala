@@ -147,14 +147,6 @@ object Multimodal {
     val ch = (pmod(id, lit(2)) + 1).cast("int")
     def be32(c: Column) = lpad(conv(c.cast("long"), 10, 16), 8, "0")
     def be16(c: Column) = lpad(conv(c.cast("long"), 10, 16), 4, "0")
-    def swap32(x: Column) =
-      concat(substring(x, 7, 2), substring(x, 5, 2),
-        substring(x, 3, 2), substring(x, 1, 2))
-    def le32(c: Column) = swap32(be32(c))
-    def le16(c: Column) = {
-      val b = be16(c)
-      concat(substring(b, 3, 2), substring(b, 1, 2))
-    }
     def le24(c: Column) = {
       val b = lpad(conv(c.cast("long"), 10, 16), 6, "0")
       concat(substring(b, 5, 2), substring(b, 3, 2), substring(b, 1, 2))
@@ -529,16 +521,6 @@ object Multimodal {
     val h = (pmod(id * 7, lit(12)) + 1).cast("int")
     val rowSize = (floor((w * 3 + 3) / lit(4)) * 4).cast("int")
     val pad = rowSize - w * 3
-    def le32(c: Column) = {
-      val b = lpad(conv(c.cast("long"), 10, 16), 8, "0")
-      concat(substring(b, 7, 2), substring(b, 5, 2),
-        substring(b, 3, 2), substring(b, 1, 2))
-    }
-    def le16(c: Column) = {
-      val b = lpad(conv(c.cast("long"), 10, 16), 4, "0")
-      concat(substring(b, 3, 2), substring(b, 1, 2))
-    }
-    def byteHex(c: Column) = lpad(conv(pmod(c, lit(256)), 10, 16), 2, "0")
     // stored row i holds image row y = h - 1 - i (bottom-up)
     val pixelHex = array_join(
       transform(sequence(lit(0), h - 1), { i =>
@@ -551,9 +533,9 @@ object Multimodal {
                   when(x === 0 && y === lit(0), lit(16)).otherwise(lit(0))
                 else lit(0)
               concat(
-                byteHex(id + x * 3 + y * 7 + bump),
-                byteHex(id * 5 + x + y * 11),
-                byteHex(id * 9 + x * 13 + y))
+                hexByte(id + x * 3 + y * 7 + bump),
+                hexByte(id * 5 + x + y * 11),
+                hexByte(id * 9 + x * 13 + y))
             }), ""),
           lit("000000").substr(lit(1), pad * 2)) // pad ∈ 0..3 zero bytes
       }), "")
@@ -842,16 +824,6 @@ object Multimodal {
     val w = (pmod(id, lit(14)) + 2).cast("int")
     val h = (pmod(id * 3, lit(10)) + 1).cast("int")
     val nRuns = floor((w + 3) / lit(4)).cast("int")
-    def le32(c: Column) = {
-      val b = lpad(conv(c.cast("long"), 10, 16), 8, "0")
-      concat(substring(b, 7, 2), substring(b, 5, 2),
-        substring(b, 3, 2), substring(b, 1, 2))
-    }
-    def le16(c: Column) = {
-      val b = lpad(conv(c.cast("long"), 10, 16), 4, "0")
-      concat(substring(b, 3, 2), substring(b, 1, 2))
-    }
-    def byteHex(c: Column) = lpad(conv(pmod(c, lit(256)), 10, 16), 2, "0")
     // palette: 256 × (B,G,R,0) — same deterministic table for every doc,
     // so it's a Scala-computed literal, not 256 interpreted lambda evals
     // per row (measured 3.2 → 1.1 s at sf0.1)
@@ -866,7 +838,7 @@ object Multimodal {
           array_join(
             transform(sequence(lit(0), nRuns - 1), { r =>
               val runLen = least(lit(4), w - r * 4)
-              concat(byteHex(runLen), byteHex(id * 3 + r * 5 + y * 11))
+              concat(hexByte(runLen), hexByte(id * 3 + r * 5 + y * 11))
             }), ""),
           lit("0000")) // end-of-line escape
       }), ""),
@@ -923,15 +895,6 @@ object Multimodal {
       frameBytes: Column, handlerHex: String, compressionHex: String,
       frameChunkHex: Column => Column): DataFrame = {
     val id = col("doc_id")
-    def le32(c: Column) = {
-      val b = lpad(conv(c.cast("long"), 10, 16), 8, "0")
-      concat(substring(b, 7, 2), substring(b, 5, 2),
-        substring(b, 3, 2), substring(b, 1, 2))
-    }
-    def le16(c: Column) = {
-      val b = lpad(conv(c.cast("long"), 10, 16), 4, "0")
-      concat(substring(b, 3, 2), substring(b, 1, 2))
-    }
     def zeros(n: Int) = lit("00" * n)
     // strh: fccType 'vids', the family's handler fourcc, rest zero (56)
     val strh = concat(lit("73747268"), le32(lit(56)),
@@ -973,11 +936,6 @@ object Multimodal {
     val rowSize = (floor((w * 3 + 3) / lit(4)) * 4).cast("int")
     val pad = rowSize - w * 3
     val frameBytes = rowSize * h
-    def le32(c: Column) = {
-      val b = lpad(conv(c.cast("long"), 10, 16), 8, "0")
-      concat(substring(b, 7, 2), substring(b, 5, 2),
-        substring(b, 3, 2), substring(b, 1, 2))
-    }
     aviWrap(docs, w, h, nf, frameBytes,
       handlerHex = "44494220", compressionHex = "00000000", // 'DIB ', BI_RGB
       frameChunkHex = { f =>
@@ -998,6 +956,20 @@ object Multimodal {
     * encoder. */
   private def hexByte(c: Column): Column =
     lpad(conv(pmod(c, lit(256)), 10, 16), 2, "0")
+
+  /** Hex of integer column `c` as a little-endian 4-byte field — the RIFF,
+    * BMP and WAV synthesizers' header encoder. */
+  private def le32(c: Column): Column = {
+    val b = lpad(conv(c.cast("long"), 10, 16), 8, "0")
+    concat(substring(b, 7, 2), substring(b, 5, 2),
+      substring(b, 3, 2), substring(b, 1, 2))
+  }
+
+  /** Little-endian 2-byte twin of [[le32]]. */
+  private def le16(c: Column): Column = {
+    val b = lpad(conv(c.cast("long"), 10, 16), 4, "0")
+    concat(substring(b, 3, 2), substring(b, 1, 2))
+  }
 
   /** Synthesize an uncompressed-DIB AVI per document: w = id%8+1,
     * h = (3·id)%6+1, nf = id%5+2 frames; frame f pixel (x, y) channels
@@ -1047,15 +1019,6 @@ object Multimodal {
     val pad = rowSize - w * 3
     val frameBytes = rowSize * h
     val audioBytes = spf * 2
-    def le32(c: Column) = {
-      val b = lpad(conv(c.cast("long"), 10, 16), 8, "0")
-      concat(substring(b, 7, 2), substring(b, 5, 2),
-        substring(b, 3, 2), substring(b, 1, 2))
-    }
-    def le16(c: Column) = {
-      val b = lpad(conv(c.cast("long"), 10, 16), 4, "0")
-      concat(substring(b, 3, 2), substring(b, 1, 2))
-    }
     def zeros(n: Int) = lit("00" * n)
     val strhV = concat(lit("73747268"), le32(lit(56)),
       lit("76696473"), lit("44494220"), zeros(48))
@@ -1368,11 +1331,6 @@ object Multimodal {
     val nb = wb * hb
     val frameBytes = lit(140) + nb * 2 // fixed segments + 2-byte blocks
     def be16h(c: Column) = lpad(conv(c.cast("long"), 10, 16), 4, "0")
-    def le32(c: Column) = {
-      val b = lpad(conv(c.cast("long"), 10, 16), 8, "0")
-      concat(substring(b, 7, 2), substring(b, 5, 2),
-        substring(b, 3, 2), substring(b, 1, 2))
-    }
     aviWrap(docs, wb * 8, hb * 8, nf, frameBytes,
       handlerHex = "4D4A5047", compressionHex = "4D4A5047", // 'MJPG' ×2
       frameChunkHex = { f =>
@@ -1740,22 +1698,12 @@ object Multimodal {
     val docs = TextOps.scanParallel(docs0)
     val id = col("doc_id")
     val n = (pmod(id, lit(200)) + 50).cast("int")
-    def le32(c: Column) = {
-      val b = lpad(conv(c.cast("long"), 10, 16), 8, "0")
-      concat(substring(b, 7, 2), substring(b, 5, 2),
-        substring(b, 3, 2), substring(b, 1, 2))
-    }
-    def le16(c: Column) = {
-      val b = lpad(conv(c.cast("long"), 10, 16), 4, "0")
-      concat(substring(b, 3, 2), substring(b, 1, 2))
-    }
-    def byteHex(c: Column) = lpad(conv(pmod(c, lit(256)), 10, 16), 2, "0")
     // stored uint16 of the signed sample = (u + 32768) mod 65536 where
     // u = (3·id + 17·i) mod 65536 is the pre-shift phase
     val samplesHex = array_join(
       transform(sequence(lit(0), n - 1), { i =>
         val u = pmod(id * 3 + i * 17 + 32768, lit(65536))
-        concat(byteHex(u), byteHex(floor(u / 256)))
+        concat(hexByte(u), hexByte(floor(u / 256)))
       }), "")
     val junk = when(pmod(id, lit(4)) === 0, lit("4A554E4B" + "04000000" + "00000000"))
       .otherwise(lit("")) // "JUNK" + size 4 + 4 payload bytes
@@ -2208,7 +2156,6 @@ object Multimodal {
     val id = col("doc_id")
     val w = (pmod(id, lit(13)) + 1).cast("int")
     val h = (pmod(id * 5, lit(11)) + 1).cast("int")
-    def byteHex(c: Column) = lpad(conv(pmod(c, lit(256)), 10, 16), 2, "0")
     val header = concat(
       lit("P5\n"),
       when(pmod(id, lit(3)) === 0, concat(lit("# c"), id.cast("string"), lit("\n")))
@@ -2218,7 +2165,7 @@ object Multimodal {
       transform(sequence(lit(0), h - 1), { y =>
         array_join(
           transform(sequence(lit(0), w - 1), { x =>
-            byteHex(id * 3 + x * 5 + y * 11)
+            hexByte(id * 3 + x * 5 + y * 11)
           }), "")
       }), "")
     docs.select(id.as("media_id"),
@@ -2353,12 +2300,7 @@ object Multimodal {
     val id = col("doc_id")
     val w = (pmod(id, lit(7)) + 1).cast("int")
     val h = (pmod(id * 3, lit(6)) + 1).cast("int")
-    def byteHex(c: Column) = lpad(conv(pmod(c, lit(256)), 10, 16), 2, "0")
     def be32(c: Column) = lpad(conv(c.cast("long"), 10, 16), 8, "0")
-    def le16(c: Column) = {
-      val b = lpad(conv(c.cast("long"), 10, 16), 4, "0")
-      concat(substring(b, 3, 2), substring(b, 1, 2))
-    }
     // raw channel value at (x, y); channel c in {0=R, 1=G, 2=B}
     def raw(x: Column, y: Column, c: Int): Column = c match {
       case 0 => pmod(id * 7 + x * 5 + y * 11, lit(256))
@@ -2405,7 +2347,7 @@ object Multimodal {
       zip_with(bts, sequence(lit(1), n),
         (b, i) => ((n.cast("long") - i) + 1L) * b),
       lit(0L), _ + _), lit(65521L))
-    val dataHex = array_join(transform(bts, b => byteHex(b)), "")
+    val dataHex = array_join(transform(bts, b => hexByte(b)), "")
     // IDAT payload: zlib hdr (78 01) + one final STORED block
     // (01, LEN le16, ~LEN le16) + filtered bytes + adler32 be32
     val idatLen = n + 11
@@ -2644,11 +2586,6 @@ object Multimodal {
     val id = col("doc_id")
     val w = (pmod(id, lit(9)) + 1).cast("int")
     val h = (pmod(id * 7, lit(5)) + 1).cast("int")
-    def byteHex(c: Column) = lpad(conv(pmod(c, lit(256)), 10, 16), 2, "0")
-    def le16(c: Column) = {
-      val b = lpad(conv(c.cast("long"), 10, 16), 4, "0")
-      concat(substring(b, 3, 2), substring(b, 1, 2))
-    }
     // constant 128-entry palette — a Scala-computed literal (the RLE8
     // palette lesson: never 128 interpreted lambda evals per row)
     val paletteHex = lit((0 until 128).map(i =>
@@ -2673,8 +2610,8 @@ object Multimodal {
     val blocks = array_join(transform(sequence(lit(0), nBlocks), b => {
       val start = b * 255 + 1
       val len = least(lit(255), nCodes - b * 255)
-      concat(byteHex(len),
-        array_join(transform(slice(codes, start, len), c => byteHex(c)), ""))
+      concat(hexByte(len),
+        array_join(transform(slice(codes, start, len), c => hexByte(c)), ""))
     }), "")
     val hx = concat(
       lit("474946383961"), // "GIF89a"
@@ -4409,11 +4346,6 @@ object Multimodal {
           (acc, b) => acc * 2 +
             element_at(bs, (j * 8 + b + 1).cast("int"))),
           10, 16), 2, "0")), "")
-    def le32(c: Column) = {
-      val hx = lpad(conv(c.cast("long"), 10, 16), 8, "0")
-      concat(substring(hx, 7, 2), substring(hx, 5, 2),
-        substring(hx, 3, 2), substring(hx, 1, 2))
-    }
     val vp8lLen = nBytes + 1 // signature byte + bitstream
     val padded = concat(payloadHex,
       when(pmod(vp8lLen, lit(2)) === 1, lit("00")).otherwise(lit(""))) // RIFF word pad

@@ -97,16 +97,22 @@ object GraphStats {
     * CDC's numeric user-id strings; they cast to BIGINT for the loop's
     * integer label discipline. One row per vertex that has any edge:
     * (user_id, component_id = min user id in the component). */
-  def followComponents(followers: DataFrame): DataFrame = {
-    val edges = followers.where(col("__op") === "c")
+  def followComponents(followers: DataFrame): DataFrame =
+    graft.ext.Dedup.components(followEdges(followers))
+      .select(col("doc_id").as("user_id"), col("cluster_id").as("component_id"))
+      .orderBy("user_id")
+
+  /** CDC follower rows → canonical undirected edge list (doc_a/doc_b, the
+    * components loop's column contract): creates only, no self-loops.
+    * [[graft.streaming.StreamComponents]] folds its micro-batches through
+    * the same extraction, so the streaming twin's input semantics are the
+    * batch operator's. */
+  private[graft] def followEdges(followers: DataFrame): DataFrame =
+    followers.where(col("__op") === "c")
       .select(col("follower_id").cast("long").as("doc_a"),
         col("following_id").cast("long").as("doc_b"))
       .where(col("doc_a") =!= col("doc_b"))
       .distinct()
-    graft.ext.Dedup.components(edges)
-      .select(col("doc_id").as("user_id"), col("cluster_id").as("component_id"))
-      .orderBy("user_id")
-  }
 
   /** Co-engagement mining: user pairs that liked ≥ `minCommon` of the
     * same shards — the "users who liked X also liked" item-CF signal.

@@ -33,24 +33,13 @@ import org.apache.spark.sql.functions._
   */
 object StreamComponents {
 
-  /** CDC follower micro-batch → canonical undirected edge list
-    * (doc_a/doc_b, the components loop's column contract). Kept
-    * identical to followComponents' edge extraction so the twin's input
-    * semantics are the batch operator's (creates only, no self-loops). */
-  private def batchEdges(followers: DataFrame): DataFrame =
-    followers.where(col("__op") === "c")
-      .select(col("follower_id").cast("long").as("doc_a"),
-        col("following_id").cast("long").as("doc_b"))
-      .where(col("doc_a") =!= col("doc_b"))
-      .distinct()
-
   /** One fold step, exposed for the spec: merge an edge micro-batch into
     * the label table at `path` (missing table = empty graph). */
   def foldBatch(batch: DataFrame, path: String): Unit = {
     val spark = batch.sparkSession
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val newEdges = batchEdges(batch)
+    val newEdges = graft.serve.GraphStats.followEdges(batch)
     graft.util.SwapDirs.replace(fs, hPath) { tmp =>
       val merged =
         if (fs.exists(hPath)) {

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.ingest.{Adapters, CdcEnvelope, Pipeline}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured-Streaming binding of the ingest pipeline (reference:
   * event_processor.py:45-79 — poll → parse → transform → sink — re-expressed
@@ -129,22 +128,6 @@ object StreamingIngest {
           }
       }
   }
-
-  /** Run the stream into an append-mode parquet sink with checkpointing —
-    * the K1 write path in streaming form (≙ event_processor.py:89-113).
-    * `Trigger.AvailableNow` drains what is buffered then stops, which is
-    * also the replay-test harness shape. */
-  def runToParquet(
-      activity: DataFrame,
-      outPath: String,
-      checkpointPath: String): StreamingQuery =
-    activity.writeStream
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpointPath)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
 }
 
 /** Per-user running stats held in the streaming state store. */

@@ -4,8 +4,8 @@ import graft.SparkSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Streaming parity (SURVEY.md §2.9): the batch plan bound to MemoryStream,
-  * checkpointed parquet sink, and the replay-twice proof that watermarked
-  * dedup upgrades at-least-once to effectively-once. */
+  * the checkpointed K1 activity-table sink, and the replay-twice proof that
+  * watermarked dedup upgrades at-least-once to effectively-once. */
 class StreamingSpec extends SparkSuite {
 
   import spark.implicits._
@@ -23,7 +23,7 @@ class StreamingSpec extends SparkSuite {
     mem.addData(events: _*)
     val out = tmpDir("graft_stream_out")
     val ckpt = tmpDir("graft_stream_ckpt")
-    val q = StreamingIngest.runToParquet(
+    val q = graft.sinks.ActivitySink.runToActivityTable(
       StreamingIngest.activityStream(mem.toDF().withColumnRenamed("value", "value")),
       out, ckpt)
     q.awaitTermination()
@@ -40,7 +40,7 @@ class StreamingSpec extends SparkSuite {
 
     // batch 1: all events; run to completion
     mem.addData(events: _*)
-    StreamingIngest.runToParquet(
+    graft.sinks.ActivitySink.runToActivityTable(
       StreamingIngest.dedupedActivityStream(mem.toDF()), out, ckpt)
       .awaitTermination()
 
@@ -49,7 +49,7 @@ class StreamingSpec extends SparkSuite {
     val fresh =
       """{"id":99,"shard_id":5,"liked_by":"3","__op":"c","__table":"likes","__source_ts_ms":1752228300000,"__source_table":"likes"}"""
     mem.addData(events :+ fresh: _*)
-    StreamingIngest.runToParquet(
+    graft.sinks.ActivitySink.runToActivityTable(
       StreamingIngest.dedupedActivityStream(mem.toDF()), out, ckpt)
       .awaitTermination()
 
