@@ -2,7 +2,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Scratch: dump `explain("formatted")` of named registered queries to
   * files — the plans/r19 before/after evidence the optimization round
-  * commits. Usage: runMain PlanDump <outDir> <suffix> <query>... */
+  * commits. Usage: runMain PlanDump <sfDir> <outDir> <suffix> <query>...
+  * where `sfDir` is the fixture directory the queries read. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[8]")
@@ -10,11 +11,9 @@ object PlanDump {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val outDir = args(0)
-    val suffix = args(1)
-    val sf = "/root/testdata/sf0.01"
+    val Array(sf, outDir, suffix) = args.take(3)
     new java.io.File(outDir).mkdirs()
-    for (q <- args.drop(2)) graft.util.Fence.scope {
+    for (q <- args.drop(3)) graft.util.Fence.scope {
       val df = graft.SparkEntry.queries(q)(spark, sf)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   *    aggregate job per round (the arg-max pair — a LIMIT 1 collect,
   *    same footprint as components' convergence sum), with the state
   *    lineage truncated through [[Fence.checkpointed]] every
-  *    `checkpointEvery` rounds so round r never replans rounds 1..r-1.
+  *    8 merges so round r never replans rounds 1..r-1.
   *
   * Determinism: pair counts are exact longs; the winning pair is the max
   * count with ties broken lexicographically on (left, right) — so the
@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * Scale: the corpus is touched exactly once (word counting, map-side
   * combined). State is |vocab| rows — orders of magnitude below corpus
   * size at any scale — so 20 rounds of vocab-frame aggregates are cheap
-  * even at 100 TB; raise `statePartitions` with vocabulary size.
+  * even at 100 TB; raise its 8 partitions with vocabulary size.
   * Reference surface: the reference has no tokenizer at all
   * (strategy.py tokenizes nothing); this is pipeline-tier capability.
   */
@@ -164,24 +164,19 @@ object Bpe {
   def learn(
       docs: DataFrame,
       numMerges: Int = 20,
-      statePartitions: Int = 8,
-      checkpointEvery: Int = 8,
       batchSize: Int = 8): Seq[Merge] =
-    learnWithStats(docs, numMerges, statePartitions, checkpointEvery,
-      batchSize).merges
+    learnWithStats(docs, numMerges, batchSize = batchSize).merges
 
   def learnWithStats(
       docs: DataFrame,
       numMerges: Int = 20,
-      statePartitions: Int = 8,
-      checkpointEvery: Int = 8,
       batchSize: Int = 8,
       mode: BatchMode = BatchMode.Exact): LearnResult = {
     require(batchSize >= 1, "batchSize must be >= 1")
     var state = Fence.checkpointed(
       wordCounts(docs)
         .select(spacedChars(col("w")).as("ws"), col("cnt"))
-        .repartition(statePartitions))
+        .repartition(8))
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var rounds = 0
     var sinceCkpt = 0 // merges applied since the last lineage truncation
@@ -247,12 +242,12 @@ object Bpe {
         }
         // truncate by MERGES applied, not rounds: a full batch adds
         // |batch| nested replace() calls to the state plan, so a
-        // rounds-based cadence would let checkpointEvery × batchSize
+        // rounds-based cadence would let 8 × batchSize
         // expressions accumulate — the plan-depth cost the cadence
         // exists to bound
         sinceCkpt += kept.length
         state =
-          if (sinceCkpt >= checkpointEvery && merges.size < numMerges) {
+          if (sinceCkpt >= 8 && merges.size < numMerges) {
             sinceCkpt = 0
             Fence.checkpointed(next)
           } else next

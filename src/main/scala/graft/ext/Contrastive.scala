@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *
   * Semantics per anchor (vec_id < numQueries):
   *  - positive  = rank-1 IVF neighbor (the near-dup / augmentation twin);
-  *  - negatives = the next `kNeg` neighbors with sim < `dupCeiling` —
+  *  - negatives = the next `kNeg` neighbors with sim < 0.95 —
   *    near-misses, but provably not duplicates of the anchor (a duplicate
   *    labeled "negative" would teach the model to separate identical
   *    content; the ceiling excises that classic mining bug);
@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * column: a hard negative sharing the anchor's label is a FALSE negative
   * (mining pulled a same-class item); the per-anchor false-negative share
   * is the standard health metric for a mining pipeline (high share →
-  * raise `dupCeiling` or re-rank with a cross-encoder downstream).
+  * raise the 0.95 ceiling or re-rank with a cross-encoder downstream).
   */
 object Contrastive {
 
@@ -34,8 +34,7 @@ object Contrastive {
   def pairs(
       embeddings: DataFrame,
       numQueries: Int = 20,
-      kNeg: Int = 5,
-      dupCeiling: Double = 0.95): DataFrame = {
+      kNeg: Int = 5): DataFrame = {
     // over-fetch: rank-1 is the positive, negatives need kNeg survivors
     // AFTER the dup-ceiling cut; 3× slack keeps the probe single-pass.
     val top = Similarity.ivfTopK(embeddings, numQueries, k = 1 + 3 * kNeg)
@@ -44,7 +43,7 @@ object Contrastive {
         col("sim_r").as("pos_sim_r"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("sim_r").desc, col("neighbor_id"))
-    val negs = top.where(col("rank") > 1 && col("sim_r") < dupCeiling)
+    val negs = top.where(col("rank") > 1 && col("sim_r") < 0.95)
       .withColumn("neg_rnk", row_number().over(w))
       .where(col("neg_rnk") <= kNeg)
       .select(col("q_id"), col("neg_rnk"), col("neighbor_id").as("neg_id"),
@@ -62,10 +61,9 @@ object Contrastive {
   def labelAudit(
       embeddings: DataFrame,
       numQueries: Int = 20,
-      kNeg: Int = 5,
-      dupCeiling: Double = 0.95): DataFrame = {
+      kNeg: Int = 5): DataFrame = {
     val lbl = embeddings.select(col("vec_id"), col("label"))
-    pairs(embeddings, numQueries, kNeg, dupCeiling)
+    pairs(embeddings, numQueries, kNeg)
       .join(broadcast(lbl.select(col("vec_id").as("q_id"), col("label").as("q_lbl"))),
         Seq("q_id"))
       .join(broadcast(lbl.select(col("vec_id").as("pos_id"), col("label").as("p_lbl"))),

@@ -809,10 +809,9 @@ object Dedup {
   def semanticSurvivors(
       docs: DataFrame,
       embeddings: DataFrame,
-      threshold: Double = 0.4,
-      stride: Int = Similarity.ivfStride): DataFrame = {
+      threshold: Double = 0.4): DataFrame = {
     val drop = components(
-      semanticPairs(embeddings, threshold, stride)
+      semanticPairs(embeddings, threshold)
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
       .where(col("doc_id") =!= col("cluster_id"))
       .select("doc_id")
@@ -856,11 +855,10 @@ object Dedup {
   def semanticSurvivorsQuality(
       docs: DataFrame,
       embeddings: DataFrame,
-      threshold: Double = 0.4,
-      stride: Int = Similarity.ivfStride): DataFrame =
+      threshold: Double = 0.4): DataFrame =
     keepBestQuality(docs,
       components(
-        semanticPairs(embeddings, threshold, stride)
+        semanticPairs(embeddings, threshold)
           .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))))
 
   /** Cluster-size profile of the near-dup graph: how many clusters exist
@@ -905,16 +903,6 @@ object Dedup {
       .where(col("change").isNotNull)
       .select(col("doc_id"), col("change"))
       .orderBy("doc_id")
-  }
-
-  def dedupSummary(docs: DataFrame, embeddings: DataFrame): DataFrame = {
-    def c(df: DataFrame, name: String) =
-      df.agg(count(lit(1)).cast("long").as(name))
-    c(docs, "n_docs")
-      .crossJoin(broadcast(c(exactSurvivors(docs), "exact_survivors")))
-      .crossJoin(broadcast(c(nearDupSurvivors(docs), "near_survivors")))
-      .crossJoin(broadcast(c(semanticSurvivors(docs, embeddings),
-        "semantic_survivors")))
   }
 
   /** Near-dup pairs by SimHash: candidates share at least one 16-bit band
@@ -1002,18 +990,22 @@ object Dedup {
   // queries; paths via [[graft.util.ArtifactMemo]] (full key + digest —
   // distinct keys can never share a path).
 
+  /** The memos' thresholds: Jaccard for the lexical pairs, raw cosine
+    * for the semantic (IVF-cell) pairs. */
+  private val nearDupAt = 0.8
+  private val semanticAt = 0.4
+
   /** Memoized [[nearDupCore]] — the members map and verified rep pairs
-    * written once per (fixture, threshold) under `$path/members` and
+    * written once per fixture under `$path/members` and
     * `$path/reppairs`. The pair expansion AND the component labeling
     * both derive from these two skinny tables, so one banding/verify
     * run serves every dedup consumer — and what sits on disk is the
     * O(docs + repPairs) core, not the Σ d² pair list. */
   private def nearDupCorePathAt(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      threshold: Double): String =
-    graft.util.ArtifactMemo.path("jaccore", s"$sfDir|$threshold") { out =>
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): String =
+    graft.util.ArtifactMemo.path("jaccore", s"$sfDir|$nearDupAt") { out =>
       val (members, repPairs) = nearDupCore(
-        graft.sources.Tables(spark, sfDir, "documents"), threshold)
+        graft.sources.Tables(spark, sfDir, "documents"), nearDupAt)
       members.write.mode("overwrite").parquet(s"$out/members")
       repPairs.write.mode("overwrite").parquet(s"$out/reppairs")
     }
@@ -1021,11 +1013,10 @@ object Dedup {
   /** Memoized [[nearDupJaccard]] over a fixture's documents (expanded
     * from the core memo). */
   def nearDupPairsAt(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      threshold: Double = 0.8): DataFrame = {
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
     spark.read.parquet(
-      graft.util.ArtifactMemo.path("jacpairs", s"$sfDir|$threshold") { out =>
-        val core = nearDupCorePathAt(spark, sfDir, threshold)
+      graft.util.ArtifactMemo.path("jacpairs", s"$sfDir|$nearDupAt") { out =>
+        val core = nearDupCorePathAt(spark, sfDir)
         expandPairs(
           spark.read.parquet(s"$core/members"),
           spark.read.parquet(s"$core/reppairs"))
@@ -1036,11 +1027,10 @@ object Dedup {
   /** Memoized component labeling of the verified Jaccard pair graph —
     * the loop runs over the core's linear star + rep-pair edges. */
   def nearDupComponentsAt(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      threshold: Double = 0.8): DataFrame = {
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
     spark.read.parquet(
-      graft.util.ArtifactMemo.path("jaccomp", s"$sfDir|$threshold") { out =>
-        val core = nearDupCorePathAt(spark, sfDir, threshold)
+      graft.util.ArtifactMemo.path("jaccomp", s"$sfDir|$nearDupAt") { out =>
+        val core = nearDupCorePathAt(spark, sfDir)
         components(edgesFrom(
           spark.read.parquet(s"$core/members"),
           spark.read.parquet(s"$core/reppairs")))
@@ -1050,14 +1040,13 @@ object Dedup {
 
   /** Memoized component labeling of the semantic (IVF-cell) pair graph. */
   def semanticComponentsAt(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      threshold: Double = 0.4,
-      stride: Int = Similarity.ivfStride): DataFrame =
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(
-      graft.util.ArtifactMemo.path("semcomp", s"$sfDir|$threshold|$stride") { out =>
+      graft.util.ArtifactMemo.path(
+          "semcomp", s"$sfDir|$semanticAt|${Similarity.ivfStride}") { out =>
         components(
           semanticPairs(graft.sources.Tables(spark, sfDir, "embeddings"),
-              threshold, stride)
+              semanticAt)
             .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
           .write.mode("overwrite").parquet(out)
       })
@@ -1075,48 +1064,41 @@ object Dedup {
   // Registered-query entry points through the memos (same rows, same
   // oracles as their frame-based twins above).
   def nearDupClustersAt(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      threshold: Double = 0.8): DataFrame =
-    nearDupComponentsAt(spark, sfDir, threshold).orderBy("doc_id")
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame =
+    nearDupComponentsAt(spark, sfDir).orderBy("doc_id")
 
   def nearDupSurvivorsAt(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      threshold: Double = 0.8): DataFrame =
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame =
     survivorsFrom(graft.sources.Tables(spark, sfDir, "documents"),
-      nearDupComponentsAt(spark, sfDir, threshold))
+      nearDupComponentsAt(spark, sfDir))
 
   def nearDupSurvivorsQualityAt(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      threshold: Double = 0.8): DataFrame =
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame =
     keepBestQuality(graft.sources.Tables(spark, sfDir, "documents"),
-      nearDupComponentsAt(spark, sfDir, threshold))
+      nearDupComponentsAt(spark, sfDir))
 
   def clusterSizeStatsAt(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      threshold: Double = 0.8): DataFrame =
-    nearDupComponentsAt(spark, sfDir, threshold)
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame =
+    nearDupComponentsAt(spark, sfDir)
       .groupBy("cluster_id").agg(count(lit(1)).as("sz"))
       .groupBy(col("sz").as("cluster_size"))
       .agg(count(lit(1)).as("n_clusters"))
       .orderBy("cluster_size")
 
   def softDedupWeightsAt(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      threshold: Double = 0.8): DataFrame =
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame =
     softWeightsFrom(graft.sources.Tables(spark, sfDir, "documents"),
-      nearDupComponentsAt(spark, sfDir, threshold))
+      nearDupComponentsAt(spark, sfDir))
 
   def semanticSurvivorsAt(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      threshold: Double = 0.4): DataFrame =
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame =
     survivorsFrom(graft.sources.Tables(spark, sfDir, "documents"),
-      semanticComponentsAt(spark, sfDir, threshold))
+      semanticComponentsAt(spark, sfDir))
 
   def semanticSurvivorsQualityAt(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      threshold: Double = 0.4): DataFrame =
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame =
     keepBestQuality(graft.sources.Tables(spark, sfDir, "documents"),
-      semanticComponentsAt(spark, sfDir, threshold))
+      semanticComponentsAt(spark, sfDir))
 
   def dedupSummaryAt(
       spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {

@@ -163,19 +163,16 @@ object Dsir {
     * (explode + top-K join + exact long sum) — `(doc_id, n_tokens,
     * avg_logw_r)` on the nano grid. The streaming mapPartitions scorer
     * ([[Lm.scoreRow]] with the ratio model) reproduces these exactly. */
-  def nanoRatioScores(
-      docs: DataFrame,
-      targetLang: String = "en",
-      topK: Int = 4096): DataFrame = {
+  def nanoRatioScores(docs: DataFrame): DataFrame = {
     val all = toks(docs)(Seq("lang"))
     val rv = all.groupBy("t").agg(count(lit(1)).as("n"))
     val rt = rv.agg(sum("n").as("total"), count(lit(1)).as("vsz"))
-    val tv = all.where(col("lang") === targetLang)
+    val tv = all.where(col("lang") === "en")
       .groupBy("t").agg(count(lit(1)).as("nt"))
     val tt = tv.agg(coalesce(sum("nt"), lit(0L)).as("total"),
       count(lit(1)).as("vsz"))
     val top = rv.join(tv, Seq("t"), "left")
-      .orderBy(col("n").desc, col("t")).limit(topK)
+      .orderBy(col("n").desc, col("t")).limit(4096)
       .crossJoin(broadcast(rt.select(col("total").as("totR"), col("vsz").as("vszR"))))
       .crossJoin(broadcast(tt.select(col("total").as("totT"), col("vsz").as("vszT"))))
       .select(col("t"),
@@ -233,12 +230,10 @@ object Dsir {
     * whose scan order is arbitrary, and the registered query's oracle
     * compares rows positionally. */
   def importanceWeightsAt(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      targetLang: String = "en"): DataFrame = {
-    val path = graft.util.ArtifactMemo.path("dsirw", s"$sfDir|$targetLang") {
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
+    val path = graft.util.ArtifactMemo.path("dsirw", s"$sfDir|en") {
       out =>
-        importanceWeights(
-          graft.sources.Tables(spark, sfDir, "documents"), targetLang)
+        importanceWeights(graft.sources.Tables(spark, sfDir, "documents"))
           .write.mode("overwrite").parquet(out)
     }
     spark.read.parquet(path).orderBy("doc_id")
@@ -246,15 +241,13 @@ object Dsir {
 
   /** [[resample]] with the weights read through the memo. */
   def resampleAt(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      k: Int = 60, targetLang: String = "en"): DataFrame =
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame =
     resampleFrom(graft.sources.Tables(spark, sfDir, "documents"),
-      importanceWeightsAt(spark, sfDir, targetLang), k)
+      importanceWeightsAt(spark, sfDir), 60)
 
   /** [[selectionAudit]] over the memoized resample inputs. */
   def selectionAuditAt(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      k: Int = 60, targetLang: String = "en"): DataFrame =
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame =
     auditFrom(graft.sources.Tables(spark, sfDir, "documents"),
-      resampleAt(spark, sfDir, k, targetLang))
+      resampleAt(spark, sfDir))
 }

@@ -44,19 +44,17 @@ import org.apache.spark.sql.functions._
 object Mixture {
 
   /** Largest-remainder seat assignment over a per-source size frame
-    * `(source, <nCol>)`: √-temperature weights, `total div budgetDenom`
+    * `(source, <nCol>)`: √-temperature weights, `total div 2`
     * budget, all-integer math. Shared by the doc-count and token-count
     * allocations. */
-  private def allocateSeats(
-      counts: DataFrame, nCol: String, budgetDenom: Int): DataFrame = {
-    require(budgetDenom >= 1, "budgetDenom must be >= 1")
+  private def allocateSeats(counts: DataFrame, nCol: String): DataFrame = {
     val weighted = counts.withColumn(
       "weight", floor(sqrt(col(nCol).cast("double")) * lit(1e6)).cast("long"))
     val totals = weighted.agg(
       sum(col(nCol)).as("total"), sum(col("weight")).as("w_sum"))
     // all-integer seat math: prod/base/rem are exact in DECIMAL(38,0)
     val seats = weighted.crossJoin(broadcast(totals))
-      .withColumn("budget", expr(s"total div $budgetDenom"))
+      .withColumn("budget", expr("total div 2"))
       .withColumn("prod",
         col("budget").cast("decimal(38,0)") * col("weight").cast("decimal(38,0)"))
       .withColumn("base", expr("prod div cast(w_sum as decimal(38,0))"))
@@ -92,22 +90,22 @@ object Mixture {
       .drop("__pos", "__first")
   }
 
-  /** Per-source seat counts for `total div budgetDenom` documents:
+  /** Per-source seat counts for `total div 2` documents:
     * `(source, n_docs, weight, alloc, granted)` with `Σ alloc = budget`
     * and `granted = least(alloc, n_docs)`. */
-  def allocation(docs: DataFrame, budgetDenom: Int = 2): DataFrame =
+  def allocation(docs: DataFrame): DataFrame =
     allocateSeats(
       docs.groupBy("source").agg(count(lit(1)).as("n_docs")),
-      "n_docs", budgetDenom)
+      "n_docs")
 
   /** The token-budget twin of [[allocation]]: seats are TOKENS, the unit
     * a pretraining run actually budgets. `(source, n_tokens, weight,
-    * alloc, granted)` with `Σ alloc = total_tokens div budgetDenom`
+    * alloc, granted)` with `Σ alloc = total_tokens div 2`
     * exactly; weights are √-temperature over per-source token mass. */
-  def allocationTokens(docs: DataFrame, budgetDenom: Int = 2): DataFrame =
+  def allocationTokens(docs: DataFrame): DataFrame =
     allocateSeats(tokenCounts(docs)
       .groupBy("source").agg(sum(col("n_tok")).as("n_tokens")),
-      "n_tokens", budgetDenom)
+      "n_tokens")
 
   /** One tokenize pass shared by the token allocation and sample. */
   private def tokenCounts(docs: DataFrame): DataFrame =
@@ -121,8 +119,8 @@ object Mixture {
     * counts), so the whole sample carries a full oracle; its size is
     * `Σ granted` (= budget unless a source cannot fill its seats —
     * see [[allocation]]). */
-  def sample(docs: DataFrame, budgetDenom: Int = 2): DataFrame = {
-    val alloc = allocation(docs, budgetDenom).select(col("source"), col("granted"))
+  def sample(docs: DataFrame): DataFrame = {
+    val alloc = allocation(docs).select(col("source"), col("granted"))
     val keyed = docs.select(col("doc_id"), col("source"))
       .withColumn("__one", lit(1L))
     perSourcePrefix(keyed, Seq("source", "doc_id"), "__one", "__pfx")
@@ -146,8 +144,8 @@ object Mixture {
     * range-partitioned pass and two |sources|-row broadcasts, and the
     * corpus is tokenized once (the allocation aggregates the same
     * per-doc counts frame the prefix sum consumes). */
-  def sampleTokens(docs: DataFrame, budgetDenom: Int = 2): DataFrame =
-    sampleTokensCounted(tokenCounts(docs), budgetDenom)
+  def sampleTokens(docs: DataFrame): DataFrame =
+    sampleTokensCounted(tokenCounts(docs))
       .select(col("doc_id"), col("source"), col("n_tok"), col("tok_pfx"))
       .orderBy("doc_id")
 
@@ -159,7 +157,7 @@ object Mixture {
     * `granted`. Composed by
     * [[graft.streaming.CorpusIngest.cleanBatchBudget]], where the
     * counts come from the gated corpus rather than raw documents. */
-  def sampleTokensCounted(perDoc: DataFrame, budgetDenom: Int = 2): DataFrame = {
+  def sampleTokensCounted(perDoc: DataFrame): DataFrame = {
     // NOT fenced here (r19 optimization round, measured): the common
     // callers hand a cheap tokenize frame - a fence cost more in
     // barrier jobs than the duplicate scan (mixture_sample_tokens
@@ -168,7 +166,7 @@ object Mixture {
     // chain) fence before calling.
     val alloc = allocateSeats(
       perDoc.groupBy("source").agg(sum(col("n_tok")).as("n_tokens")),
-      "n_tokens", budgetDenom)
+      "n_tokens")
       .select(col("source"), col("granted"))
     perSourcePrefix(perDoc, Seq("source", "doc_id"), "n_tok", "tok_pfx")
       .join(broadcast(alloc), Seq("source"))
@@ -182,11 +180,9 @@ object Mixture {
     * assembly step between "cleaned corpus" and "training batches".
     * The sample already carries each doc's token count, so packing
     * adds no extra tokenize pass. */
-  def samplePacked(
-      docs: DataFrame, budgetDenom: Int = 2, windowTokens: Int = 512): DataFrame =
+  def samplePacked(docs: DataFrame): DataFrame =
     Packing.packWindowsCounted(
-      sampleTokens(docs, budgetDenom).select(col("doc_id"), col("n_tok")),
-      windowTokens)
+      sampleTokens(docs).select(col("doc_id"), col("n_tok")))
 
   /** Data-constrained repetition allocation (Muennighoff et al. 2023,
     * "Scaling Data-Constrained Language Models": repeating data up to
@@ -287,7 +283,7 @@ object Mixture {
     * or re-partition cannot reorder a shard.
     *
     * Output: `(doc_id, source, shard, pos)` with `pos` 0-based within
-    * shard, ordered by the hash. `shards` is the output-file count — at
+    * shard, ordered by the hash. The 8 shards are the output files — at
     * 100 TB thousands, each loader-window-sized; positions come from
     * ONE range-partitioned prefix sum over `(shard, hash)` plus a
     * |shards|-row broadcast of first positions, NOT a per-shard window
@@ -320,16 +316,14 @@ object Mixture {
       .orderBy("batch_id", "pos")
   }
 
-  def trainingOrder(
-      docs: DataFrame, budgetDenom: Int = 2, shards: Int = 8): DataFrame = {
-    require(shards >= 1, "shards must be >= 1")
-    val keyed = sampleTokens(docs, budgetDenom)
+  def trainingOrder(docs: DataFrame): DataFrame = {
+    val keyed = sampleTokens(docs)
       .select(col("doc_id"), col("source"))
       .withColumn("__h",
         md5(concat(col("doc_id").cast("string"), lit(":order"))))
       .withColumn("shard",
         pmod(conv(substring(col("__h"), 1, 8), 16, 10).cast("long"),
-          lit(shards.toLong)))
+          lit(8L)))
       .withColumn("__one", lit(1L))
     val pos = Packing.withGlobalOffsetBy(
       keyed, Seq("shard", "__h", "doc_id"), "__one", "__pos")
@@ -349,9 +343,8 @@ object Mixture {
     * consecutive same-source docs share a group id. No data-sized
     * window: the second rank is another range-partitioned prefix sum,
     * and the aggregates are run-keyed. */
-  def trainingOrderRuns(
-      docs: DataFrame, budgetDenom: Int = 2, shards: Int = 8): DataFrame = {
-    val ordered = trainingOrder(docs, budgetDenom, shards)
+  def trainingOrderRuns(docs: DataFrame): DataFrame = {
+    val ordered = trainingOrder(docs)
       .withColumn("__h",
         md5(concat(col("doc_id").cast("string"), lit(":order"))))
       .withColumn("__one", lit(1L))

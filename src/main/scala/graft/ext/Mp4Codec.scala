@@ -289,10 +289,10 @@ object Mp4Codec {
     * audio chunk f (its samples), stco entries pointing into the
     * interleaving — so the cross-modal checksum downstream pins the
     * sample-table logic (stsc/stco chunk association), not physical
-    * order. Audio rides a 'sowt' AudioSampleEntry (little-endian PCM),
+    * order. Audio rides a 'sowt' AudioSampleEntry (little-endian PCM, 8 kHz),
     * all audio chunks must carry the same sample count (one stsc run). */
   def encodeMjpegAv(w: Int, h: Int, jpegs: Seq[Array[Byte]],
-    audioChunks: Seq[Array[Int]], rate: Int = 8000): Array[Byte] = {
+    audioChunks: Seq[Array[Int]]): Array[Byte] = {
     require(w > 0 && h > 0 && jpegs.nonEmpty &&
       jpegs.length == audioChunks.length)
     val spf = audioChunks.head.length
@@ -356,7 +356,7 @@ object Mp4Codec {
       u32(0) ++ u32(nf.toLong * 40) ++ u32(0) ++ u32(0) ++
       u16(0) ++ u16(0) ++ u16(0x0100) ++ u16(0) ++ matrix ++
       u32(0) ++ u32(0))
-    val mdhdA = box("mdhd", u32(0) ++ u32(0) ++ u32(0) ++ u32(rate.toLong) ++
+    val mdhdA = box("mdhd", u32(0) ++ u32(0) ++ u32(0) ++ u32(8000) ++
       u32(nSamples) ++ u16(0x55c4) ++ u16(0))
     val hdlrA = box("hdlr", u32(0) ++ u32(0) ++
       "soun".getBytes("US-ASCII") ++ new Array[Byte](12) ++ Array[Byte](0))
@@ -364,7 +364,7 @@ object Mp4Codec {
     val entryA = box("sowt", new Array[Byte](6) ++ u16(1) ++
       u16(0) ++ u16(0) ++ u32(0) ++ // version/revision/vendor
       u16(1) ++ u16(16) ++ u16(0) ++ u16(0) ++ // mono, 16-bit
-      u32(rate.toLong << 16))
+      u32(8000L << 16))
     val stblA = box("stbl",
       box("stsd", u32(0) ++ u32(1) ++ entryA) ++
         box("stts", u32(0) ++ u32(1) ++ u32(nSamples) ++ u32(1)) ++

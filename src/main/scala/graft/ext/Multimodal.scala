@@ -756,7 +756,7 @@ object Multimodal {
 
   /** REAL pixel resampling end-to-end (closing the "geometry-only"
     * caveat on [[resize]] for the BMP path): decode the source bytes →
-    * nearest-neighbor resample to fit `maxDim`×`maxDim` (no upscaling;
+    * nearest-neighbor resample to fit 8×8 (no upscaling;
     * the [[resize]] scale/rounding contract: `max(1, round(dim·s))`) →
     * RE-ENCODE as a conforming BMP → DECODE the re-encoded bytes →
     * feature the re-decoded pixels. The features thus pin the whole
@@ -766,7 +766,7 @@ object Multimodal {
     * (x'·w ÷ w', y'·h ÷ h') with floor division — so DuckDB replays it
     * exactly from the synth formula. Non-conforming payloads drop (row
     * count pins it). */
-  def bmpResizeFeatures(media: DataFrame, maxDim: Int = 8): DataFrame = {
+  def bmpResizeFeatures(media: DataFrame): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
     media.select(col("media_id"), col("payload"))
@@ -774,7 +774,7 @@ object Multimodal {
       .mapPartitions { rows =>
         rows.flatMap { case (id, payload) =>
           BmpCodec.decode(payload).flatMap { case (w, h, px) =>
-            val s = math.min(1.0, maxDim.toDouble / math.max(w, h))
+            val s = math.min(1.0, 8.0 / math.max(w, h))
             val tw = if (s >= 1.0) w else math.max(1, math.round(w * s).toInt)
             val th = if (s >= 1.0) h else math.max(1, math.round(h * s).toInt)
             val out = new Array[Int](tw * th)

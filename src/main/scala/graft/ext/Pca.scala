@@ -139,13 +139,13 @@ object Pca {
   /** Registered-query view of the model: one row per (component,
     * dimension) with the weight, plus the component's eigenvalue and
     * explained-variance ratio. */
-  def components(embeddings: DataFrame, p: Int = numComponents): DataFrame =
-    componentsOf(fit(embeddings, p), embeddings.sparkSession, p)
+  def components(embeddings: DataFrame): DataFrame =
+    componentsOf(fit(embeddings), embeddings.sparkSession)
 
   private def componentsOf(
-      m: Model, spark: org.apache.spark.sql.SparkSession, p: Int): DataFrame = {
+      m: Model, spark: org.apache.spark.sql.SparkSession): DataFrame = {
     import spark.implicits._
-    (0 until p).flatMap { c =>
+    (0 until numComponents).flatMap { c =>
       (0 until dim).map { i =>
         (c, i, BigDecimal(m.comps(c)(i)).setScale(6,
             BigDecimal.RoundingMode.HALF_UP).toDouble,
@@ -189,22 +189,20 @@ object Pca {
   // hundred driver-side doubles — plain JVM memoization, immune to the
   // bench harness's cache release between queries.
   private def fitAt(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String, p: Int): Model =
-    graft.util.ArtifactMemo.once("pcafit", s"$sfDir|$p") {
-      fit(graft.sources.Tables(spark, sfDir, "embeddings"), p)
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): Model =
+    graft.util.ArtifactMemo.once("pcafit", s"$sfDir|$numComponents") {
+      fit(graft.sources.Tables(spark, sfDir, "embeddings"))
     }
 
   /** [[components]] through the per-fixture model memo — the
     * registered-query entry point (same rows, same oracle). */
   def componentsAt(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      p: Int = numComponents): DataFrame =
-    componentsOf(fitAt(spark, sfDir, p), spark, p)
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame =
+    componentsOf(fitAt(spark, sfDir), spark)
 
   /** [[project]] through the same memo. */
   def projectAt(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      p: Int = numComponents): DataFrame =
-    projectOf(fitAt(spark, sfDir, p),
-      graft.sources.Tables(spark, sfDir, "embeddings"), p)
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame =
+    projectOf(fitAt(spark, sfDir),
+      graft.sources.Tables(spark, sfDir, "embeddings"), numComponents)
 }

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * (the same trick [[Similarity.quantizedIvfTopK]] uses). Codebooks are
   * data-sampled exactly like the IVF centroids — every [[pqStride]]-th
   * vector's subvector is a codeword (codeword id = donor vec_id), CAPPED
-  * at [[pqMaxCw]] codewords per subspace (`vec_id < stride·256`), so C is
+  * at [[pqMaxCw]] codewords per subspace (`vec_id < pqStride·256`), so C is
   * a fixed design constant at any corpus size, the FAISS convention — and
   * there is no trained model to ship: bit-reproducible on any cluster.
   *
@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   *  - an ADC query builds a `|q|·m·C` lookup table (broadcast), scans ONLY
   *    the 8-byte code rows, and reduces per (query, vector) with map-side
   *    partials — the float vectors are touched by nothing but the final
-  *    refine fetch on `refineFactor·k` survivors.
+  *    refine fetch on `4·k` survivors.
   * At 100 TB the code table is what lives hot (32× less scan bandwidth);
   * the float table is point-read by the refine stage only, which is the
   * [[graft.sinks.AnnIndex]] bucketed-fetch discipline.
@@ -57,22 +57,22 @@ object Pq {
     * corpus) from dividing to NaN, without perturbing any real norm. */
   private val tiny = java.lang.Double.MIN_VALUE
 
-  /** Per-subspace int8 codebooks: every `stride`-th vector donates its j-th
+  /** Per-subspace int8 codebooks: every `pqStride`-th vector donates its j-th
     * subvector, codeword id = donor vec_id. `cwdot` (‖cw‖², exact int) rides
     * along so encoders and ADC both read it instead of recomputing. */
   /** The int8 code frame `(vec_id, qv)` the whole family derives from. */
   private def q8Of(embeddings: DataFrame): DataFrame =
     Similarity.quantize(embeddings).select(col("vec_id"), col("qv"))
 
-  private[graft] def codebookFrom(q8: DataFrame, stride: Int): DataFrame =
-    q8.where(pmod(col("vec_id"), lit(stride)) === 0 &&
-        col("vec_id") < stride.toLong * pqMaxCw)
+  private[graft] def codebookFrom(q8: DataFrame): DataFrame =
+    q8.where(pmod(col("vec_id"), lit(pqStride)) === 0 &&
+        col("vec_id") < pqStride.toLong * pqMaxCw)
       .select(col("vec_id").as("cw_id"), posexplode(subvectors(col("qv"))))
       .select(col("pos").as("j"), col("cw_id"),
         col("col").as("cw"), dot(col("col"), col("col")).as("cwdot"))
 
-  def codebook(embeddings: DataFrame, stride: Int = pqStride): DataFrame =
-    codebookFrom(q8Of(embeddings), stride)
+  def codebook(embeddings: DataFrame): DataFrame =
+    codebookFrom(q8Of(embeddings))
 
   /** array(64 int8-as-double) → array of `pqM` 8-dim subvectors. */
   private def subvectors(qv: Column): Column =
@@ -113,9 +113,9 @@ object Pq {
     * argmin shuffle; the only shuffle-bound rows are the final skinny
     * (vec_id, j, code) triples. At 1000 executors the literal ships once
     * per task closure, exactly how a trained PQ codebook deploys. */
-  def codes(embeddings: DataFrame, stride: Int = pqStride): DataFrame = {
+  def codes(embeddings: DataFrame): DataFrame = {
     val q8 = q8Of(embeddings)
-    encodeWith(q8, flatCodebook(codebookFrom(q8, stride)))
+    encodeWith(q8, flatCodebook(codebookFrom(q8)))
   }
 
   /** The ADC scorer both the in-plan path and the persisted-index probe
@@ -173,26 +173,23 @@ object Pq {
   def adcTopK(
       embeddings: DataFrame,
       numQueries: Int,
-      k: Int,
-      stride: Int = pqStride): DataFrame = {
+      k: Int): DataFrame = {
     val q8 = Fence.cached(q8Of(embeddings))
-    val cb = codebookFrom(q8, stride)
+    val cb = codebookFrom(q8)
     adcRank(
       encodeWith(q8, flatCodebook(cb)), cb,
       q8.where(col("vec_id") < numQueries), k)
   }
 
-  /** ADC shortlist (`refineFactor·k`) → exact float cosine re-rank — the
+  /** ADC shortlist (`4·k`) → exact float cosine re-rank — the
     * FAISS refine pattern over PQ codes: the 32×-cheap scan proposes,
-    * `|q|·refineFactor·k` float point-reads decide. Reported similarities
+    * `|q|·4·k` float point-reads decide. Reported similarities
     * are the TRUE cosines; recall dominates the raw ADC rank at equal k. */
   def adcRefineTopK(
       embeddings: DataFrame,
       numQueries: Int,
-      k: Int,
-      refineFactor: Int = 4,
-      stride: Int = pqStride): DataFrame = {
-    val cands = adcTopK(embeddings, numQueries, k * refineFactor, stride)
+      k: Int): DataFrame = {
+    val cands = adcTopK(embeddings, numQueries, k * 4)
       .select(col("q_id"), col("neighbor_id"))
     val base = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val w = org.apache.spark.sql.expressions.Window
@@ -214,28 +211,23 @@ object Pq {
     * one deterministic plan: IVF cell pruning (over the int8 codes, same
     * cells as [[Similarity.quantizedIvfTopK]]) bounds WHICH vectors are
     * scored, PQ/ADC lookups bound WHAT each score costs, and an exact
-    * float re-rank of the `refineFactor·k` survivors makes the reported
+    * float re-rank of the `4·k` survivors makes the reported
     * similarities TRUE cosines. At 100 TB this is the only shape that
     * works: scan cost = (nprobe/C)·N candidates × m byte-lookups each,
-    * with float vectors touched only for `|q|·refineFactor·k` point
+    * with float vectors touched only for `|q|·4·k` point
     * reads. Composes three independently-oracled parts, so it keeps a
     * complete DuckDB oracle. */
   def ivfAdcTopK(
       embeddings: DataFrame,
       numQueries: Int,
-      k: Int,
-      refineFactor: Int = 4,
-      ivfStride: Int = Similarity.ivfStride,
-      nprobe: Int = Similarity.ivfProbes,
-      stride: Int = pqStride): DataFrame = {
+      k: Int): DataFrame = {
     // ONE cached quantize pass feeds the cell pruning, codebook collect,
     // encode scan, and query-side norm/LUT slices
     val q8 = Fence.cached(q8Of(embeddings))
     val cands = Similarity.ivfCandidates(
-        q8.select(col("vec_id"), col("qv").as("embedding")),
-        numQueries, ivfStride, nprobe)
+        q8.select(col("vec_id"), col("qv").as("embedding")), numQueries)
       .select(col("q_id"), col("vec_id"))
-    val cb = codebookFrom(q8, stride)
+    val cb = codebookFrom(q8)
     val cds = encodeWith(q8, flatCodebook(cb))
     val qn8 = q8
       .where(col("vec_id") < numQueries)
@@ -270,7 +262,7 @@ object Pq {
       .partitionBy(col("q_id")).orderBy(col("asim").desc, col("vec_id"))
     val shortlist = adc
       .withColumn("arnk", row_number().over(sw))
-      .where(col("arnk") <= k * refineFactor)
+      .where(col("arnk") <= k * 4)
       .select(col("q_id"), col("vec_id").as("neighbor_id"))
     // exact float refine of the survivors
     val base = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("v"))
@@ -301,14 +293,13 @@ object Pq {
   def codeNearDup(
       embeddings: DataFrame,
       minShared: Int = 2,
-      threshold: Double = 0.3,
-      stride: Int = pqStride): DataFrame = {
+      threshold: Double = 0.3): DataFrame = {
     val q8 = Fence.cached(q8Of(embeddings))
     // Drop PqEncodeAll's fail-closed ragged-vector sentinel (-1 in every
     // subspace) BEFORE the self-join: two corrupt vectors would collide
     // on all 8 (j, -1) keys and surface as a bogus n_shared=8 candidate,
     // then feed a cosine over mismatched-length arrays (ADVICE r9).
-    val cds = encodeWith(q8, flatCodebook(codebookFrom(q8, stride)))
+    val cds = encodeWith(q8, flatCodebook(codebookFrom(q8)))
       .where(col("code") >= 0)
     val pairs = cds.as("a")
       .join(cds.as("b"),
@@ -333,8 +324,8 @@ object Pq {
     * dashboard that catches a degenerate codebook (few codes used → the
     * subspace quantizes everything onto a point and ADC loses all
     * discrimination there). One skinny (j, code) aggregate. */
-  def codeStats(embeddings: DataFrame, stride: Int = pqStride): DataFrame =
-    codes(embeddings, stride)
+  def codeStats(embeddings: DataFrame): DataFrame =
+    codes(embeddings)
       .groupBy("j", "code")
       .agg(count(lit(1)).as("pop"))
       .groupBy("j")
@@ -354,11 +345,10 @@ object Pq {
   def adcRecall(
       embeddings: DataFrame,
       numQueries: Int,
-      k: Int,
-      stride: Int = pqStride): DataFrame = {
+      k: Int): DataFrame = {
     val exact = Similarity.cosineTopK(embeddings, numQueries, k)
       .select(col("q_id"), col("neighbor_id"))
-    val approx = adcTopK(embeddings, numQueries, k, stride)
+    val approx = adcTopK(embeddings, numQueries, k)
       .select(col("q_id").as("aq"), col("neighbor_id").as("approx_id"))
     exact
       .join(approx,

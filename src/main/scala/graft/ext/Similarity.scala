@@ -108,13 +108,11 @@ object Similarity {
   def ivfTopKFiltered(
       embeddings: DataFrame,
       numQueries: Int,
-      k: Int,
-      stride: Int = ivfStride,
-      nprobe: Int = ivfProbes): DataFrame = {
+      k: Int): DataFrame = {
     val labels = embeddings.select(col("vec_id"), col("label"))
     val qlabels = labels.where(col("vec_id") < numQueries)
       .select(col("vec_id").as("q_id"), col("label").as("qlabel"))
-    val cands = ivfCandidates(embeddings, numQueries, stride, nprobe)
+    val cands = ivfCandidates(embeddings, numQueries)
       .join(broadcast(labels), Seq("vec_id"))
       .join(broadcast(qlabels), Seq("q_id"))
       .where(col("label") === col("qlabel"))
@@ -129,12 +127,10 @@ object Similarity {
   def filteredAnnRecall(
       embeddings: DataFrame,
       numQueries: Int,
-      k: Int,
-      stride: Int = ivfStride,
-      nprobe: Int = ivfProbes): DataFrame = {
+      k: Int): DataFrame = {
     val exact = cosineTopKFiltered(embeddings, numQueries, k)
       .select(col("q_id"), col("neighbor_id"))
-    val approx = ivfTopKFiltered(embeddings, numQueries, k, stride, nprobe)
+    val approx = ivfTopKFiltered(embeddings, numQueries, k)
       .select(col("q_id").as("aq"), col("neighbor_id").as("aid"))
     exact
       .join(approx,
@@ -205,17 +201,17 @@ object Similarity {
 
   /** (table_id, bucket) pairs of a vector — the corpus side explodes to L
     * rows per vector, shuffled once on (table, bucket); no all-pairs. */
-  private[ext] def bucketed(base: DataFrame, dim: Int): DataFrame =
+  private[ext] def bucketed(base: DataFrame): DataFrame =
     base.select(
       col("vec_id"), col("v"),
-      posexplode(allBuckets(col("v"), dim)).as(Seq("table_id", "bucket")))
+      posexplode(allBuckets(col("v"), 64)).as(Seq("table_id", "bucket")))
 
   /** ANN top-k via multi-table hyperplane LSH with 1-bit multi-probe.
     * Recall measured against [[cosineTopK]] by the `ann_recall` query. */
-  def lshTopK(embeddings: DataFrame, numQueries: Int, k: Int, dim: Int = 64): DataFrame = {
+  def lshTopK(embeddings: DataFrame, numQueries: Int, k: Int): DataFrame = {
     val base = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val corpus = bucketed(base, dim)
-    val queries = bucketed(base.where(col("vec_id") < numQueries), dim)
+    val corpus = bucketed(base)
+    val queries = bucketed(base.where(col("vec_id") < numQueries))
       .select(col("vec_id").as("q_id"), col("v").as("q"),
         col("table_id").as("q_table"), col("bucket").as("q_bucket"))
       // multi-probe: the exact bucket + every 1-bit flip
@@ -260,10 +256,7 @@ object Similarity {
     *  - '''packed key''': `(table_id << 32) | bucket` — the self-join
     *    exchanges one long instead of two ints + hashes one key.
     */
-  def lshNearPairs(
-      embeddings: DataFrame,
-      threshold: Double,
-      dim: Int = 64): DataFrame = {
+  def lshNearPairs(embeddings: DataFrame, threshold: Double): DataFrame = {
     val base = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     // candidate generation shuffles only (id, packed key) — the 64-dim
     // vectors stay out of the self-join and are re-attached for the exact
@@ -274,7 +267,7 @@ object Similarity {
     // both self-join sides derive from ONE persisted sketch pass (ids +
     // bucket ints only — L rows per vector, never the vectors)
     val bk = Fence.cached(
-      bucketed(base, dim).select("vec_id", "table_id", "bucket"))
+      bucketed(base).select("vec_id", "table_id", "bucket"))
     val b = bk.select(col("vec_id"), packed(col("bucket")).as("key"))
     val probed = bk.select(
       col("vec_id"), col("table_id"),
@@ -334,14 +327,11 @@ object Similarity {
     * probe list) under a different scorer: one `(q_id, q, vec_id, v)` row
     * per (query, vector-in-a-probed-cell) pair, query excluded. */
   private[ext] def ivfCandidates(
-      embeddings: DataFrame,
-      numQueries: Int,
-      stride: Int,
-      nprobe: Int): DataFrame = {
+      embeddings: DataFrame, numQueries: Int): DataFrame = {
     val base = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val cents = base.where(pmod(col("vec_id"), lit(stride)) === 0)
+    val cents = base.where(pmod(col("vec_id"), lit(ivfStride)) === 0)
       .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-    ivfCandidatesWith(base, cents, numQueries, nprobe)
+    ivfCandidatesWith(base, cents, numQueries)
   }
 
   /** [[ivfCandidates]] against an ARBITRARY centroid frame `(cent_id,
@@ -351,8 +341,7 @@ object Similarity {
   private[ext] def ivfCandidatesWith(
       base: DataFrame,
       cents: DataFrame,
-      numQueries: Int,
-      nprobe: Int): DataFrame = {
+      numQueries: Int): DataFrame = {
     // cell assignment: [[assignTo]] — ONE definition of the argmax/
     // tie-break shared with the Lloyd tier (a divergent copy here would
     // silently split IVF probing from Lloyd assignment)
@@ -366,7 +355,7 @@ object Similarity {
       .crossJoin(broadcast(cents))
       .withColumn("qsim", cosine(col("q"), col("cv")))
       .withColumn("qrn", row_number().over(qw))
-      .where(col("qrn") <= nprobe)
+      .where(col("qrn") <= ivfProbes)
       .select(col("q_id"), col("q"), col("cent_id").as("cell"))
     assigned
       .join(broadcast(probes), Seq("cell"))
@@ -374,13 +363,8 @@ object Similarity {
       .select(col("q_id"), col("q"), col("vec_id"), col("v"))
   }
 
-  def ivfTopK(
-      embeddings: DataFrame,
-      numQueries: Int,
-      k: Int,
-      stride: Int = ivfStride,
-      nprobe: Int = ivfProbes): DataFrame =
-    rankCandidates(ivfCandidates(embeddings, numQueries, stride, nprobe), k)
+  def ivfTopK(embeddings: DataFrame, numQueries: Int, k: Int): DataFrame =
+    rankCandidates(ivfCandidates(embeddings, numQueries), k)
 
   private def rankCandidates(cands: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -399,12 +383,11 @@ object Similarity {
       embeddings: DataFrame,
       cents: DataFrame,
       numQueries: Int,
-      k: Int,
-      nprobe: Int = ivfProbes): DataFrame =
+      k: Int): DataFrame =
     rankCandidates(
       ivfCandidatesWith(
         embeddings.select(col("vec_id"), asDouble(col("embedding")).as("v")),
-        cents, numQueries, nprobe),
+        cents, numQueries),
       k)
 
   /** Does training the coarse quantizer buy recall? Per query, IVF
@@ -412,12 +395,7 @@ object Similarity {
     * and (b) the same centroids after ONE Lloyd step — the measured
     * answer to "is [[lloydStep]] worth running", deterministic end to
     * end and fully oracle-able. */
-  def lloydRecall(
-      embeddings: DataFrame,
-      numQueries: Int,
-      k: Int,
-      stride: Int = ivfStride,
-      nprobe: Int = ivfProbes): DataFrame = {
+  def lloydRecall(embeddings: DataFrame, numQueries: Int, k: Int): DataFrame = {
     val exact = cosineTopK(embeddings, numQueries, k)
       .select(col("q_id"), col("neighbor_id"))
     def hits(approx: DataFrame, name: String): DataFrame = exact
@@ -426,13 +404,11 @@ object Similarity {
         "left")
       .groupBy(exact("q_id").as("q_id"))
       .agg(round(count(col("aid")).cast("double") / k, 6).as(name))
-    val sampled = hits(ivfTopK(embeddings, numQueries, k, stride, nprobe),
-      "recall_sampled_r")
+    val sampled = hits(ivfTopK(embeddings, numQueries, k), "recall_sampled_r")
     val refined = hits(
       ivfTopKWith(embeddings,
-        lloydCentroids(embeddings, stride)
-          .select(col("cent_id"), col("ncv").as("cv")),
-        numQueries, k, nprobe),
+        lloydCentroids(embeddings).select(col("cent_id"), col("ncv").as("cv")),
+        numQueries, k),
       "recall_lloyd_r")
     sampled.join(refined, Seq("q_id"))
       .select(col("q_id").as("qid"), col("recall_sampled_r"),
@@ -543,7 +519,7 @@ object Similarity {
   }
 
   /** The N×C centroid-ranking pass shared by [[knnGraph]] and the
-    * cell-assignment consumers ([[knnVsCellClusters]] derives BOTH of
+    * cell-assignment consumers ([[knnCellComponentPaths]] derives BOTH of
     * its clustering methods from this one frame — VERDICT r7 item 5):
     * each vector's top-`nprobe` cells, skinny (vec_id, prn, cell)
     * triples only, cached. The rank-1 row is the vector's home cell
@@ -688,67 +664,12 @@ object Similarity {
       embeddings: DataFrame,
       k: Int = 3,
       threshold: Double = 0.4,
-      stride: Int = ivfStride,
-      nprobe: Int = knnProbes): DataFrame =
+      stride: Int = ivfStride): DataFrame =
     Dedup.components(
-      knnGraph(embeddings, k, stride, nprobe)
+      knnGraph(embeddings, k, stride)
         .where(col("sim_r") >= threshold)
         .select(col("vec_id").as("doc_a"), col("nbr_id").as("doc_b")))
       .orderBy("doc_id")
-
-  /** Cluster-count/size comparison of the two semantic clusterings over
-    * the same embeddings: [[knnClusters]] (k-NN graph components) vs the
-    * IVF-cell pair components [[Dedup.semanticPairs]] feeds SemDeDup —
-    * one row per (method, cluster_size). The view a dedup-policy choice
-    * reads: the graph method typically finds more, smaller clusters at
-    * the same threshold because edges must survive the per-vector top-k,
-    * not just share a cell. Both inputs are (doc_id, cluster_id) longs;
-    * the histogram aggregates are vocabulary-sized.
-    *
-    * SHARED INPUT (VERDICT r7 item 5 — this query previously re-ran the
-    * N×C centroid pass once per method, ~3 s of its 5 s at sf0.1): both
-    * methods now derive from ONE cached [[rankedCells]] frame. The k-NN
-    * edges read the full top-`nprobe` ranking; the cell pairs read its
-    * rank-1 rows — the identical argmax (max csim, tie → lowest
-    * cent_id) [[Dedup.semanticPairs]] computes, with the identical
-    * RAW-sim ≥ threshold gate, so both histograms are unchanged
-    * bit-for-bit (the oracle pins this). */
-  def knnVsCellClusters(
-      embeddings: DataFrame,
-      k: Int = 3,
-      threshold: Double = 0.4,
-      stride: Int = ivfStride,
-      nprobe: Int = knnProbes): DataFrame = {
-    val base = Fence.cached(embeddings.select(
-      col("vec_id"), asDouble(col("embedding")).as("v")))
-    val ranked = rankedCells(base, stride, nprobe)
-    def histo(clusters: DataFrame, method: String) =
-      clusters
-        .groupBy("cluster_id").agg(count(lit(1)).as("sz"))
-        .groupBy(col("sz").as("cluster_size"))
-        .agg(count(lit(1)).as("n_clusters"))
-        .select(lit(method).as("method"), col("cluster_size"),
-          col("n_clusters"))
-    // knnClusters' edge gate over the shared ranking
-    val knnEdges = knnGraphFrom(base, ranked, k)
-      .where(col("sim_r") >= threshold)
-      .select(col("vec_id").as("doc_a"), col("nbr_id").as("doc_b"))
-    // semanticPairs' cell pairs over the same rank-1 assignment (raw-sim
-    // threshold, exactly its gate), occupancy-capped like semanticPairs
-    val withCell = base.join(
-      capCells(ranked.where(col("prn") === 1).select(col("vec_id"), col("cell"))),
-      Seq("vec_id"))
-    val cellPairs = withCell
-      .select(col("cell"), col("vec_id").as("doc_a"), col("v").as("v_a"))
-      .join(withCell.select(
-        col("cell"), col("vec_id").as("doc_b"), col("v").as("v_b")), Seq("cell"))
-      .where(col("doc_a") < col("doc_b"))
-      .where(cosine(col("v_a"), col("v_b")) >= threshold)
-      .select(col("doc_a"), col("doc_b"))
-    histo(Dedup.components(knnEdges), "knn_graph")
-      .unionAll(histo(Dedup.components(cellPairs), "ivf_cell"))
-      .orderBy("method", "cluster_size")
-  }
 
   // One k-NN components pass per (fixture, params) per JVM, parquet-
   // memoized: `knn_clusters` and
@@ -764,10 +685,10 @@ object Similarity {
     * cell method) can donate those to the build instead of paying the
     * N×C ranking pass twice; on a memo hit the thunk never runs. */
   private def knnComponentsPath(
-      spark: SparkSession, sfDir: String, k: Int, threshold: Double,
-      stride: Int, nprobe: Int)(edges: => DataFrame): String =
+      spark: SparkSession, sfDir: String, k: Int, threshold: Double)(
+      edges: => DataFrame): String =
     graft.util.ArtifactMemo.path(
-      "knncomp", s"$sfDir|$k|$threshold|$stride|$nprobe") { out =>
+      "knncomp", s"$sfDir|$k|$threshold|$ivfStride|$knnProbes") { out =>
       Dedup.components(edges).write.mode("overwrite").parquet(out)
     }
 
@@ -779,12 +700,11 @@ object Similarity {
     * the registered-query entry point (same rows, same oracle). */
   def knnClustersAt(
       spark: SparkSession, sfDir: String,
-      k: Int = 3, threshold: Double = 0.4,
-      stride: Int = ivfStride, nprobe: Int = knnProbes): DataFrame = {
-    val path = knnComponentsPath(spark, sfDir, k, threshold, stride, nprobe) {
+      k: Int = 3, threshold: Double = 0.4): DataFrame = {
+    val path = knnComponentsPath(spark, sfDir, k, threshold) {
       thresholdEdges(
-        knnGraph(graft.sources.Tables(spark, sfDir, "embeddings"),
-          k, stride, nprobe), threshold)
+        knnGraph(graft.sources.Tables(spark, sfDir, "embeddings"), k),
+        threshold)
     }
     spark.read.parquet(path).orderBy("doc_id")
   }
@@ -797,12 +717,11 @@ object Similarity {
     * build seconds and double-count it against the timed query row. */
   def knnCellComponentPaths(
       spark: SparkSession, sfDir: String,
-      k: Int = 3, threshold: Double = 0.4,
-      stride: Int = ivfStride, nprobe: Int = knnProbes): (String, String) = {
+      k: Int = 3, threshold: Double = 0.4): (String, String) = {
     val embeddings = graft.sources.Tables(spark, sfDir, "embeddings")
     val base = Fence.cached(embeddings.select(
       col("vec_id"), asDouble(col("embedding")).as("v")))
-    val ranked = rankedCells(base, stride, nprobe)
+    val ranked = rankedCells(base, ivfStride, knnProbes)
     val withCell = base.join(
       capCells(ranked.where(col("prn") === 1).select(col("vec_id"), col("cell"))),
       Seq("vec_id"))
@@ -813,7 +732,7 @@ object Similarity {
       .where(col("doc_a") < col("doc_b"))
       .where(cosine(col("v_a"), col("v_b")) >= threshold)
       .select(col("doc_a"), col("doc_b"))
-    val knnPath = knnComponentsPath(spark, sfDir, k, threshold, stride, nprobe) {
+    val knnPath = knnComponentsPath(spark, sfDir, k, threshold) {
       thresholdEdges(knnGraphFrom(base, ranked, k), threshold)
     }
     // the key carries every parameter cellPairs depends on (nprobe
@@ -821,25 +740,27 @@ object Similarity {
     // for nprobe ≥ 1, but a key that over-splits only costs a rebuild,
     // while one that under-splits serves a stale artifact)
     val cellPath = graft.util.ArtifactMemo.path(
-      "knncellcomp", s"$sfDir|$threshold|$stride|$nprobe") { out =>
+      "knncellcomp", s"$sfDir|$threshold|$ivfStride|$knnProbes") { out =>
       Dedup.components(cellPairs).write.mode("overwrite").parquet(out)
     }
     (knnPath, cellPath)
   }
 
-  /** [[knnVsCellClusters]] with BOTH component passes resolved through
-    * per-fixture memos: the k-NN side reads the labeling `knnClustersAt`
-    * populates, and the cell side's pairwise-verify + components loop is
-    * memoized under its own key (VERDICT r10 item 2 — it used to run
-    * live inside the timed query every round, ~2 s of the query's 3 s at
-    * sf0.1, because its threshold differs from the semantic-dedup memo).
+  /** Cluster-count/size comparison of the two semantic clusterings over
+    * the same embeddings: [[knnClusters]] (k-NN graph components) vs the
+    * IVF-cell pair components [[Dedup.semanticPairs]] feeds SemDeDup —
+    * one row per (method, cluster_size). Both component passes resolve
+    * through per-fixture memos: the k-NN side reads the labeling
+    * `knnClustersAt` populates, and the cell side's pairwise-verify +
+    * components loop is memoized under its own key (VERDICT r10 item 2 —
+    * it used to run live inside the timed query every round, ~2 s of the
+    * query's 3 s at sf0.1, because its threshold differs from the
+    * semantic-dedup memo).
     * The histograms are unchanged bit-for-bit — the oracle pins them. */
   def knnVsCellClustersAt(
       spark: SparkSession, sfDir: String,
-      k: Int = 3, threshold: Double = 0.4,
-      stride: Int = ivfStride, nprobe: Int = knnProbes): DataFrame = {
-    val (knnPath, cellPath) =
-      knnCellComponentPaths(spark, sfDir, k, threshold, stride, nprobe)
+      k: Int = 3, threshold: Double = 0.4): DataFrame = {
+    val (knnPath, cellPath) = knnCellComponentPaths(spark, sfDir, k, threshold)
     def histo(clusters: DataFrame, method: String) =
       clusters
         .groupBy("cluster_id").agg(count(lit(1)).as("sz"))
@@ -875,7 +796,7 @@ object Similarity {
     * query (never the corpus). */
   def mmrTopK(
       embeddings: DataFrame, numQueries: Int = 10, n: Int = 20,
-      k: Int = 10, lambdaRel: Double = 0.5): DataFrame = {
+      k: Int = 10): DataFrame = {
     val base = Fence.cached(embeddings.select(
       col("vec_id"), asDouble(col("embedding")).as("v")))
     val qframe = base.where(col("vec_id") < numQueries)
@@ -889,7 +810,7 @@ object Similarity {
       .where(col("rk") <= n)
       .select(col("q_id"), col("vec_id").as("cand_id"),
         round(col("sim"), 6).as("qs"), col("v")),
-      k, lambdaRel)
+      k)
   }
 
   /** [[mmrTopK]] with the candidate pool served by the IVF probe instead
@@ -900,24 +821,23 @@ object Similarity {
     * IVF replay's ranked candidates. */
   def mmrTopKIvf(
       embeddings: DataFrame, numQueries: Int = 10, n: Int = 20,
-      k: Int = 10, lambdaRel: Double = 0.5,
-      stride: Int = ivfStride, nprobe: Int = ivfProbes): DataFrame = {
+      k: Int = 10): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
     mmrFromCandidates(
-      ivfCandidates(embeddings, numQueries, stride, nprobe)
+      ivfCandidates(embeddings, numQueries)
         .withColumn("sim", cosine(col("q"), col("v")))
         .withColumn("rk", row_number().over(w))
         .where(col("rk") <= n)
         .select(col("q_id"), col("vec_id").as("cand_id"),
           round(col("sim"), 6).as("qs"), col("v")),
-      k, lambdaRel)
+      k)
   }
 
   /** The shared MMR greedy over a prepared candidate frame
     * (q_id, cand_id, qs = 6-dp-rounded query sim, v). */
   private def mmrFromCandidates(
-      cand0: DataFrame, k: Int, lambdaRel: Double): DataFrame = {
+      cand0: DataFrame, k: Int): DataFrame = {
     val spark = cand0.sparkSession
     import spark.implicits._
     val cand = Fence.cached(cand0)
@@ -957,10 +877,11 @@ object Similarity {
             val div =
               if (selected.isEmpty) 0.0
               else selected.iterator.map(s => pairSim(id, s)).max
-            val score = lambdaRel * qs - (1 - lambdaRel) * div
+            // twice the λ = 0.5 MMR score: the same argmax and ties
+            val score = qs - div
             if (score > bestScore || (score == bestScore && id < bestId)) {
               bestScore = score; bestId = id; bestIdx = i
-              bestMicro = math.floor((qs - div) * 1e6 + 0.5).toLong
+              bestMicro = math.floor(score * 1e6 + 0.5).toLong
             }
             i += 1
           }
@@ -1046,26 +967,24 @@ object Similarity {
   def quantizedIvfTopK(
       embeddings: DataFrame,
       numQueries: Int,
-      k: Int,
-      stride: Int = ivfStride,
-      nprobe: Int = ivfProbes): DataFrame =
+      k: Int): DataFrame =
     ivfTopK(
       quantize(embeddings).select(col("vec_id"), col("qv").as("embedding")),
-      numQueries, k, stride, nprobe)
+      numQueries, k)
 
   /** Two-stage refined ANN — the FAISS `IndexRefineFlat`-over-SQ8
     * serving pattern: the int8 IVF path ([[quantizedIvfTopK]]) GENERATES
-    * `refineFactor·k` candidates per query from its 4×-denser sublinear
+    * `3·k` candidates per query from its 4×-denser sublinear
     * scans, then ONLY those candidates' float vectors are fetched and
     * exactly re-ranked to the final top-k. The quantization's ranking
     * error is confined to the candidate CUT (a true neighbor the int8
-    * ranking pushed below `refineFactor·k` stays lost); everything that
+    * ranking pushed below `3·k` stays lost); everything that
     * survives the cut is ordered by exact float cosine, so reported
     * similarities are the true ones and recall strictly dominates the
     * unrefined path at the same probe budget.
     *
     * Scale: stage 1 is [[quantizedIvfTopK]]'s shape unchanged; stage 2
-    * touches |q|·refineFactor·k skinny (q_id, neighbor_id) rows, a
+    * touches |q|·3·k skinny (q_id, neighbor_id) rows, a
     * broadcast of the query vectors, and ONE keyed fetch of the
     * candidates' float rows (at serving scale, point-reads against a
     * vec_id-bucketed table — the [[graft.sinks.AnnIndex]] layout
@@ -1075,12 +994,8 @@ object Similarity {
   def quantizedIvfRefine(
       embeddings: DataFrame,
       numQueries: Int,
-      k: Int,
-      refineFactor: Int = 3,
-      stride: Int = ivfStride,
-      nprobe: Int = ivfProbes): DataFrame = {
-    val cands = quantizedIvfTopK(
-      embeddings, numQueries, k * refineFactor, stride, nprobe)
+      k: Int): DataFrame = {
+    val cands = quantizedIvfTopK(embeddings, numQueries, k * 3)
       .select(col("q_id"), col("neighbor_id"))
     val base = embeddings.select(
       col("vec_id"), asDouble(col("embedding")).as("v"))
@@ -1168,19 +1083,18 @@ object Similarity {
       .orderBy("q_id", "rnk")
   }
 
-  /** The serving composition: Hamming scan shortlists `k·refineFactor`
+  /** The serving composition: Hamming scan shortlists `4·k`
     * candidates, float cosine re-ranks to the final k — TRUE
     * similarities out, 1/32-cost scan in. The float fetch touches only
-    * |q|·k·refineFactor corpus rows (point lookups against a bucketed
+    * |q|·4·k corpus rows (point lookups against a bucketed
     * layout at scale). Same provable property as [[quantizedIvfRefine]]:
     * re-ranked order among surviving candidates is the exact float
     * order, so recall can only improve over the raw binary ranking. */
   def binaryRefineTopK(
       embeddings: DataFrame,
       numQueries: Int,
-      k: Int,
-      refineFactor: Int = 4): DataFrame = {
-    val cands = binaryTopK(embeddings, numQueries, k * refineFactor)
+      k: Int): DataFrame = {
+    val cands = binaryTopK(embeddings, numQueries, k * 4)
       .select(col("q_id"), col("neighbor_id"))
     val base = embeddings.select(
       col("vec_id"), asDouble(col("embedding")).as("v"))

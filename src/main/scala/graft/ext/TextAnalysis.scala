@@ -13,6 +13,10 @@ object TextAnalysis {
 
   import TextOps._
 
+  /** The contamination probe set: the fixture's doc_id % 50 == 0 slice
+    * stands in for a benchmark/eval set. */
+  private val probeSlice = 50
+
   /** Per-language corpus stats: doc counts, char/token means, source
     * diversity. One hash-aggregate shuffle (map-side partials first). */
   def corpusStats(docs: DataFrame): DataFrame =
@@ -122,7 +126,7 @@ object TextAnalysis {
     * single-partition sort is bounded by |vocab| (the deliberate
     * exception to the no-global-window rule pack_windows enforces for
     * corpus-sized frames). */
-  def vocabCoverage(docs: DataFrame, ks: Seq[Int] = Seq(10, 50, 100, 500)): DataFrame = {
+  def vocabCoverage(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val counts = docs
@@ -134,7 +138,7 @@ object TextAnalysis {
     val ranked = counts.withColumn("rk", row_number().over(byFreq))
     val total = counts.agg(sum("n").as("total_occ"))
     ranked
-      .crossJoin(broadcast(ks.toDF("k")))
+      .crossJoin(broadcast(Seq(10, 50, 100, 500).toDF("k")))
       .where(col("rk") <= col("k"))
       .groupBy("k")
       .agg(sum("n").as("covered_occ"))
@@ -241,7 +245,7 @@ object TextAnalysis {
 
   /** Self-verifying HLL++ distinct-count query (VERDICT r10 item 3): the
     * output row carries the EXACT counts (DuckDB recomputes them) plus
-    * the error-bound check `|hll − exact| / exact ≤ tol` as booleans the
+    * the error-bound check `|hll − exact| / exact ≤ 0.02` as booleans the
     * oracle pins to TRUE — the sketch's engine-specific estimate never
     * rides the hash, but its accuracy contract does, so a broken HLL
     * merge shows up as a red row instead of passing rows-only. The 2%
@@ -255,10 +259,10 @@ object TextAnalysis {
     * an absolute floor of 1 so tiny cardinalities aren't held to a
     * sub-integer band. The exact twin here is the verification harness;
     * the 100 TB serve path is [[distinctApprox]] alone. */
-  def distinctApproxCheck(docs: DataFrame, tol: Double = 0.02): DataFrame = {
+  def distinctApproxCheck(docs: DataFrame): DataFrame = {
     def withinTol(approx: Column, exact: Column) =
       abs(approx - exact).cast("double") <=
-        greatest(lit(1.0), lit(tol) * exact)
+        greatest(lit(1.0), lit(0.02) * exact)
     // norm projected ONCE behind its own boundary: the exact and approx
     // aggregates both consume it, and an inline normText would run the
     // normalization chain twice per row
@@ -432,7 +436,7 @@ object TextAnalysis {
     * cross-engine wobble is `pow` itself (≤ 1 ulp), absorbed by the
     * 6-decimal rounding. One tiny aggregate per stage; totals attach as
     * broadcast single-row frames. */
-  def sourceMixture(docs: DataFrame, alpha: Double = 0.7): DataFrame = {
+  def sourceMixture(docs: DataFrame): DataFrame = {
     val per = docs.groupBy("source").agg(
       count(lit(1)).as("n_docs"),
       sum(size(wsTokens(lower(col("text")))).cast("long")).as("n_tokens"))
@@ -440,7 +444,7 @@ object TextAnalysis {
     val shared = per.crossJoin(broadcast(tot))
       .withColumn("token_share",
         col("n_tokens").cast("double") / col("tot_tokens"))
-      .withColumn("pa", pow(col("token_share"), alpha))
+      .withColumn("pa", pow(col("token_share"), 0.7))
     val z = shared.agg(
       sum(col("pa").cast("decimal(28,18)")).cast("double").as("z"))
     shared.crossJoin(broadcast(z))
@@ -476,17 +480,14 @@ object TextAnalysis {
     * far below the band ⇒ boilerplate/degenerate repetition, near or
     * above 1 ⇒ noise. Pure per-row expression, declared-approximate
     * (DuckDB has no deflate) with a ScalaTest ordering contract. */
-  def compressionStats(
-      docs: DataFrame,
-      minRatio: Double = 0.2,
-      maxRatio: Double = 1.0): DataFrame =
+  def compressionStats(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), length(col("text")).as("len_chars"),
         graft.expr.DeflateLen(col("text")).as("deflate_len"))
       .withColumn("ratio",
         col("deflate_len").cast("double") / greatest(col("len_chars"), lit(1)))
       .withColumn("keep",
-        col("ratio") >= minRatio && col("ratio") <= maxRatio)
+        col("ratio") >= 0.2 && col("ratio") <= 1.0)
       .orderBy("doc_id")
 
   /** Self-verifying deflate-band query (VERDICT r10 item 3): DuckDB has
@@ -704,9 +705,9 @@ object TextAnalysis {
     * Scale: the near-dup pair set is tiny relative to the corpus; the
     * split columns attach by two id-keyed joins of (doc_id, split)
     * pairs. */
-  def splitLeakage(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
+  def splitLeakage(docs: DataFrame): DataFrame = {
     val splits = trainValSplit(docs).select("doc_id", "split")
-    Dedup.nearDupJaccard(docs, threshold)
+    Dedup.nearDupJaccard(docs)
       .join(splits.select(col("doc_id").as("doc_a"), col("split").as("split_a")),
         Seq("doc_a"))
       .join(splits.select(col("doc_id").as("doc_b"), col("split").as("split_b")),
@@ -716,15 +717,15 @@ object TextAnalysis {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Pairwise source similarity over top-`k` vocabularies: for every
-    * source pair, the Jaccard of their top-k token sets — the corpus
+  /** Pairwise source similarity over top-50 vocabularies: for every
+    * source pair, the Jaccard of their top-50 token sets — the corpus
     * drift/diversity matrix a mixing strategy consults (two sources with
     * 0.9 vocab overlap are near-redundant; 0.1 is genuine diversity).
     *
     * Scale: per-source top-k is a source-keyed count + rank window; the
     * pairwise comparison touches only |sources|² × k token rows —
     * independent of corpus size. */
-  def sourceVocabOverlap(docs: DataFrame, k: Int = 50): DataFrame = {
+  def sourceVocabOverlap(docs: DataFrame): DataFrame = {
     val byFreq = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source"))
       .orderBy(col("n").desc, col("token"))
@@ -733,7 +734,7 @@ object TextAnalysis {
       .where(length(col("token")) > 0)
       .groupBy("source", "token").agg(count(lit(1)).as("n"))
       .withColumn("rk", row_number().over(byFreq))
-      .where(col("rk") <= k)
+      .where(col("rk") <= 50)
       .select("source", "token")
     val a = topk.select(col("source").as("src_a"), col("token"))
     val b = topk.select(col("source").as("src_b"), col("token"))
@@ -756,39 +757,37 @@ object TextAnalysis {
     * below the threshold go to train (hex-string comparison — identical
     * in any engine, no integer parsing needed). Content-keyed (not
     * id-keyed) so exact duplicates always land in the same split. */
-  def trainValSplit(docs: DataFrame, trainHexCeil: String = "f3"): DataFrame =
+  def trainValSplit(docs: DataFrame): DataFrame =
     docs.select(
       col("doc_id"),
       substring(md5(normText(col("text"))), 1, 2).as("bucket_hex"))
       .withColumn("split",
-        when(col("bucket_hex") < trainHexCeil, "train").otherwise("val"))
+        when(col("bucket_hex") < "f3", "train").otherwise("val"))
       .orderBy("doc_id")
 
   /** Sliding-window token chunking for training-data preparation: each
-    * doc's whitespace-token stream is cut into `size`-token chunks every
-    * `stride` tokens (overlap = size − stride). Emits the chunk's token
+    * doc's whitespace-token stream is cut into 50-token chunks every
+    * 40 tokens (overlap 10). Emits the chunk's token
     * count and content md5 (the registered query keeps the row payload
     * small; the text itself is one `concat_ws` away).
     *
     * Scale: pure per-row expressions — posexplode of an integer sequence
     * plus `slice` on the already-split token array; no shuffle at all, so
     * chunking runs at full scan throughput on any corpus size. */
-  def chunk(docs: DataFrame, size: Int = 50, stride: Int = 40): DataFrame = {
-    require(stride >= 1 && size >= stride, "need 1 <= stride <= size")
+  def chunk(docs: DataFrame): DataFrame = {
     val toks = split(normText(col("text")), " ")
     docs
       .select(col("doc_id"), toks.as("toks"))
       .select(col("doc_id"), col("toks"),
         posexplode(
           sequence(lit(0),
-            greatest(org.apache.spark.sql.functions.size(col("toks")) - 1, lit(0)),
-            lit(stride))))
+            greatest(size(col("toks")) - 1, lit(0)),
+            lit(40))))
       .select(
         col("doc_id"),
         col("pos").cast("int").as("chunk_idx"),
-        org.apache.spark.sql.functions.size(
-          slice(col("toks"), col("col") + 1, lit(size))).as("n_tok"),
-        md5(concat_ws(" ", slice(col("toks"), col("col") + 1, lit(size))))
+        size(slice(col("toks"), col("col") + 1, lit(50))).as("n_tok"),
+        md5(concat_ws(" ", slice(col("toks"), col("col") + 1, lit(50))))
           .as("chunk_md5"))
       .orderBy("doc_id", "chunk_idx")
   }
@@ -799,7 +798,7 @@ object TextAnalysis {
     * size joins in as a broadcast single-row aggregate — no driver action.
     * Both engines compute `tf * ln(N/df)` from the same integers, so the
     * doubles — and therefore the rank cut — are bit-identical. */
-  def tfidfTopK(docs: DataFrame, k: Int = 3): DataFrame = {
+  def tfidfTopK(docs: DataFrame): DataFrame = {
     val toks = docs
       .select(col("doc_id"),
         explode(split(normText(col("text")), " ")).as("term"))
@@ -815,7 +814,7 @@ object TextAnalysis {
       .withColumn("score",
         col("tf") * log(col("n_docs").cast("double") / col("df")))
       .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= k)
+      .where(col("rk") <= 3)
       .select(col("doc_id"), col("term"),
         round(col("score"), 6).as("tfidf"), col("rk").cast("int").as("rk"))
       .orderBy("doc_id", "rk")
@@ -853,7 +852,7 @@ object TextAnalysis {
     * Grams ride as [[graft.expr.ShingleHashes]] xxhash64 digests (one
     * fused pass, distinct per doc); the rate equals the string-set rate
     * modulo 64-bit collisions (the house caveat), and the DuckDB oracle
-    * computes the string form. Docs with fewer than `n` tokens have no
+    * computes the string form. Docs with fewer than 8 tokens have no
     * grams and emit no row — both engines agree.
     *
     * Scale: gram-keyed hash join of the held-out explode against the
@@ -861,10 +860,10 @@ object TextAnalysis {
     * are skinny 8-byte digests, and the per-doc aggregate partitions
     * with the held-out corpus. */
   def memorizationRate(
-      docs: DataFrame, isTrain: Column, n: Int = 8): DataFrame = {
+      docs: DataFrame, isTrain: Column): DataFrame = {
     val grams = scanParallel(docs).select(
       col("doc_id"), isTrain.as("train"),
-      explode(graft.expr.ShingleHashes(wsTokens(lower(col("text"))), n))
+      explode(graft.expr.ShingleHashes(wsTokens(lower(col("text"))), 8))
         .as("g"))
     val trainSet = grams.where(col("train")).select("g").distinct()
     grams.where(!col("train"))
@@ -879,8 +878,7 @@ object TextAnalysis {
 
   def contaminationNgram(
       docs: DataFrame,
-      n: Int = 13,
-      probeModulus: Int = 50): DataFrame = {
+      probeModulus: Int = probeSlice): DataFrame = {
     // token array materialized behind its own projection boundary: the
     // shingle lambda slices it per window, and an inline split would
     // re-tokenize the doc for every window (see bigramTopK). xxhash64
@@ -889,7 +887,7 @@ object TextAnalysis {
     // digests of the same gram set, so both count |distinct grams|.
     def gramFrame(df: DataFrame, idCol: String) = scanParallel(df)
       .select(col(idCol), wsTokens(lower(col("text"))).as("__toks"))
-      .select(col(idCol), explode(shingles(col("__toks"), n)).as("g"))
+      .select(col(idCol), explode(shingles(col("__toks"), 13)).as("g"))
       .select(col(idCol), xxhash64(col("g")).as("gh"))
     val corpusGrams = gramFrame(docs, "doc_id")
     val probeGrams = gramFrame(
@@ -906,21 +904,16 @@ object TextAnalysis {
   /** One-row contamination report across the three deterministic
     * detection methods (exact fingerprint, near min-shingle, 13-gram
     * span) — the per-run accounting an eval-hygiene pipeline logs, like
-    * [[Dedup.dedupSummary]] for dedup. Each count is a single-row
+    * [[Dedup.dedupSummaryAt]] for dedup. Each count is a single-row
     * aggregate of an already-registered gate; they attach as broadcast
     * crosses. */
-  def contaminationSummary(
-      docs: DataFrame,
-      probeModulus: Int = 50): DataFrame = {
+  def contaminationSummary(docs: DataFrame): DataFrame = {
     def c(df: DataFrame, name: String) =
       df.agg(count(lit(1)).cast("long").as(name))
     c(docs, "n_docs")
-      .crossJoin(broadcast(
-        c(contamination(docs, probeModulus), "exact_hits")))
-      .crossJoin(broadcast(
-        c(contamination(docs, probeModulus, near = true), "near_hits")))
-      .crossJoin(broadcast(
-        c(contaminationNgram(docs, probeModulus = probeModulus), "ngram_hits")))
+      .crossJoin(broadcast(c(contamination(docs), "exact_hits")))
+      .crossJoin(broadcast(c(contamination(docs, near = true), "near_hits")))
+      .crossJoin(broadcast(c(contaminationNgram(docs), "ngram_hits")))
   }
 
   /** Sketch-based contamination prefilter: a Bloom filter built over the
@@ -936,25 +929,21 @@ object TextAnalysis {
     * the built-in `bloom_filter_agg`, and the probe is the built-in
     * `BloomFilterMightContain` expression over the serialized filter bytes
     * — the exact pair Spark's own runtime row-level filtering uses, fully
-    * codegen-compatible. Sizing comes from the caller-supplied
-    * `expectedProbes` (a capacity estimate, not a data-dependent count);
+    * codegen-compatible. Sizing comes from a fixed capacity estimate of
+    * 4096 probes at fpp 0.01 (not a data-dependent count);
     * over-provisioning only widens the bitset. The one job materializing
     * the filter bytes IS the sketch build — same cost shape as any
     * broadcast build. */
-  def contaminationBloom(
-      docs: DataFrame,
-      probeModulus: Int = 50,
-      fpp: Double = 0.01,
-      expectedProbes: Long = 4096L,
-      near: Boolean = false): DataFrame = {
+  def contaminationBloom(docs: DataFrame, near: Boolean = false): DataFrame = {
     val fpHash = xxhash64(contaminationFp(near))
     val corpus = docs.select(col("doc_id"), fpHash.as("fph"))
     val probes = docs
-      .where(pmod(col("doc_id"), lit(probeModulus)) === 0)
+      .where(pmod(col("doc_id"), lit(probeSlice)) === 0)
       .select(fpHash.as("fph"))
-    // optimal bit count for (n, fpp): -n·ln(fpp)/ln²2
+    val expectedProbes = 4096L
+    // optimal bit count for (n, fpp = 0.01): -n·ln(fpp)/ln²2
     val numBits = math.max(64L,
-      math.ceil(-expectedProbes * math.log(fpp) / (math.log(2) * math.log(2))).toLong)
+      math.ceil(-expectedProbes * math.log(0.01) / (math.log(2) * math.log(2))).toLong)
     // bloom_filter_agg is not SQL-registered in Spark 4.1 (internal
     // registry only) — construct the aggregate expression directly
     val bloomAgg = org.apache.spark.sql.graftshim.Shim.toColumn(
@@ -990,19 +979,13 @@ object TextAnalysis {
     * alone, false positives included) stays rows-only (VERDICT r4
     * item 8). */
   def contaminationBloomVerified(
-      docs: DataFrame,
-      probeModulus: Int = 50,
-      fpp: Double = 0.01,
-      expectedProbes: Long = 4096L,
-      near: Boolean = false): DataFrame = {
+      docs: DataFrame, near: Boolean = false): DataFrame = {
     val fp = contaminationFp(near)
-    val survivors =
-      contaminationBloom(docs, probeModulus, fpp, expectedProbes, near)
     val corpus = docs
-      .join(survivors, Seq("doc_id"), "left_semi")
+      .join(contaminationBloom(docs, near = near), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), fp.as("fp"))
     val probes = docs
-      .where(pmod(col("doc_id"), lit(probeModulus)) === 0)
+      .where(pmod(col("doc_id"), lit(probeSlice)) === 0)
       .select(col("doc_id").as("probe_id"), fp.as("fp"))
     corpus
       .join(broadcast(probes),
@@ -1026,23 +1009,17 @@ object TextAnalysis {
     * `contamination_bloom_verified` does: the exact key has zero probe
     * collisions in the fixture, and probes alone would under-exercise
     * the hit path. */
-  def contaminationBloomNoFalseNeg(
-      docs: DataFrame,
-      probeModulus: Int = 50,
-      fpp: Double = 0.01,
-      expectedProbes: Long = 4096L,
-      near: Boolean = true): DataFrame = {
-    val candidates =
-      contaminationBloom(docs, probeModulus, fpp, expectedProbes, near)
-        .withColumn("in_bloom", lit(true))
+  def contaminationBloomNoFalseNeg(docs: DataFrame): DataFrame = {
+    val candidates = contaminationBloom(docs, near = true)
+      .withColumn("in_bloom", lit(true))
     // null fingerprints (a near-fp doc under the shingle width) never
     // enter the filter, so they carry no membership obligation — exclude
     // them from the must-set on BOTH engines (the oracle mirrors this)
     val probes = docs
-      .where(pmod(col("doc_id"), lit(probeModulus)) === 0 &&
-        contaminationFp(near).isNotNull)
+      .where(pmod(col("doc_id"), lit(probeSlice)) === 0 &&
+        contaminationFp(true).isNotNull)
       .select(col("doc_id"), lit("probe").as("kind"))
-    val hits = contamination(docs, probeModulus, near)
+    val hits = contamination(docs, near = true)
       .select(col("doc_id"), lit("hit").as("kind"))
     probes.unionByName(hits)
       .join(candidates, Seq("doc_id"), "left")
@@ -1053,7 +1030,7 @@ object TextAnalysis {
 
   /** Contamination check: corpus docs whose content fingerprint matches
     * any probe doc (≙ a benchmark/eval set — here the fixture's
-    * doc_id % probeModulus == 0 slice). `near = false` keys on the exact
+    * doc_id % 50 == 0 slice). `near = false` keys on the exact
     * normalized-text md5; `near = true` keys on the min-shingle md5
     * (near-identical docs collide — benchmark paraphrase leakage). The
     * probe side is tiny → broadcast left-semi join on the fingerprint; no
@@ -1066,14 +1043,11 @@ object TextAnalysis {
     if (near) graft.expr.MinShingleMd5(wsTokens(lower(col("text"))), 3)
     else md5(normText(col("text")))
 
-  def contamination(
-      docs: DataFrame,
-      probeModulus: Int = 50,
-      near: Boolean = false): DataFrame = {
+  def contamination(docs: DataFrame, near: Boolean = false): DataFrame = {
     val fp = contaminationFp(near)
     val corpus = docs.select(col("doc_id"), fp.as("fp"))
     val probes = docs
-      .where(pmod(col("doc_id"), lit(probeModulus)) === 0)
+      .where(pmod(col("doc_id"), lit(probeSlice)) === 0)
       .select(col("doc_id").as("probe_id"), fp.as("fp"))
     corpus
       .join(broadcast(probes),
@@ -1191,9 +1165,9 @@ object TextAnalysis {
     *
     * No per-source sort task (the trap a naive bottom-k window would
     * hit — one task sorting a 100 TB domain): a DETERMINISTIC coarse
-    * prefilter keeps hashes below `safety·k/n_sh` of the hash range
-    * (exact per-source counts, one aggregate), leaving ~safety·k
-    * survivors per source with undercount probability e^(−Θ(k·safety))
+    * prefilter keeps hashes below `4·k/n_sh` of the hash range
+    * (exact per-source counts, one aggregate), leaving ~4·k
+    * survivors per source with undercount probability e^(−Θ(4·k))
     * — vanishing at k=256 — and only THEN ranks the bounded survivor
     * set per source. Sources with n_sh ≤ k keep their complete hash
     * set, making their membership tests exact. Hashes are the PORTABLE
@@ -1210,7 +1184,7 @@ object TextAnalysis {
     * additionally pins the error bound against the exact matrix and
     * the sketch-size invariant. */
   def sourceOverlapSketch(
-      docs: DataFrame, k: Int = 256, safety: Int = 4): DataFrame = {
+      docs: DataFrame, k: Int = 256): DataFrame = {
     // same fence rationale as [[sourceOverlap]] (r19): grams feeds the
     // size aggregate and the sketch build; sketches feeds BOTH sides of
     // the pair frame — unfenced, the shingle-hash distinct pipeline ran
@@ -1226,19 +1200,19 @@ object TextAnalysis {
       .distinct())
     val sizes = grams.groupBy("source").agg(count(lit(1)).as("n_sh"))
     // coarse prefilter threshold: full range when the source fits in
-    // safety·k (its sketch is then its complete hash set). 2⁶⁰ and the
-    // product with safety·k are exact doubles; the long cast truncates
+    // 4·k (its sketch is then its complete hash set). 2⁶⁰ and the
+    // product with 4·k are exact doubles; the long cast truncates
     // toward zero in both engines (floor, values positive).
     val thr = sizes.withColumn("thr",
-      when(col("n_sh") <= lit(safety.toLong * k), lit(Long.MaxValue))
-        .otherwise((lit(math.pow(2.0, 60)) * lit((safety * k).toDouble) /
+      when(col("n_sh") <= lit(4L * k), lit(Long.MaxValue))
+        .otherwise((lit(math.pow(2.0, 60)) * lit((4 * k).toDouble) /
           col("n_sh")).cast("long")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source")).orderBy(col("hv"))
     val sketches = Fence.cached(grams
       .join(broadcast(thr), Seq("source"))
       .where(col("hv") < col("thr"))
-      .withColumn("rn", row_number().over(w)) // ≤ ~safety·k rows/source
+      .withColumn("rn", row_number().over(w)) // ≤ ~4·k rows/source
       .where(col("rn") <= k)
       .groupBy("source")
       .agg(sort_array(collect_list(col("hv"))).as("sk"))

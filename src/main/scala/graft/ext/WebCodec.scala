@@ -2789,20 +2789,20 @@ object WebCodec {
     * base (RFC 3986 §5), IDN-fold its host to the punycode spelling
     * WARC captures store (so the unicode-Location → punycode-capture
     * hop joins), canonicalize (§6), and follow while the target is
-    * itself a captured redirect, up to `maxHops`, flagging A→…→A
+    * itself a captured redirect, up to 5 hops, flagging A→…→A
     * LOOPS via a visited-set check per chased start. The iteration is
-    * the bounded pointer-jumping shape: `maxHops − 1` keyed joins
+    * the bounded pointer-jumping shape: 4 keyed joins
     * against the (localCheckpoint-ed, parsed-once) edge table — at
     * corpus scale each hop is one shuffle on the canonical-URL key,
     * never a cartesian, never a driver-side walk. */
-  def redirectChaseMulti(docs: DataFrame, maxHops: Int = 5): DataFrame =
-    chaseMultiOver(warcRecords(webWarc(docs)), maxHops)
+  def redirectChaseMulti(docs: DataFrame): DataFrame =
+    chaseMultiOver(warcRecords(webWarc(docs)))
 
   /** The multi-hop chase over ANY fetch-shaped table — (media_id,
     * target_uri, http_status, location) — so the served variant reads
     * the streamed [[graft.sinks.WebSink]] fetch log instead of
     * re-parsing archives. */
-  def chaseMultiOver(recs: DataFrame, maxHops: Int = 5,
+  def chaseMultiOver(recs: DataFrame,
       maxBroadcastEdges: Long = 4000000L): DataFrame = {
     val spark = recs.sparkSession
     import spark.implicits._
@@ -2841,7 +2841,7 @@ object WebCodec {
       col("target_c").as("cur"),
       lit(1).as("hops"), array(col("alias_c")).as("path"),
       lit(false).as("loop"), lit(false).as("done"))
-    for (_ <- 2 to maxHops) {
+    for (_ <- 2 to 5) { // up to 5 hops
       state = state.join(hop, col("cur") === col("e_alias"), "left")
         .select(col("media_id"), col("start_uri"),
           when(col("done") || col("e_target").isNull, col("cur"))

@@ -51,10 +51,9 @@ object CurrentState {
       cdc: DataFrame,
       pkCols: Seq[String],
       tsCol: String = "__source_ts_ms",
-      opCol: String = "__op",
       tieBreak: Seq[String] = Nil): DataFrame =
     latestPerKey(cdc, pkCols, tsCol, tieBreak)
-      .where(col(opCol) =!= "d")
+      .where(col("__op") =!= "d")
 
   /** Streaming maintenance of the current-state table: each micro-batch
     * folds into the persisted per-key latest-version table (tombstones
@@ -69,32 +68,22 @@ object CurrentState {
       cdc: DataFrame,
       path: String,
       checkpointPath: String,
-      pkCols: Seq[String],
-      tsCol: String = "__source_ts_ms",
-      tieBreak: Seq[String] = Nil): org.apache.spark.sql.streaming.StreamingQuery =
-    cdc.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val hPath = new org.apache.hadoop.fs.Path(path)
-        val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        graft.util.SwapDirs.replace(fs, hPath) { tmp =>
-          val merged =
-            if (fs.exists(hPath))
-              latestPerKey(
-                spark.read.parquet(path).unionByName(batch), pkCols, tsCol, tieBreak)
-            else latestPerKey(batch, pkCols, tsCol, tieBreak)
-          merged.write.mode("overwrite").parquet(tmp.toString)
-        }
+      pkCols: Seq[String]): org.apache.spark.sql.streaming.StreamingQuery =
+    graft.util.Drain.availableNow(cdc, checkpointPath) { (batch, _) =>
+      val spark = batch.sparkSession
+      val hPath = new org.apache.hadoop.fs.Path(path)
+      val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      graft.util.SwapDirs.replace(fs, hPath) { tmp =>
+        val merged =
+          if (fs.exists(hPath))
+            latestPerKey(spark.read.parquet(path).unionByName(batch), pkCols)
+          else latestPerKey(batch, pkCols)
+        merged.write.mode("overwrite").parquet(tmp.toString)
       }
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Read the maintained table as the upsert view (tombstones filtered). */
   def readCurrentState(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      opCol: String = "__op"): DataFrame =
-    spark.read.parquet(path).where(col(opCol) =!= "d")
+      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    spark.read.parquet(path).where(col("__op") =!= "d")
 }

@@ -67,8 +67,9 @@ object Pipeline {
   def deduped(activity: DataFrame): DataFrame =
     activity.dropDuplicates(eventKey)
 
-  /** Streaming variant: watermark bounds the dedup state store. The horizon
-    * must exceed any realistic replay window (SURVEY.md §7.4 item 3). */
-  def dedupedStreaming(activity: DataFrame, horizon: String = "1 hour"): DataFrame =
-    activity.withWatermark("event_timestamp", horizon).dropDuplicates(eventKey)
+  /** Streaming variant: watermark bounds the dedup state store. The
+    * one-hour horizon must exceed any realistic replay window (SURVEY.md
+    * §7.4 item 3). */
+  def dedupedStreaming(activity: DataFrame): DataFrame =
+    activity.withWatermark("event_timestamp", "1 hour").dropDuplicates(eventKey)
 }

@@ -63,10 +63,8 @@ object ActivitySink {
   def runToActivityTable(
       activity: DataFrame,
       path: String,
-      checkpointPath: String,
-      buckets: Int = defaultBuckets): org.apache.spark.sql.streaming.StreamingQuery =
-    BucketedSink.runToTable(activity, path, checkpointPath,
-      appendBatch(_, path, buckets))
+      checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
+    BucketedSink.runToTable(activity, path, checkpointPath, appendBatch(_, path))
 
   /** Compact an activity table that [[runToActivityTable]] has been
     * appending into (VERDICT r3 item 8 — without this, streaming cadence
@@ -85,9 +83,9 @@ object ActivitySink {
     * One small int per key is collected and deduplicated on the driver, so
     * over [[graft.serve.FeedQueries.followeesOf]]'s local relation this
     * runs no Spark job (reference: main.py:149-154). */
-  def bucketsOf(keys: DataFrame, buckets: Int = defaultBuckets): Seq[Int] =
+  def bucketsOf(keys: DataFrame): Seq[Int] =
     keys
-      .select(pmod(hash(col("user_id")), lit(buckets)))
+      .select(pmod(hash(col("user_id")), lit(defaultBuckets)))
       .collect()
       .map(_.getInt(0))
       .distinct

@@ -62,13 +62,10 @@ object AnnIndex {
     * geometry, not a bare empty-head — even when the corpus is empty
     * (a `limit(1)` over the empty code table would write a ZERO-row
     * meta). */
-  def build(
-      embeddings: DataFrame,
-      path: String,
-      stride: Int = Similarity.ivfStride,
-      buckets: Int = defaultBuckets): Unit = {
+  def build(embeddings: DataFrame, path: String): Unit = {
+    val stride = Similarity.ivfStride
     Similarity.quantizeScale(embeddings)
-      .select(col("s"), lit(stride).as("stride"), lit(buckets).as("buckets"))
+      .select(col("s"), lit(stride).as("stride"), lit(defaultBuckets).as("buckets"))
       .write.mode("overwrite").parquet(s"$path/meta")
     val q = Fence.cached(
       Similarity.quantize(embeddings).select(col("vec_id"), col("qv")))
@@ -78,7 +75,7 @@ object AnnIndex {
     writeVectors(
       assignCells(q, readCentroids(embeddings.sparkSession, path))
         .join(labelsOf(embeddings), Seq("vec_id")),
-      path, buckets, "overwrite")
+      path, defaultBuckets, "overwrite")
   }
 
   /** Payload metadata stored BESIDE the vector (the filtered-search
@@ -179,9 +176,8 @@ object AnnIndex {
       path: String,
       queries: DataFrame,
       k: Int,
-      nprobe: Int = Similarity.ivfProbes,
       excludeSelf: Boolean = false): DataFrame =
-    probeImpl(spark, path, queries, k, nprobe, excludeSelf, filtered = false)
+    probeImpl(spark, path, queries, k, excludeSelf, filtered = false)
 
   /** One probe implementation under both surfaces: `filtered = true`
     * threads the query's `qlabel` through the probe frame and gates the
@@ -191,7 +187,6 @@ object AnnIndex {
       path: String,
       queries: DataFrame,
       k: Int,
-      nprobe: Int,
       excludeSelf: Boolean,
       filtered: Boolean): DataFrame = {
     val meta = readMeta(spark, path) // one bounded driver read per probe
@@ -206,7 +201,7 @@ object AnnIndex {
       .crossJoin(broadcast(cents))
       .withColumn("qsim", Similarity.cosine(col("q"), col("cv")))
       .withColumn("qrn", row_number().over(qw))
-      .where(col("qrn") <= nprobe)
+      .where(col("qrn") <= Similarity.ivfProbes)
       .select(probeCols: _*))
     // the pruning predicate: probed cells + the directories they hash
     // into, computed in-plan and collected BOUNDED (≤ |q|·nprobe rows —
@@ -250,9 +245,8 @@ object AnnIndex {
       path: String,
       queries: DataFrame,
       k: Int,
-      nprobe: Int = Similarity.ivfProbes,
       excludeSelf: Boolean = false): DataFrame =
-    probeImpl(spark, path, queries, k, nprobe, excludeSelf, filtered = true)
+    probeImpl(spark, path, queries, k, excludeSelf, filtered = true)
 
   /** The QUERY side of the lifecycle in streaming form — the mirror of
     * [[runToIndex]]'s ingest side: query vectors arrive as a stream
@@ -268,10 +262,9 @@ object AnnIndex {
       path: String,
       outPath: String,
       checkpointPath: String,
-      k: Int,
-      nprobe: Int = Similarity.ivfProbes): org.apache.spark.sql.streaming.StreamingQuery =
+      k: Int): org.apache.spark.sql.streaming.StreamingQuery =
     BucketedSink.runToTable(queries, outPath, checkpointPath,
-      batch => probeWith(batch.sparkSession, path, batch, k, nprobe)
+      batch => probeWith(batch.sparkSession, path, batch, k)
         .write.mode("append").parquet(s"$outPath/results"))
 
   /** Fixture-parity probe: queries are the index's own rows with
@@ -282,14 +275,13 @@ object AnnIndex {
       spark: SparkSession,
       path: String,
       numQueries: Int,
-      k: Int,
-      nprobe: Int = Similarity.ivfProbes): DataFrame =
+      k: Int): DataFrame =
     probeWith(spark, path,
       spark.read.parquet(s"$path/vectors")
         .where(col("vec_id") < numQueries)
         .select(col("vec_id"), col("qv")).dropDuplicates("vec_id")
         .select(col("vec_id").as("q_id"), asD(col("qv")).as("q")),
-      k, nprobe, excludeSelf = true) // q_ids ARE vec_ids here
+      k, excludeSelf = true) // q_ids ARE vec_ids here
 
   /** `(cell, vec_id)`-keyed cell assignment by quantized-cosine argmax,
     * ties to the lowest cent_id — [[Similarity.ivfTopK]]'s exact

@@ -47,20 +47,15 @@ private[sinks] object BucketedSink {
       path: String,
       checkpointPath: String,
       append: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(s"$path/_batches/$id")
-        val fs = marker.getFileSystem(
-          batch.sparkSession.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker)) {
-          append(batch)
-          fs.create(marker, true).close()
-        }
+    graft.util.Drain.availableNow(stream, checkpointPath) { (batch, id) =>
+      val marker = new org.apache.hadoop.fs.Path(s"$path/_batches/$id")
+      val fs = marker.getFileSystem(
+        batch.sparkSession.sparkContext.hadoopConfiguration)
+      if (!fs.exists(marker)) {
+        append(batch)
+        fs.create(marker, true).close()
       }
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
 
   /** Compact an appended table back to the canonical one-file-per-bucket
     * clustered layout and GC the `_batches` markers, swapping the rewrite

@@ -69,13 +69,11 @@ object DedupIndex {
   }
 
   /** Build the index from scratch over a corpus `(doc_id, text, …)`. */
-  def build(
-      docs: DataFrame, path: String, buckets: Int = defaultBuckets,
-      portable: Boolean = false): Unit = {
-    docs.sparkSession.range(1).select(lit(buckets).as("buckets"),
+  def build(docs: DataFrame, path: String, portable: Boolean = false): Unit = {
+    docs.sparkSession.range(1).select(lit(defaultBuckets).as("buckets"),
       lit(portable).as("portable"))
       .write.mode("overwrite").parquet(s"$path/meta")
-    writeTables(Fence.cached(signedOf(docs, portable)), path, buckets,
+    writeTables(Fence.cached(signedOf(docs, portable)), path, defaultBuckets,
       "overwrite")
   }
 

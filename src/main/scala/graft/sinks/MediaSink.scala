@@ -28,38 +28,32 @@ object MediaSink {
 
   private def clusteringSort = Seq(col("media_id"))
 
-  private def write(rows: DataFrame, path: String, buckets: Int,
-      mode: String): Unit =
+  private def write(rows: DataFrame, path: String, mode: String): Unit =
     BucketedSink.write(rows, path, col("media_id"), "media_bucket",
-      buckets, clusteringSort, mode)
+      defaultBuckets, clusteringSort, mode)
 
   /** Decode-gate + embed one micro-batch of raw media and append it into
     * the bucketed layout. The gate is the batch embedding operator
     * itself — streamed bytes and batch bytes take the identical code
     * path, which is what lets the streamed table ride the SAME DuckDB
     * oracle as the batch query. */
-  def appendBatch(media: DataFrame, path: String,
-      buckets: Int = defaultBuckets, dim: Int = 16): Unit =
-    write(Multimodal.mediaEmbedding(media, dim), path, buckets, "append")
+  def appendBatch(media: DataFrame, path: String): Unit =
+    write(Multimodal.mediaEmbedding(media), path, "append")
 
   /** The streaming ingest: checkpointed foreachBatch of raw payload rows
     * through the decode gate into the serving table. Delivery semantics
     * per [[BucketedSink.runToTable]]; readers needing exactly-once apply
     * `dropDuplicates("media_id")` (the key is deterministic). */
-  def runToMediaTable(media: DataFrame, path: String, checkpointPath: String,
-      buckets: Int = defaultBuckets)
+  def runToMediaTable(media: DataFrame, path: String, checkpointPath: String)
   : org.apache.spark.sql.streaming.StreamingQuery =
-    BucketedSink.runToTable(media, path, checkpointPath,
-      appendBatch(_, path, buckets))
+    BucketedSink.runToTable(media, path, checkpointPath, appendBatch(_, path))
 
   /** Fold accumulated appends back to one file per bucket; replayed
     * rows are deduplicated here so they stop paying read-side dedup.
     * Quiesced-writer contract per [[BucketedSink.compact]]. */
-  def compact(spark: SparkSession, path: String,
-      buckets: Int = defaultBuckets): Unit =
+  def compact(spark: SparkSession, path: String): Unit =
     BucketedSink.compact(spark, path, (df, tmp) =>
-      write(df.drop("media_bucket").dropDuplicates("media_id"), tmp,
-        buckets, "overwrite"))
+      write(df.drop("media_bucket").dropDuplicates("media_id"), tmp, "overwrite"))
 
   /** Exactly-once view over the at-least-once table. */
   def read(spark: SparkSession, path: String): DataFrame =
@@ -91,7 +85,7 @@ object MediaSink {
       // duplicate copy per run — and serve STALE-schema rows after any
       // embedding change, failing the oracle with no code bug present
       write(Multimodal.mediaEmbedding(Multimodal.mediaAllFormats(docs)),
-        path, defaultBuckets, "overwrite")
+        path, "overwrite")
       read(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
     }
 }

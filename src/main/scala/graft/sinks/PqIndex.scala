@@ -39,17 +39,14 @@ object PqIndex {
 
   val defaultBuckets = 16
 
-  def build(
-      embeddings: DataFrame,
-      path: String,
-      stride: Int = Pq.pqStride,
-      buckets: Int = defaultBuckets): Unit = {
+  def build(embeddings: DataFrame, path: String): Unit = {
     Similarity.quantizeScale(embeddings)
-      .select(col("s"), lit(stride).as("stride"), lit(buckets).as("buckets"))
+      .select(col("s"), lit(Pq.pqStride).as("stride"),
+        lit(defaultBuckets).as("buckets"))
       .write.mode("overwrite").parquet(s"$path/meta")
-    Pq.codebook(embeddings, stride)
+    Pq.codebook(embeddings)
       .write.mode("overwrite").parquet(s"$path/codebook")
-    writeCodes(Pq.codes(embeddings, stride), path, buckets, "overwrite")
+    writeCodes(Pq.codes(embeddings), path, defaultBuckets, "overwrite")
   }
 
   /** Append-only ingestion: quantize with the STORED scale, encode with

@@ -68,11 +68,10 @@ object TextIndex {
   }
 
   /** Build the index from scratch over a corpus `(doc_id, text, …)`. */
-  def build(
-      docs: DataFrame, path: String, buckets: Int = defaultBuckets): Unit = {
-    docs.sparkSession.range(1).select(lit(buckets).as("buckets"))
+  def build(docs: DataFrame, path: String): Unit = {
+    docs.sparkSession.range(1).select(lit(defaultBuckets).as("buckets"))
       .write.mode("overwrite").parquet(s"$path/meta")
-    writeTables(docs, path, buckets, "overwrite")
+    writeTables(docs, path, defaultBuckets, "overwrite")
   }
 
   /** Append a new batch of documents (doc_ids disjoint from indexed
@@ -129,8 +128,7 @@ object TextIndex {
     * terms; the per-query top-k window partitions by query — nothing
     * corpus-global shuffles. */
   def bm25TopK(
-      queries: DataFrame, path: String, k: Int = 10,
-      maxTermsPerQuery: Int = 4): DataFrame = {
+      queries: DataFrame, path: String, k: Int = 10): DataFrame = {
     val spark = queries.sparkSession
     val qterms = Fence.cached(
       queries.select(col("query_id"),
@@ -160,7 +158,7 @@ object TextIndex {
         org.apache.spark.sql.expressions.Window.partitionBy(col("term")))))
     // MAX-SCORE TERM SELECTION (the WAND / max-score family: Turtle &
     // Flood '95; Broder et al. CIKM'03): each query scores only its
-    // `maxTermsPerQuery` MOST SELECTIVE terms (lowest df, term string as
+    // 4 MOST SELECTIVE terms (lowest df, term string as
     // tie-break — an exact-integer rule the oracle repeats verbatim).
     // This bounds the candidate expansion at |q|·R·max_df postings
     // however stopword-laden the queries are; the dropped terms are
@@ -174,7 +172,7 @@ object TextIndex {
       .join(broadcast(probed.select(col("term"), col("df")).distinct()),
         Seq("term"))
       .withColumn("trn", row_number().over(dfw))
-      .where(col("trn") <= maxTermsPerQuery)
+      .where(col("trn") <= 4)
     val doclens = spark.read.parquet(s"$path/doclens")
       .select(col("doc_id"), col("dl")).dropDuplicates("doc_id")
     val stats = doclens.agg(
@@ -236,7 +234,7 @@ object TextIndex {
     * cosine run by Reciprocal Rank Fusion (Cormack et al., SIGIR'09:
     * `rrf(d) = Σ_runs 1/(60 + rank_run(d))`) — the standard
     * training-free fusion, and the production shape of modern RAG
-    * retrieval (sparse + dense, union of top-`kPerRun` candidates,
+    * retrieval (sparse + dense, union of top-20 candidates,
     * re-ranked by reciprocal rank). A document absent from one run
     * contributes 0 for it. Determinism: ranks are integers, each
     * reciprocal is one IEEE division, and the two-term sum has a fixed
@@ -254,11 +252,10 @@ object TextIndex {
       queryVecs: DataFrame,
       corpusVecs: DataFrame,
       path: String,
-      k: Int = 10,
-      kPerRun: Int = 20): DataFrame = {
-    val lex = bm25TopK(queries, path, kPerRun)
+      k: Int = 10): DataFrame = {
+    val lex = bm25TopK(queries, path, 20)
       .select(col("query_id"), col("doc_id"), col("rank").as("lex_rank"))
-    rrfFuse(lex, denseRun(queryVecs, corpusVecs, kPerRun), k)
+    rrfFuse(lex, denseRun(queryVecs, corpusVecs, 20), k)
   }
 
   /** The exact brute dense run of [[hybridRrfTopK]] on its own:

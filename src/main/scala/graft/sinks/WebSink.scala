@@ -27,10 +27,9 @@ object WebSink {
 
   val defaultBuckets = 32
 
-  private def write(rows: DataFrame, path: String, buckets: Int,
-      mode: String): Unit =
+  private def write(rows: DataFrame, path: String, mode: String): Unit =
     BucketedSink.write(rows, path, col("media_id"), "web_bucket",
-      buckets,
+      defaultBuckets,
       Seq(col("media_id"), col("http_status"), col("target_uri")), mode)
 
   /** Parse-gate + extract + gate one micro-batch of raw archives and
@@ -38,9 +37,8 @@ object WebSink {
     * operator — streamed bytes and batch bytes take the identical code
     * path, which is what lets the streamed table ride the SAME DuckDB
     * oracle as the batch `web_pipeline` query. */
-  def appendBatch(media: DataFrame, path: String,
-      buckets: Int = defaultBuckets): Unit =
-    write(WebCodec.pipeline(media), path, buckets, "append")
+  def appendBatch(media: DataFrame, path: String): Unit =
+    write(WebCodec.pipeline(media), path, "append")
 
   /** The streaming ingest: checkpointed foreachBatch of raw archive
     * rows through the parse gate into the serving table. Delivery
@@ -51,20 +49,17 @@ object WebSink {
     * retries, 404/410 dead fetches, and chain/loop hops, where the
     * loop pair shares one status — so the target URI completes the
     * row identity). */
-  def runToWebTable(media: DataFrame, path: String, checkpointPath: String,
-      buckets: Int = defaultBuckets)
+  def runToWebTable(media: DataFrame, path: String, checkpointPath: String)
   : org.apache.spark.sql.streaming.StreamingQuery =
-    BucketedSink.runToTable(media, path, checkpointPath,
-      appendBatch(_, path, buckets))
+    BucketedSink.runToTable(media, path, checkpointPath, appendBatch(_, path))
 
   /** Fold accumulated appends back to one file per bucket; replayed
     * rows are deduplicated here so they stop paying read-side dedup.
     * Quiesced-writer contract per [[BucketedSink.compact]]. */
-  def compact(spark: SparkSession, path: String,
-      buckets: Int = defaultBuckets): Unit =
+  def compact(spark: SparkSession, path: String): Unit =
     BucketedSink.compact(spark, path, (df, tmp) =>
       write(df.drop("web_bucket").dropDuplicates("media_id", "http_status", "target_uri"),
-        tmp, buckets, "overwrite"))
+        tmp, "overwrite"))
 
   /** Exactly-once view over the at-least-once table. */
   def read(spark: SparkSession, path: String): DataFrame =
@@ -75,16 +70,13 @@ object WebSink {
     * removal + gates over main text) instead of whole-page extraction.
     * Same code path as `web_pipeline_main`, so the streamed table
     * rides that query's oracle verbatim. */
-  def appendBatchMain(media: DataFrame, path: String,
-      buckets: Int = defaultBuckets): Unit =
-    write(WebCodec.pipelineMain(media), path, buckets, "append")
+  def appendBatchMain(media: DataFrame, path: String): Unit =
+    write(WebCodec.pipelineMain(media), path, "append")
 
   /** Streaming ingest into the main-content serving table. */
-  def runToMainTable(media: DataFrame, path: String, checkpointPath: String,
-      buckets: Int = defaultBuckets)
+  def runToMainTable(media: DataFrame, path: String, checkpointPath: String)
   : org.apache.spark.sql.streaming.StreamingQuery =
-    BucketedSink.runToTable(media, path, checkpointPath,
-      appendBatchMain(_, path, buckets))
+    BucketedSink.runToTable(media, path, checkpointPath, appendBatchMain(_, path))
 
   /** The streamed FETCH LOG (r18): the slim per-record fetch table a
     * real crawler materializes beside the payload store — (media_id,
@@ -93,21 +85,17 @@ object WebSink {
     * queries read THIS instead of re-parsing archives. Row identity is
     * (media_id, rec_index) — deterministic per archive, so replays
     * dedup read-side like the other tables. */
-  private def writeFetch(rows: DataFrame, path: String, buckets: Int,
-      mode: String): Unit =
+  private def writeFetch(rows: DataFrame, path: String, mode: String): Unit =
     BucketedSink.write(rows, path, col("media_id"), "web_bucket",
-      buckets, Seq(col("media_id"), col("rec_index")), mode)
+      defaultBuckets, Seq(col("media_id"), col("rec_index")), mode)
 
-  def appendBatchFetch(media: DataFrame, path: String,
-      buckets: Int = defaultBuckets): Unit =
-    writeFetch(WebCodec.fetchLog(media), path, buckets, "append")
+  def appendBatchFetch(media: DataFrame, path: String): Unit =
+    writeFetch(WebCodec.fetchLog(media), path, "append")
 
   /** Streaming ingest into the fetch-log table. */
-  def runToFetchTable(media: DataFrame, path: String,
-      checkpointPath: String, buckets: Int = defaultBuckets)
+  def runToFetchTable(media: DataFrame, path: String, checkpointPath: String)
   : org.apache.spark.sql.streaming.StreamingQuery =
-    BucketedSink.runToTable(media, path, checkpointPath,
-      appendBatchFetch(_, path, buckets))
+    BucketedSink.runToTable(media, path, checkpointPath, appendBatchFetch(_, path))
 
   /** Exactly-once view over the at-least-once fetch log. */
   def readFetch(spark: SparkSession, path: String): DataFrame =
@@ -123,8 +111,7 @@ object WebSink {
       // OVERWRITE, not append (the ActivitySink pattern): the tmp dir
       // outlives the JVM; appending would stack duplicate copies per
       // run and serve stale-schema rows after any pipeline change
-      write(WebCodec.pipeline(WebCodec.webWarc(docs)), path,
-        defaultBuckets, "overwrite")
+      write(WebCodec.pipeline(WebCodec.webWarc(docs)), path, "overwrite")
       read(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
     }
 
@@ -134,8 +121,7 @@ object WebSink {
     ArtifactMemo.once("websinkmain", sfDir) {
       val path = ArtifactMemo.dir("websinkmain", sfDir)
       val docs = graft.sources.Tables(spark, sfDir, "documents")
-      write(WebCodec.pipelineMain(WebCodec.webWarc(docs)), path,
-        defaultBuckets, "overwrite")
+      write(WebCodec.pipelineMain(WebCodec.webWarc(docs)), path, "overwrite")
       read(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
     }
 
@@ -144,8 +130,7 @@ object WebSink {
     ArtifactMemo.once("websinkfetch", sfDir) {
       val path = ArtifactMemo.dir("websinkfetch", sfDir)
       val docs = graft.sources.Tables(spark, sfDir, "documents")
-      writeFetch(WebCodec.fetchLog(WebCodec.webWarc(docs)), path,
-        defaultBuckets, "overwrite")
+      writeFetch(WebCodec.fetchLog(WebCodec.webWarc(docs)), path, "overwrite")
       readFetch(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
     }
 

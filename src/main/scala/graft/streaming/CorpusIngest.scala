@@ -29,6 +29,13 @@ import org.apache.spark.sql.functions._
   * by fingerprint — even load by construction (md5). */
 object CorpusIngest {
 
+  /** The quality floor every gate applies, the probe slice
+    * (doc_id % 50 == 0) the batch gates decontaminate against, and the
+    * streaming dedup horizon. */
+  private val qualityFloor = 0.3
+  private val probeSlice = 50
+  private val dedupHorizon = "1 hour"
+
   /** Content fingerprint — identical bytes to the batch
     * [[TextAnalysis.contamination]] key, so batch and stream agree on
     * what "duplicate" and "contaminated" mean. */
@@ -50,8 +57,6 @@ object CorpusIngest {
   def cleanStream(
       docs: DataFrame,
       probeFps: DataFrame,
-      minQuality: Double = 0.3,
-      watermark: String = "1 hour",
       keepText: Boolean = false): DataFrame = {
     val outCols = Seq(col("doc_id"), col("source"), col("fp"),
       round(col("quality"), 6).as("quality_r"), col("event_ts")) ++
@@ -66,10 +71,10 @@ object CorpusIngest {
       // 100 TB/day ingest is run by — a silent gate is an outage you
       // discover from the training loss.
       docs.observe("graft_corpus_in", count(lit(1)).as("docs_in")))
-      .where(col("quality") >= minQuality)
+      .where(col("quality") >= qualityFloor)
       .observe("graft_corpus_quality", count(lit(1)).as("quality_passed"))
       .withColumn("fp", fingerprint)
-      .withWatermark("event_ts", watermark)
+      .withWatermark("event_ts", dedupHorizon)
       .dropDuplicatesWithinWatermark("fp")
       .observe("graft_corpus_dedup", count(lit(1)).as("dedup_survivors"))
       .join(broadcast(probeFps.select("fp")), Seq("fp"), "left_anti")
@@ -88,16 +93,14 @@ object CorpusIngest {
     * next to the stage-drop counts. */
   def cleanStreamRedacted(
       docs: DataFrame,
-      probeFps: DataFrame,
-      minQuality: Double = 0.3,
-      watermark: String = "1 hour"): DataFrame =
+      probeFps: DataFrame): DataFrame =
     TextAnalysis.withQuality(
       docs.observe("graft_corpus_in", count(lit(1)).as("docs_in")))
-      .where(col("quality") >= minQuality)
+      .where(col("quality") >= qualityFloor)
       .observe("graft_corpus_quality", count(lit(1)).as("quality_passed"))
       .withColumn("fp", fingerprint)
       .withColumn("n_pii", TextAnalysis.piiCount(col("text")))
-      .withWatermark("event_ts", watermark)
+      .withWatermark("event_ts", dedupHorizon)
       .dropDuplicatesWithinWatermark("fp")
       .observe("graft_corpus_dedup", count(lit(1)).as("dedup_survivors"))
       .join(broadcast(probeFps.select("fp")), Seq("fp"), "left_anti")
@@ -135,16 +138,14 @@ object CorpusIngest {
     * `embedding: array<float>`. */
   def cleanStreamSemantic(
       docs: DataFrame,
-      probeFps: DataFrame,
-      minQuality: Double = 0.3,
-      watermark: String = "1 hour"): DataFrame =
+      probeFps: DataFrame): DataFrame =
     TextAnalysis.withQuality(
       docs.observe("graft_corpus_in", count(lit(1)).as("docs_in")))
-      .where(col("quality") >= minQuality)
+      .where(col("quality") >= qualityFloor)
       .observe("graft_corpus_quality", count(lit(1)).as("quality_passed"))
       .withColumn("fp", fingerprint)
       .withColumn("sem_fp", signPattern(col("embedding")))
-      .withWatermark("event_ts", watermark)
+      .withWatermark("event_ts", dedupHorizon)
       .dropDuplicatesWithinWatermark("fp")
       .observe("graft_corpus_dedup", count(lit(1)).as("dedup_survivors"))
       .dropDuplicatesWithinWatermark("sem_fp")
@@ -178,9 +179,7 @@ object CorpusIngest {
       probeFps: DataFrame,
       model: Map[String, Long],
       unkLpn: Long,
-      nllCutoff: Double,
-      minQuality: Double = 0.3,
-      watermark: String = "1 hour"): DataFrame = {
+      nllCutoff: Double): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(model)
@@ -193,7 +192,7 @@ object CorpusIngest {
       .select(col("doc_id"), col("text"), col("source"), col("event_ts"),
         col("quality"))
       .observe("graft_corpus_lm_in", count(lit(1)).as("docs_in"))
-      .where(col("quality") >= minQuality)
+      .where(col("quality") >= qualityFloor)
       .as[(Long, String, String, java.sql.Timestamp, Double)]
       .mapPartitions { it =>
         val m = bc.value
@@ -209,7 +208,7 @@ object CorpusIngest {
       .where(col("avg_nll") <= nllCutoff)
       .observe("graft_corpus_lm_passed", count(lit(1)).as("lm_passed"))
       .withColumn("fp", fingerprint)
-      .withWatermark("event_ts", watermark)
+      .withWatermark("event_ts", dedupHorizon)
       .dropDuplicatesWithinWatermark("fp")
       .join(broadcast(probeFps.select("fp")), Seq("fp"), "left_anti")
       .select(col("doc_id"), col("source"), col("fp"),
@@ -233,9 +232,7 @@ object CorpusIngest {
       probeFps: DataFrame,
       model: Map[String, Long],
       unkRn: Long,
-      logwCutoff: Double,
-      minQuality: Double = 0.3,
-      watermark: String = "1 hour"): DataFrame = {
+      logwCutoff: Double): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(model)
@@ -245,7 +242,7 @@ object CorpusIngest {
       .select(col("doc_id"), col("text"), col("source"), col("event_ts"),
         col("quality"))
       .observe("graft_corpus_dsir_in", count(lit(1)).as("docs_in"))
-      .where(col("quality") >= minQuality)
+      .where(col("quality") >= qualityFloor)
       .as[(Long, String, String, java.sql.Timestamp, Double)]
       .mapPartitions { it =>
         val m = bc.value
@@ -262,7 +259,7 @@ object CorpusIngest {
       .where(col("avg_logw") >= logwCutoff)
       .observe("graft_corpus_dsir_passed", count(lit(1)).as("dsir_passed"))
       .withColumn("fp", fingerprint)
-      .withWatermark("event_ts", watermark)
+      .withWatermark("event_ts", dedupHorizon)
       .dropDuplicatesWithinWatermark("fp")
       .join(broadcast(probeFps.select("fp")), Seq("fp"), "left_anti")
       .select(col("doc_id"), col("source"), col("fp"),
@@ -280,7 +277,6 @@ object CorpusIngest {
   private def corpusGate(
       input: DataFrame,
       probeDocs: DataFrame,
-      minQuality: Double,
       probeModulus: Int,
       stage: DataFrame => DataFrame = identity,
       afterDedup: DataFrame => DataFrame = identity,
@@ -292,7 +288,7 @@ object CorpusIngest {
       .partitionBy(col("fp")).orderBy(col("doc_id"))
     afterDedup(
       stage(TextAnalysis.withQuality(input)
-        .where(col("quality") >= minQuality))
+        .where(col("quality") >= qualityFloor))
         .withColumn("fp", fingerprint)
         .withColumn("rn", row_number().over(w))
         .where(col("rn") === 1))
@@ -305,49 +301,40 @@ object CorpusIngest {
   /** Batch twin of [[cleanStreamLm]], self-contained over the fixture:
     * trains the top-K model on the corpus in-plan, scores by join
     * ([[graft.ext.Lm.nanoScores]] — exactly the stream's integer
-    * arithmetic), gates at the corpus's `nllQuantile` NLL percentile,
+    * arithmetic), gates at the corpus's 90th NLL percentile,
     * then fp-dedup + decontamination. Fully oracle-able. */
-  def cleanBatchLm(
-      docs: DataFrame,
-      minQuality: Double = 0.3,
-      probeModulus: Int = 50,
-      topK: Int = 4096,
-      nllQuantile: Double = 0.9): DataFrame = {
+  def cleanBatchLm(docs: DataFrame): DataFrame = {
     // fence the LM scores (r19 optimization): consumed by BOTH the
     // percentile cut and the gate join - un-fenced, the tokenize +
     // vocab + scoring subtree executed twice (guide §2.4)
-    val scores = graft.ext.Lm.nanoScores(docs, topK)
+    val scores = graft.ext.Lm.nanoScores(docs)
       .select(col("doc_id"), col("avg_nll_r"))
       .localCheckpoint(false)
     val cut = scores.agg(
-      expr(s"percentile(avg_nll_r, $nllQuantile)").as("cut"))
-    corpusGate(docs, docs, minQuality, probeModulus,
+      expr("percentile(avg_nll_r, 0.9)").as("cut"))
+    corpusGate(docs, docs, probeSlice,
       stage = _.join(scores, "doc_id")
         .crossJoin(broadcast(cut))
         .where(col("avg_nll_r") <= col("cut")),
       extraOut = Seq(col("avg_nll_r")))
   }
 
-  /** [[cleanBatch]] + a model-based gate: drop the worst `1−nllQuantile`
+  /** [[cleanBatch]] + a model-based gate: drop the worst 10%
     * tail of the corpus by unigram-LM average negative log-likelihood
     * ([[graft.ext.Lm.perplexity]]) — the CCNet-style stage that catches
     * gibberish the surface heuristics pass. The cutoff is the corpus's
-    * own `nllQuantile` percentile (self-calibrating, like
+    * own 90th percentile (self-calibrating, like
     * `quality_adaptive_keep`'s per-language median), computed exactly
     * here for the oracle; at 100 TB the one corpus-wide exact percentile
     * swaps for `approx_percentile` (the `q_price_quantiles_approx`
     * pattern) — the rest of the plan is unchanged. */
-  def cleanBatchPerplexity(
-      docs: DataFrame,
-      minQuality: Double = 0.3,
-      probeModulus: Int = 50,
-      nllQuantile: Double = 0.9): DataFrame = {
+  def cleanBatchPerplexity(docs: DataFrame): DataFrame = {
     // same fence rationale as cleanBatchLm (r19 optimization)
     val ppl = graft.ext.Lm.perplexity(docs)
       .select(col("doc_id"), col("avg_nll_r"), col("ppl_r"))
       .localCheckpoint(false)
-    val cut = ppl.agg(expr(s"percentile(avg_nll_r, $nllQuantile)").as("cut"))
-    corpusGate(docs, docs, minQuality, probeModulus,
+    val cut = ppl.agg(expr("percentile(avg_nll_r, 0.9)").as("cut"))
+    corpusGate(docs, docs, probeSlice,
       stage = _.join(ppl, "doc_id")
         .crossJoin(broadcast(cut))
         .where(col("avg_nll_r") <= col("cut")),
@@ -357,23 +344,17 @@ object CorpusIngest {
   /** Batch twin of [[cleanStreamDsir]], self-contained over the fixture:
     * trains the fixed-vocab ratio model in-plan
     * ([[graft.ext.Dsir.nanoRatioScores]] — exactly the stream's integer
-    * arithmetic), keeps the corpus's most-target-like `1−keepQuantile`
+    * arithmetic), keeps the corpus's most-target-like half
     * tail by average importance ratio, then fp-dedup + decontamination.
     * Fully oracle-able. */
-  def cleanBatchDsir(
-      docs: DataFrame,
-      minQuality: Double = 0.3,
-      probeModulus: Int = 50,
-      targetLang: String = "en",
-      topK: Int = 4096,
-      keepQuantile: Double = 0.5): DataFrame = {
+  def cleanBatchDsir(docs: DataFrame): DataFrame = {
     // same fence rationale as cleanBatchLm (r19 optimization)
-    val scores = graft.ext.Dsir.nanoRatioScores(docs, targetLang, topK)
+    val scores = graft.ext.Dsir.nanoRatioScores(docs)
       .select(col("doc_id"), col("avg_logw_r"))
       .localCheckpoint(false)
     val cut = scores.agg(
-      expr(s"percentile(avg_logw_r, $keepQuantile)").as("cut"))
-    corpusGate(docs, docs, minQuality, probeModulus,
+      expr("percentile(avg_logw_r, 0.5)").as("cut"))
+    corpusGate(docs, docs, probeSlice,
       stage = _.join(scores, "doc_id")
         .crossJoin(broadcast(cut))
         .where(col("avg_logw_r") >= col("cut")),
@@ -384,18 +365,14 @@ object CorpusIngest {
     * `embeddings` fixtures (doc_id = vec_id): quality gate → exact-fp
     * "first doc_id wins" → sem-cell "first doc_id wins" →
     * decontamination. Fully oracle-able. */
-  def cleanBatchSemantic(
-      docs: DataFrame,
-      embs: DataFrame,
-      minQuality: Double = 0.3,
-      probeModulus: Int = 50): DataFrame = {
+  def cleanBatchSemantic(docs: DataFrame, embs: DataFrame): DataFrame = {
     val wSem = org.apache.spark.sql.expressions.Window
       .partitionBy(col("sem_fp")).orderBy(col("doc_id"))
     // embeddings join INSIDE the stage, after the quality floor: only
     // surviving docs pay the embedding payload, and the quality gate's
     // scan-parallel pass never shuffles the wide vectors
     corpusGate(
-      docs, docs, minQuality, probeModulus,
+      docs, docs, probeSlice,
       stage = _.join(
         embs.select(col("vec_id").as("doc_id"), col("embedding")), "doc_id")
         .withColumn("sem_fp", signPattern(col("embedding"))),
@@ -409,27 +386,24 @@ object CorpusIngest {
     * fingerprint), `contaminated` (survived dedup but fingerprint in the
     * probe set), `kept`. Counts sum to the corpus size by construction —
     * the first dashboard a pipeline owner reads after a run. */
-  def cleanReport(
-      docs: DataFrame,
-      minQuality: Double = 0.3,
-      probeModulus: Int = 50): DataFrame = {
+  def cleanReport(docs: DataFrame): DataFrame = {
     val probeFps = docs
-      .where(pmod(col("doc_id"), lit(probeModulus)) === 0)
+      .where(pmod(col("doc_id"), lit(probeSlice)) === 0)
       .select(fingerprint.as("fp")).distinct()
     // dedup rank: first doc_id among QUALITY-PASSING copies of a
     // fingerprint (the quality predicate joins the partition key so
     // rejected copies don't shadow a passing one)
     val dupRank = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("fp"), col("quality") >= minQuality)
+      .partitionBy(col("fp"), col("quality") >= qualityFloor)
       .orderBy(col("doc_id"))
     TextAnalysis.withQuality(docs)
       .withColumn("fp", fingerprint)
       .withColumn("rn",
-        when(col("quality") >= minQuality, row_number().over(dupRank)))
+        when(col("quality") >= qualityFloor, row_number().over(dupRank)))
       .join(broadcast(probeFps.withColumn("is_probe", lit(true))),
         Seq("fp"), "left")
       .withColumn("outcome",
-        when(col("quality") < minQuality, "quality_reject")
+        when(col("quality") < qualityFloor, "quality_reject")
           .when(col("rn") > 1, "duplicate")
           .when(col("is_probe"), "contaminated")
           .otherwise("kept"))
@@ -440,21 +414,15 @@ object CorpusIngest {
   /** Batch twin of [[cleanStream]] over the `documents` fixture: same
     * quality gate, "first doc_id wins" in place of "first arrival wins"
     * for the dedup stage, same no-self-exclusion decontamination against
-    * the doc_id % probeModulus == 0 probe slice. Fully oracle-able. */
-  def cleanBatch(
-      docs: DataFrame,
-      minQuality: Double = 0.3,
-      probeModulus: Int = 50): DataFrame =
-    corpusGate(docs, docs, minQuality, probeModulus)
+    * the doc_id % 50 == 0 probe slice. Fully oracle-able. */
+  def cleanBatch(docs: DataFrame): DataFrame =
+    corpusGate(docs, docs, probeSlice)
 
   /** Batch twin of [[cleanStreamRedacted]]: the `corpus_clean` gate plus
     * the PII count and the md5 of the redacted text (hashed to keep the
     * oracle payload small — the stream lands the full redacted text). */
-  def cleanBatchRedacted(
-      docs: DataFrame,
-      minQuality: Double = 0.3,
-      probeModulus: Int = 50): DataFrame =
-    corpusGate(docs, docs, minQuality, probeModulus,
+  def cleanBatchRedacted(docs: DataFrame): DataFrame =
+    corpusGate(docs, docs, probeSlice,
       stage = _.withColumn("n_pii", TextAnalysis.piiCount(col("text"))),
       extraOut = Seq(col("n_pii"),
         md5(TextAnalysis.piiRedacted(col("text"))).as("redacted_md5")))
@@ -473,19 +441,16 @@ object CorpusIngest {
     * semantics — same gate, same tokenizer, same straddle. */
   def cleanBatchBudget(
       docs: DataFrame,
-      minQuality: Double = 0.3,
-      probeModulus: Int = 50,
-      budgetDenom: Int = 2): DataFrame =
+      probeModulus: Int = probeSlice): DataFrame =
     graft.ext.Mixture.sampleTokensCounted(
       // fence the gated frame (r19 optimization): sampleTokensCounted
       // consumes it twice (seat allocation + prefix sum) and the gate
       // chain (quality scoring, window dedup, decontamination) is the
       // expensive side - one pass instead of two (guide §2.4)
-      corpusGate(docs, docs, minQuality, probeModulus,
+      corpusGate(docs, docs, probeModulus,
         stage = _.withColumn("n_tok", nTok),
         extraOut = Seq(col("n_tok")))
-        .localCheckpoint(false),
-      budgetDenom)
+        .localCheckpoint(false))
       .select(col("doc_id"), col("source"), col("fp"), col("quality_r"),
         col("n_tok"), col("tok_pfx"), col("granted").cast("long").as("granted"))
       .orderBy("doc_id")
@@ -527,13 +492,11 @@ object CorpusIngest {
   def cleanStreamBudget(
       docs: DataFrame,
       probeFps: DataFrame,
-      grants: Map[String, Long],
-      minQuality: Double = 0.3,
-      watermark: String = "1 hour"): DataFrame = {
+      grants: Map[String, Long]): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(grants)
-    cleanStream(docs, probeFps, minQuality, watermark, keepText = true)
+    cleanStream(docs, probeFps, keepText = true)
       .withColumn("n_tok", nTok)
       .select(col("doc_id"), col("source"), col("fp"), col("quality_r"),
         col("event_ts"), col("n_tok"))

@@ -20,10 +20,9 @@ object StreamJoins {
   def purchaseAttribution(
       clicks: DataFrame,
       purchases: DataFrame,
-      horizon: String = "1 hour",
-      lateness: String = "10 minutes"): DataFrame = {
-    val c = clicks.withWatermark("ts", lateness).alias("c")
-    val p = purchases.withWatermark("ts", lateness).alias("p")
+      horizon: String = "1 hour"): DataFrame = {
+    val c = clicks.withWatermark("ts", "10 minutes").alias("c")
+    val p = purchases.withWatermark("ts", "10 minutes").alias("p")
     p.join(c,
         expr(s"""c.user_id = p.user_id
                  AND c.ts >= p.ts - INTERVAL $horizon

@@ -145,12 +145,8 @@ object StreamTriangles {
       followers: DataFrame,
       path: String,
       checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    followers.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) => foldBatch(batch, path) }
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    graft.util.Drain.availableNow(followers, checkpointPath)(
+      (batch, _) => foldBatch(batch, path))
 
   /** Read the maintained stats in the batch operator's output shape. */
   def readTriangles(

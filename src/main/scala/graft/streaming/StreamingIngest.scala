@@ -69,8 +69,8 @@ object StreamingIngest {
 
   /** Effectively-once variant: watermark + dedup on the deterministic
     * event key before the sink. */
-  def dedupedActivityStream(raw: DataFrame, horizon: String = "1 hour"): DataFrame =
-    Pipeline.dedupedStreaming(activityStream(raw), horizon)
+  def dedupedActivityStream(raw: DataFrame): DataFrame =
+    Pipeline.dedupedStreaming(activityStream(raw))
 
   /** How long (event time) a user's counter survives with no new activity
     * before the state store evicts it — bounds state size in a

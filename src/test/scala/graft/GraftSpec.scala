@@ -78,6 +78,12 @@ class GraftSpec extends SparkSuite {
     assert(mainFilesContaining(".rename(") === Set("scala/graft/util/SwapDirs.scala"))
   }
 
+  test("one streaming drain: every maintained table runs through " +
+      "Drain.availableNow") {
+    Seq(".writeStream", "Trigger.AvailableNow").foreach(text =>
+      assert(mainFilesContaining(text) === Set("scala/graft/util/Drain.scala"), text))
+  }
+
   test("only Fence releases fenced blocks, and each harness main opens a " +
       "scope per query") {
     // the root release is defined in Fence and delegated to by
