@@ -7615,7 +7615,7 @@ FROM a GROUP BY k ORDER BY domain""")),
     ("web_fetch_log_served",
       (s: SparkSession, d: String) =>
         graft.sinks.WebSink.materializedFetch(s, d)
-          .drop("web_bucket")
+          .drop(graft.sinks.WebSink.fetch.bucketCol)
           .orderBy("media_id", "rec_index"),
       Some(s"""WITH $webRecsCtesSql,
 $webRecsCkCtes

@@ -177,7 +177,8 @@ object FeedQueries {
       offset: Int = 0): DataFrame = {
     val ids = followees.select("user_id").collect().map(_.get(0)).toSeq
     val page = activityTable
-      .where(col("user_bucket").isin(followeeBuckets: _*) && col("user_id").isin(ids: _*))
+      .where(graft.sinks.ActivitySink.table.inBuckets(followeeBuckets: _*) &&
+        col("user_id").isin(ids: _*))
       .orderBy(col("event_timestamp").desc, col("activity_pk").desc)
     (if (offset > 0) page.offset(offset) else page).limit(limit)
   }

@@ -2,10 +2,8 @@ package graft.sinks
 
 import graft.ingest.Pipeline
 import graft.sources.CdcSource
-import graft.util.ArtifactMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** K1 — the materialized activity table (reference: event_processor.py:89-113
   * writing cassandra-init.cql:6-15).
@@ -14,8 +12,8 @@ import org.apache.spark.storage.StorageLevel
   * materialized partitioned by `user_id` and clustered newest-first
   * (cassandra-init.cql:14-15). The Spark-native equivalent:
   *
-  *  - '''hash-bucket directory partitioning''': `user_bucket =
-  *    pmod(hash(user_id), N)` as a partition directory column. A feed read
+  *  - '''hash-bucket directory partitioning''': `user_bucket`, the hash
+  *    of `user_id` modulo N, as a partition directory column. A feed read
   *    computes the buckets of the followee set and prunes to those
   *    directories — genuine partition pruning with a bounded directory
   *    count (N, not |users|), which is what survives 100 TB / 1000
@@ -36,23 +34,23 @@ object ActivitySink {
 
   val defaultBuckets = 64
 
-  private def clusteringSort = Seq(
-    col("user_id"), col("event_timestamp").desc, col("activity_pk").desc)
+  /** The activity table's layout: bucketed by user, files in the CQL
+    * clustering order; rows are not deduplicated (see
+    * [[runToActivityTable]]). */
+  private[graft] val table = BucketedSink("user_id", "user_bucket",
+    Seq(col("user_id"), col("event_timestamp").desc, col("activity_pk").desc))
 
   /** Write the canonical activity table: bucket-partitioned directories,
-    * clustering-sorted files ([[BucketedSink]] with the CQL clustering
-    * policy). */
-  def write(activity: DataFrame, path: String, buckets: Int = defaultBuckets): Unit =
-    BucketedSink.write(activity, path, col("user_id"), "user_bucket",
-      buckets, clusteringSort, "overwrite")
+    * clustering-sorted files. */
+  def write(activity: DataFrame, path: String): Unit =
+    table.write(activity, path, defaultBuckets, "overwrite")
 
   /** Append one micro-batch into the same layout (streaming K1). Each
     * batch adds clustering-sorted files under the bucket directories; a
-    * periodic compaction (re-running [[write]] over the accumulated
-    * table) restores one-file-per-bucket when batch counts grow. */
-  def appendBatch(activity: DataFrame, path: String, buckets: Int = defaultBuckets): Unit =
-    BucketedSink.write(activity, path, col("user_id"), "user_bucket",
-      buckets, clusteringSort, "append")
+    * periodic [[compact]] restores one-file-per-bucket when batch counts
+    * grow. */
+  def appendBatch(activity: DataFrame, path: String): Unit =
+    table.write(activity, path, defaultBuckets, "append")
 
   /** The K1 write path in streaming form (≙ event_processor.py:89-113):
     * checkpointed foreachBatch into the bucketed/clustered layout, so the
@@ -70,13 +68,11 @@ object ActivitySink {
     * appending into (VERDICT r3 item 8 — without this, streaming cadence
     * accumulates small files until scan throughput decays); mechanics and
     * the quiesced-writer contract in [[BucketedSink.compact]]. */
-  def compact(spark: SparkSession, path: String, buckets: Int = defaultBuckets): Unit =
-    BucketedSink.compact(spark, path,
-      // user_bucket is re-derived by write() from the same hash
-      (df, tmp) => write(df.drop("user_bucket"), tmp, buckets))
+  def compact(spark: SparkSession, path: String): Unit =
+    table.compact(spark, path, defaultBuckets)
 
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    table.read(spark, path)
 
   /** Bucket ids of a small keyed DataFrame of `user_id` (a followee
     * IN-list) — used to prune the feed scan to the followees' partitions.
@@ -85,7 +81,7 @@ object ActivitySink {
     * runs no Spark job (reference: main.py:149-154). */
   def bucketsOf(keys: DataFrame): Seq[Int] =
     keys
-      .select(pmod(hash(col("user_id")), lit(defaultBuckets)))
+      .select(table.bucket(defaultBuckets))
       .collect()
       .map(_.getInt(0))
       .distinct
@@ -96,16 +92,13 @@ object ActivitySink {
     * thereafter). Columns: canonical 7 + the deterministic `activity_pk`
     * tiebreak + `user_bucket`. */
   def materialized(spark: SparkSession, sfDir: String): DataFrame =
-    ArtifactMemo.once("activity", sfDir) {
-      val path = ArtifactMemo.dir("activity", sfDir)
+    table.materialized(spark, "activity", sfDir, defaultBuckets) {
       val (l, c, s, f) = CdcSource.all(spark, sfDir)
       // A2: observe() on the write-side plan — the Spark-native counterpart
       // of the reference's processed-events counter (connection_state.py:8-9,
       // event_processor.py:73-74); metrics surface via QueryExecutionListener.
-      val activity = Pipeline
+      Pipeline
         .activity(l, c, s, f)
         .observe("graft_ingest", count(lit(1)).as("events_written"))
-      write(activity, path)
-      read(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
     }
 }

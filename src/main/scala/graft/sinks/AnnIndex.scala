@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   *  - `centroids/` — `(cent_id, qcv)`: the strided sample of BUILD-time
   *    quantized codes ([[Similarity.ivfStride]] convention: every
   *    stride-th vec_id), tiny by construction (N/stride rows).
-  *  - `vectors/` — `(vec_id, qv, cell)` bucketed `pmod(hash(cell),
-  *    buckets)` into `cell_bucket=` directories, files sorted
+  *  - `vectors/` — `(vec_id, qv, cell)` hash-bucketed by cell into
+  *    `cell_bucket=` directories, files sorted
   *    `(cell, vec_id)`: a probe touches only the directories its cells
   *    hash into (partition pruning) and inside them row groups are
   *    cell-clustered (min/max pruning). Bounded directory count — the
@@ -50,6 +50,9 @@ import org.apache.spark.sql.functions._
 object AnnIndex {
 
   val defaultBuckets = 32
+
+  private[sinks] val vectorsLayout = BucketedSink("cell", "cell_bucket",
+    Seq(col("cell").asc, col("vec_id").asc))
 
   private def asD(c: org.apache.spark.sql.Column) = Similarity.asDouble(c)
 
@@ -99,11 +102,7 @@ object AnnIndex {
     val meta = readMeta(spark, path)
     val codes = newEmbeddings
       .select(col("vec_id"), asD(col("embedding")).as("v"))
-      .select(col("vec_id"),
-        transform(col("v"), x =>
-          greatest(lit(-127.0),
-            least(lit(127.0), floor(x * lit(127.0) / lit(meta.s) + lit(0.5))))
-            .cast("tinyint")).as("qv"))
+      .select(col("vec_id"), quantizeStored(col("v"), meta.s).as("qv"))
     writeVectors(
       assignCells(codes, readCentroids(spark, path))
         .join(labelsOf(newEmbeddings), Seq("vec_id")),
@@ -144,15 +143,8 @@ object AnnIndex {
 
   /** Compact accumulated appends back to one-file-per-bucket
     * cell-clustered files; crash-safe swap per [[BucketedSink.compact]]. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val meta = readMeta(spark, path)
-    BucketedSink.compact(spark, s"$path/vectors",
-      (df, tmp) => BucketedSink.write(
-        df.drop("cell_bucket")
-          .select(col("vec_id"), col("qv"), col("cell"), col("label")),
-        tmp, col("cell"), "cell_bucket", meta.buckets,
-        Seq(col("cell").asc, col("vec_id").asc), "overwrite"))
-  }
+  def compact(spark: SparkSession, path: String): Unit =
+    vectorsLayout.compact(spark, s"$path/vectors", readMeta(spark, path).buckets)
 
   /** Top-k probe for external query vectors `(q_id, q: array<double>)`
     * — already in CODE space (the caller quantized them, or they are
@@ -208,14 +200,14 @@ object AnnIndex {
     // a serving system knows its request's cells driver-side; this is
     // the read that makes a persisted index sublinear)
     val probed = probes
-      .select(col("cell"), pmod(hash(col("cell")), lit(meta.buckets)).as("b"))
+      .select(col("cell"), vectorsLayout.bucket(meta.buckets).as("b"))
       .distinct().collect()
     val cells = probed.map(_.getLong(0))
     val dirs = probed.map(_.getInt(1)).distinct
     val vecCols = Seq(col("vec_id"), col("qv"), col("cell")) ++
       (if (filtered) Seq(col("label")) else Nil)
     val vecs = spark.read.parquet(s"$path/vectors")
-      .where(col("cell_bucket").isin(dirs: _*) && col("cell").isin(cells: _*))
+      .where(vectorsLayout.inBuckets(dirs: _*) && col("cell").isin(cells: _*))
       .select(vecCols: _*)
       .dropDuplicates("vec_id") // at-least-once appends, identical rows
       .withColumn("v", asD(col("qv"))).drop("qv")
@@ -298,10 +290,18 @@ object AnnIndex {
 
   private def writeVectors(
       assigned: DataFrame, path: String, buckets: Int, mode: String): Unit =
-    BucketedSink.write(
+    vectorsLayout.write(
       assigned.select(col("vec_id"), col("qv"), col("cell"), col("label")),
-      s"$path/vectors", col("cell"), "cell_bucket", buckets,
-      Seq(col("cell").asc, col("vec_id").asc), mode)
+      s"$path/vectors", buckets, mode)
+
+  /** Int8 codes of the double array `v` under a STORED scale `s`,
+    * saturating at ±127 (the frozen-codebook contract: a vector beyond the
+    * build-time range clamps instead of wrapping). */
+  private[sinks] def quantizeStored(
+      v: org.apache.spark.sql.Column, s: Double): org.apache.spark.sql.Column =
+    transform(v, x =>
+      greatest(lit(-127.0), least(lit(127.0), floor(x * lit(127.0) / lit(s) + lit(0.5))))
+        .cast("tinyint"))
 
   private def readCentroids(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(s"$path/centroids")

@@ -31,18 +31,12 @@ object CorpusSink {
 
   val defaultBuckets = 32
 
-  private def docSort = Seq(col("doc_id").asc)
+  private[sinks] val table = BucketedSink("doc_id", "doc_bucket", Seq(col("doc_id").asc))
 
-  /** Write the canonical corpus table: doc-bucketed directories, files
-    * sorted by doc_id. */
-  def write(clean: DataFrame, path: String, buckets: Int = defaultBuckets): Unit =
-    BucketedSink.write(clean, path, col("doc_id"), "doc_bucket",
-      buckets, docSort, "overwrite")
-
-  /** Append one micro-batch into the same layout. */
-  def appendBatch(clean: DataFrame, path: String, buckets: Int = defaultBuckets): Unit =
-    BucketedSink.write(clean, path, col("doc_id"), "doc_bucket",
-      buckets, docSort, "append")
+  /** Append one micro-batch: doc-bucketed directories, files sorted by
+    * doc_id. */
+  def appendBatch(clean: DataFrame, path: String): Unit =
+    table.write(clean, path, defaultBuckets, "append")
 
   /** The corpus write path in streaming form: checkpointed foreachBatch
     * of a `cleanStream*` frame into the bucketed layout. Restart/replay
@@ -51,17 +45,14 @@ object CorpusSink {
   def runToCorpusTable(
       clean: DataFrame,
       path: String,
-      checkpointPath: String,
-      buckets: Int = defaultBuckets): org.apache.spark.sql.streaming.StreamingQuery =
-    BucketedSink.runToTable(clean, path, checkpointPath,
-      appendBatch(_, path, buckets))
+      checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
+    BucketedSink.runToTable(clean, path, checkpointPath, appendBatch(_, path))
 
   /** Compact accumulated per-batch files back to one-file-per-bucket;
     * contract in [[BucketedSink.compact]]. */
-  def compact(spark: SparkSession, path: String, buckets: Int = defaultBuckets): Unit =
-    BucketedSink.compact(spark, path,
-      (df, tmp) => write(df.drop("doc_bucket"), tmp, buckets))
+  def compact(spark: SparkSession, path: String): Unit =
+    table.compact(spark, path, defaultBuckets)
 
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    table.read(spark, path)
 }

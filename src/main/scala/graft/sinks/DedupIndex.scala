@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   *    a FIXED 768 bytes per document regardless of document size — the
   *    property that makes the index affordable where storing shingle
   *    sets would re-store the corpus.
-  *  - `bands/` — `(doc_id, band_id, band_hash)` bucketed
-  *    `pmod(hash(band_hash), buckets)`, files sorted (band_hash,
-  *    doc_id): the LSH candidate join touches 24-byte rows only.
+  *  - `bands/` — `(doc_id, band_id, band_hash)` hash-bucketed by
+  *    band_hash, files sorted (band_hash, doc_id): the LSH candidate
+  *    join touches 24-byte rows only.
   *
   * Probe shape at scale: the incoming batch shingles/signs ITSELF (one
   * scan of the batch, [[Dedup.numHashes]] fused minima), then joins its
@@ -59,13 +59,15 @@ object DedupIndex {
       if (portable) Dedup.shingledPortable(docs) else Dedup.shingled(docs))
       .select(col("doc_id"), col("sig"))
 
+  private[sinks] val sigsLayout =
+    BucketedSink("doc_id", "doc_bucket", Seq(col("doc_id").asc))
+  private[sinks] val bandsLayout = BucketedSink("band_hash", "band_bucket",
+    Seq(col("band_hash").asc, col("doc_id").asc))
+
   private def writeTables(
       signed: DataFrame, path: String, buckets: Int, mode: String): Unit = {
-    BucketedSink.write(signed, s"$path/sigs", col("doc_id"), "doc_bucket",
-      buckets, Seq(col("doc_id").asc), mode)
-    BucketedSink.write(Dedup.banded(signed),
-      s"$path/bands", col("band_hash"), "band_bucket", buckets,
-      Seq(col("band_hash").asc, col("doc_id").asc), mode)
+    sigsLayout.write(signed, s"$path/sigs", buckets, mode)
+    bandsLayout.write(Dedup.banded(signed), s"$path/bands", buckets, mode)
   }
 
   /** Build the index from scratch over a corpus `(doc_id, text, …)`. */
@@ -120,17 +122,8 @@ object DedupIndex {
   def compact(spark: SparkSession, path: String): Unit = {
     val buckets = spark.read.parquet(s"$path/meta")
       .head().getAs[Int]("buckets") // bounded: 1 row
-    BucketedSink.compact(spark, s"$path/sigs",
-      (df, tmp) => BucketedSink.write(
-        df.drop("doc_bucket").select(col("doc_id"), col("sig")),
-        tmp, col("doc_id"), "doc_bucket", buckets,
-        Seq(col("doc_id").asc), "overwrite"))
-    BucketedSink.compact(spark, s"$path/bands",
-      (df, tmp) => BucketedSink.write(
-        df.drop("band_bucket")
-          .select(col("doc_id"), col("band_id"), col("band_hash")),
-        tmp, col("band_hash"), "band_bucket", buckets,
-        Seq(col("band_hash").asc, col("doc_id").asc), "overwrite"))
+    sigsLayout.compact(spark, s"$path/sigs", buckets)
+    bandsLayout.compact(spark, s"$path/bands", buckets)
   }
 
   /** Near-dup matches of an incoming batch against the index:

@@ -136,17 +136,19 @@ object LayoutSink {
     Layout.readPruned(spark, path, xRange, yRange).dropDuplicates(key)
 
   /** Fold accumulated appends back to one clustered file per cell and GC
-    * the batch markers; crash-safe swap per [[BucketedSink.compact]].
+    * the batch markers, swapped in by [[graft.util.SwapDirs.replace]].
     * Run BETWEEN streaming runs. Rows are deduplicated on `key` here so
     * replayed appends stop paying their read-side dedup forever. */
   def compact(spark: SparkSession, path: String, key: String): Unit = {
     val meta = metaOf(spark, path)
-    BucketedSink.compact(spark, s"$path/data", (df, tmp) =>
-      Layout.withFileCol(
-        df.drop(meta.partitionCol).dropDuplicates(key), meta)
+    val data = new org.apache.hadoop.fs.Path(s"$path/data")
+    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.util.SwapDirs.replace(fs, data)(tmp =>
+      Layout.withFileCol(spark.read.parquet(data.toString)
+          .drop(meta.partitionCol).dropDuplicates(key), meta)
         .repartition(col(meta.partitionCol))
         .sortWithinPartitions(col(meta.xName), col(meta.yName))
-        .write.mode("overwrite").partitionBy(meta.partitionCol).parquet(tmp))
+        .write.mode("overwrite").partitionBy(meta.partitionCol).parquet(tmp.toString))
     // fold the per-batch stats rows back to one row per file (reading
     // the freshly compacted data keeps manifest and bytes in lockstep)
     Layout.writeStats(

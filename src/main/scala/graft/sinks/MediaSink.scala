@@ -4,7 +4,6 @@ import graft.ext.Multimodal
 import graft.util.ArtifactMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Streaming MULTIMODAL ingest — the media modality joins the streaming
   * corpus tier: a checkpointed stream of raw (media_id, payload) rows is
@@ -19,18 +18,15 @@ import org.apache.spark.storage.StorageLevel
   *
   * The table serves (media_id, fmt, width, height, embedding) — the shape
   * the similarity tier consumes (`media_embedding_topk` and any ANN index
-  * build slot in downstream), bucketed by `pmod(hash(media_id), N)` so a
-  * keyed lookup prunes to one directory at any table size.
+  * build slot in downstream), hash-bucketed by `media_id` so a keyed
+  * lookup prunes to one directory at any table size.
   */
 object MediaSink {
 
   val defaultBuckets = 32
 
-  private def clusteringSort = Seq(col("media_id"))
-
-  private def write(rows: DataFrame, path: String, mode: String): Unit =
-    BucketedSink.write(rows, path, col("media_id"), "media_bucket",
-      defaultBuckets, clusteringSort, mode)
+  private[sinks] val table =
+    BucketedSink("media_id", "media_bucket", Seq(col("media_id")), Seq("media_id"))
 
   /** Decode-gate + embed one micro-batch of raw media and append it into
     * the bucketed layout. The gate is the batch embedding operator
@@ -38,7 +34,7 @@ object MediaSink {
     * path, which is what lets the streamed table ride the SAME DuckDB
     * oracle as the batch query. */
   def appendBatch(media: DataFrame, path: String): Unit =
-    write(Multimodal.mediaEmbedding(media), path, "append")
+    table.write(Multimodal.mediaEmbedding(media), path, defaultBuckets, "append")
 
   /** The streaming ingest: checkpointed foreachBatch of raw payload rows
     * through the decode gate into the serving table. Delivery semantics
@@ -52,12 +48,11 @@ object MediaSink {
     * rows are deduplicated here so they stop paying read-side dedup.
     * Quiesced-writer contract per [[BucketedSink.compact]]. */
   def compact(spark: SparkSession, path: String): Unit =
-    BucketedSink.compact(spark, path, (df, tmp) =>
-      write(df.drop("media_bucket").dropDuplicates("media_id"), tmp, "overwrite"))
+    table.compact(spark, path, defaultBuckets)
 
   /** Exactly-once view over the at-least-once table. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).dropDuplicates("media_id")
+    table.read(spark, path)
 
   /** The "ANN index build slot" the header names, filled (r15): a
     * persisted [[AnnIndex]] over the served table's BMP-range
@@ -77,15 +72,7 @@ object MediaSink {
     * five-format synth corpus through the SAME decode-gate + embed path
     * the streaming ingest runs, persisted for the serving queries. */
   def materialized(spark: SparkSession, sfDir: String): DataFrame =
-    ArtifactMemo.once("mediasink", sfDir) {
-      val path = ArtifactMemo.dir("mediasink", sfDir)
-      val docs = graft.sources.Tables(spark, sfDir, "documents")
-      // OVERWRITE, not append (the ActivitySink pattern): the tmp dir
-      // outlives the JVM, and an append here would stack a full
-      // duplicate copy per run — and serve STALE-schema rows after any
-      // embedding change, failing the oracle with no code bug present
-      write(Multimodal.mediaEmbedding(Multimodal.mediaAllFormats(docs)),
-        path, "overwrite")
-      read(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
-    }
+    table.materialized(spark, "mediasink", sfDir, defaultBuckets)(
+      Multimodal.mediaEmbedding(Multimodal.mediaAllFormats(
+        graft.sources.Tables(spark, sfDir, "documents"))))
 }

@@ -39,6 +39,9 @@ object PqIndex {
 
   val defaultBuckets = 16
 
+  private[sinks] val codesLayout =
+    BucketedSink("vec_id", "vec_bucket", Seq(col("vec_id").asc))
+
   def build(embeddings: DataFrame, path: String): Unit = {
     Similarity.quantizeScale(embeddings)
       .select(col("s"), lit(Pq.pqStride).as("stride"),
@@ -58,24 +61,14 @@ object PqIndex {
     val flat = Pq.flatCodebook(readCodebook(spark, path))
     val q8 = newEmbeddings
       .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("v"))
-      .select(col("vec_id"),
-        transform(col("v"), x =>
-          greatest(lit(-127.0),
-            least(lit(127.0), floor(x * lit(127.0) / lit(meta.s) + lit(0.5))))
-            .cast("tinyint")).as("qv"))
+      .select(col("vec_id"), AnnIndex.quantizeStored(col("v"), meta.s).as("qv"))
     writeCodes(Pq.encodeWith(q8, flat), path, meta.buckets, "append")
   }
 
   /** Compact accumulated appends back to one-file-per-bucket
     * vec_id-sorted files; crash-safe swap per [[BucketedSink.compact]]. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val meta = readMeta(spark, path)
-    BucketedSink.compact(spark, s"$path/codes",
-      (df, tmp) => BucketedSink.write(
-        df.drop("vec_bucket").select(col("vec_id"), col("pq")),
-        tmp, col("vec_id"), "vec_bucket", meta.buckets,
-        Seq(col("vec_id").asc), "overwrite"))
-  }
+  def compact(spark: SparkSession, path: String): Unit =
+    codesLayout.compact(spark, s"$path/codes", readMeta(spark, path).buckets)
 
   /** ADC top-k probe for external float query vectors `(q_id,
     * embedding)`: quantized with the stored scale, ranked against the
@@ -91,11 +84,7 @@ object PqIndex {
     val meta = readMeta(spark, path) // bounded: 1 row
     val q8 = queries
       .select(col("q_id"), Similarity.asDouble(col("embedding")).as("v"))
-      .select(col("q_id").as("vec_id"),
-        transform(col("v"), x =>
-          greatest(lit(-127.0),
-            least(lit(127.0), floor(x * lit(127.0) / lit(meta.s) + lit(0.5))))
-            .cast("tinyint")).as("qv"))
+      .select(col("q_id").as("vec_id"), AnnIndex.quantizeStored(col("v"), meta.s).as("qv"))
     val cds = spark.read.parquet(s"$path/codes")
       .select(col("vec_id"), col("pq"))
       .dropDuplicates("vec_id")
@@ -119,12 +108,11 @@ object PqIndex {
 
   private def writeCodes(
       codes: DataFrame, path: String, buckets: Int, mode: String): Unit =
-    BucketedSink.write(
+    codesLayout.write(
       codes.groupBy("vec_id")
         .agg(array_sort(collect_list(struct(col("j"), col("code")))).as("jc"))
         .select(col("vec_id"), transform(col("jc"), x => x.getField("code")).as("pq")),
-      s"$path/codes", col("vec_id"), "vec_bucket", buckets,
-      Seq(col("vec_id").asc), mode)
+      s"$path/codes", buckets, mode)
 
   private def readCodebook(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(s"$path/codebook")

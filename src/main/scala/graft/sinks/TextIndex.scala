@@ -20,12 +20,11 @@ import org.apache.spark.sql.functions._
   *
   * Layout under `path`:
   *  - `meta/` — one row: bucket count.
-  *  - `postings/` — `(term, doc_id, tf)` bucketed
-  *    `pmod(hash(term), buckets)`, files sorted (term, doc_id): the
-  *    classic inverted file. A probe for |T| terms reads only the
-  *    term-bucket directories those terms hash into — at 100 TB the
-  *    scan is proportional to the probed terms' postings, never the
-  *    corpus.
+  *  - `postings/` — `(term, doc_id, tf)` hash-bucketed by term, files
+  *    sorted (term, doc_id): the classic inverted file. A probe for |T|
+  *    terms reads only the term-bucket directories those terms hash
+  *    into — at 100 TB the scan is proportional to the probed terms'
+  *    postings, never the corpus.
   *  - `doclens/` — `(doc_id, dl)` bucketed by doc_id: the BM25 length
   *    normalizer. One skinny row per document.
   *
@@ -59,12 +58,15 @@ object TextIndex {
   private def doclensOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), size(toks(col("text"))).cast("long").as("dl"))
 
+  private[sinks] val postingsLayout =
+    BucketedSink("term", "term_bucket", Seq(col("term").asc, col("doc_id").asc))
+  private[sinks] val doclensLayout =
+    BucketedSink("doc_id", "doc_bucket", Seq(col("doc_id").asc))
+
   private def writeTables(
       docs: DataFrame, path: String, buckets: Int, mode: String): Unit = {
-    BucketedSink.write(postingsOf(docs), s"$path/postings", col("term"),
-      "term_bucket", buckets, Seq(col("term").asc, col("doc_id").asc), mode)
-    BucketedSink.write(doclensOf(docs), s"$path/doclens", col("doc_id"),
-      "doc_bucket", buckets, Seq(col("doc_id").asc), mode)
+    postingsLayout.write(postingsOf(docs), s"$path/postings", buckets, mode)
+    doclensLayout.write(doclensOf(docs), s"$path/doclens", buckets, mode)
   }
 
   /** Build the index from scratch over a corpus `(doc_id, text, …)`. */
@@ -100,16 +102,8 @@ object TextIndex {
   def compact(spark: SparkSession, path: String): Unit = {
     val buckets = spark.read.parquet(s"$path/meta")
       .head().getAs[Int]("buckets") // bounded: 1 row
-    BucketedSink.compact(spark, s"$path/postings",
-      (df, tmp) => BucketedSink.write(
-        df.drop("term_bucket").select(col("term"), col("doc_id"), col("tf")),
-        tmp, col("term"), "term_bucket", buckets,
-        Seq(col("term").asc, col("doc_id").asc), "overwrite"))
-    BucketedSink.compact(spark, s"$path/doclens",
-      (df, tmp) => BucketedSink.write(
-        df.drop("doc_bucket").select(col("doc_id"), col("dl")),
-        tmp, col("doc_id"), "doc_bucket", buckets,
-        Seq(col("doc_id").asc), "overwrite"))
+    postingsLayout.compact(spark, s"$path/postings", buckets)
+    doclensLayout.compact(spark, s"$path/doclens", buckets)
   }
 
   /** BM25 top-k over the index for a query batch `(query_id, qtext)` →
@@ -138,10 +132,10 @@ object TextIndex {
     val buckets = meta.getAs[Int]("buckets")
     // bounded collect: distinct bucket dirs of the probed terms
     val dirs = qterms
-      .select(pmod(hash(col("term")), lit(buckets)).as("b"))
+      .select(postingsLayout.bucket(buckets).as("b"))
       .distinct().collect().map(_.getInt(0))
     val postings = spark.read.parquet(s"$path/postings")
-      .where(col("term_bucket").isin(dirs: _*))
+      .where(postingsLayout.inBuckets(dirs: _*))
       .select(col("term"), col("doc_id"), col("tf"))
     // One cached pass over the probed terms' postings provides BOTH the
     // exact global df (a full-partition window count after the

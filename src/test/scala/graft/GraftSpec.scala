@@ -84,6 +84,12 @@ class GraftSpec extends SparkSuite {
       assert(mainFilesContaining(text) === Set("scala/graft/util/Drain.scala"), text))
   }
 
+  test("one bucket hash: under sinks/, only BucketedSink spells " +
+      "pmod(hash(key), n)") {
+    assert(mainFilesContaining("pmod(hash(").filter(_.startsWith("scala/graft/sinks/")) ===
+      Set("scala/graft/sinks/BucketedSink.scala"))
+  }
+
   test("only Fence releases fenced blocks, and each harness main opens a " +
       "scope per query") {
     // the root release is defined in Fence and delegated to by

@@ -101,8 +101,8 @@ class ActivitySinkSpec extends SparkSuite {
     val activity = ActivitySink.materialized(spark, "/root/testdata/sf0.001")
       .drop("user_bucket")
     // two appends ⇒ ≥ 2 files in every non-empty bucket dir, plus markers
-    ActivitySink.appendBatch(activity, path, buckets = 8)
-    ActivitySink.appendBatch(activity, path, buckets = 8)
+    ActivitySink.appendBatch(activity, path)
+    ActivitySink.appendBatch(activity, path)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/_batches"))
@@ -122,7 +122,7 @@ class ActivitySinkSpec extends SparkSuite {
     // the crash window: live renamed aside, second rename never ran
     if (crashed) assert(fs.rename(new org.apache.hadoop.fs.Path(path),
       new org.apache.hadoop.fs.Path(path + "__old")))
-    ActivitySink.compact(spark, path, buckets = 8)
+    ActivitySink.compact(spark, path)
 
     val files = bucketFiles()
     assert(files.nonEmpty && files.values.forall(_ === 1),
@@ -134,7 +134,7 @@ class ActivitySinkSpec extends SparkSuite {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__old")))
     // pruning still works: bucket column consistent with the hash
     val bad = spark.read.parquet(path).where(
-      col("user_bucket") =!= pmod(hash(col("user_id")), lit(8)))
+      col("user_bucket") =!= pmod(hash(col("user_id")), lit(64)))
     assert(bad.count() === 0)
   }
 }

@@ -343,7 +343,7 @@ class CorpusIngestSpec extends SparkSuite {
         CorpusIngest.cleanStream(
           mem.toDF().toDF("doc_id", "text", "source", "event_ts"), probeFps,
           keepText = true), // training-shard form: text lands in the table
-        table, ckpt, buckets = 8)
+        table, ckpt)
       q.awaitTermination()
     }
     mem.addData(doc(1, goodText, 1000), doc(3, junkText, 1020),
@@ -377,10 +377,10 @@ class CorpusIngestSpec extends SparkSuite {
 
     // bucket column is consistent with the partitioning function
     val bad = CorpusSink.read(spark, table).where(
-      col("doc_bucket") =!= pmod(hash(col("doc_id")), lit(8)))
+      col("doc_bucket") =!= pmod(hash(col("doc_id")), lit(32)))
     assert(bad.count() === 0)
 
-    CorpusSink.compact(spark, table, buckets = 8)
+    CorpusSink.compact(spark, table)
     val files = bucketFiles()
     assert(files.nonEmpty && files.values.forall(_ === 1),
       s"expected one file per bucket, got $files")

@@ -17,8 +17,11 @@ the two dirs). A query differs when
     program), JVM identities (`$Lambda$12/0x7f..@1a2b`, `[[D@1a2b3c`)
     and UUIDs.
 Plans that Spark itself orders nondeterministically still differ between
-two runs of one build (a multi-distinct aggregate orders its expanded
-groups by hash); compare such a query against repeated `before` runs.
+two runs of one build: a multi-distinct aggregate orders its expanded
+groups by hash (`text_distinct_exact`, `text_distinct_approx`,
+`hilbert_curve_contract`), and `feed_components`' two checkpointed scans
+swap codegen ids and Exchange arguments. Compare such a query against
+repeated `before` runs.
 Prints one line per differing query and exits 1 if there is any.
 """
 import json
